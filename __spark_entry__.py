@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.operators import (
+    dedup_gap_fill,
     dedup_keep_richest,
     gap_fill,
     asof_join,
@@ -350,8 +351,7 @@ def q_toa5_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     raw = read_toa5(spark, os.path.join(tmp, "*.dat"), schema)
-    deduped = dedup_keep_richest(raw, keys=("TIMESTAMP",), record_col="RECORD")
-    return gap_fill(deduped, ts_col="TIMESTAMP", freq_minutes=30).select(
+    return dedup_gap_fill(raw, ts_col="TIMESTAMP", freq_minutes=30).select(
         "TIMESTAMP", "RECORD", "Tair", "RH"
     )
 

@@ -32,8 +32,7 @@ from .functions.time import (
     last_date_of_water_year,
     water_year_of,
 )
-from .operators.dedup import dedup_keep_richest
-from .operators.gapfill import gap_fill
+from .operators.gapfill import dedup_gap_fill
 from .qc.grade import grade_cs
 from .qc.metqc import MET_FLUX_MAPPING, MET_MET_MAPPING, met_qaqc
 from .schemas import get_full_schema
@@ -51,8 +50,7 @@ def _freq_minutes(frq: str | int) -> int:
 def indx_fill(df: DataFrame, frq: str | int = "30min", ts_col: str = "TIMESTAMP") -> DataFrame:
     """Reference ``indx_fill`` (:39-60): keep-richest dedup of duplicate
     timestamps, then re-grid to a complete day-padded index."""
-    deduped = dedup_keep_richest(df, keys=(ts_col,))
-    return gap_fill(deduped, ts_col=ts_col, freq_minutes=_freq_minutes(frq))
+    return dedup_gap_fill(df, ts_col=ts_col, freq_minutes=_freq_minutes(frq))
 
 
 def Fast_Read(

@@ -9,6 +9,7 @@ from .time import (
     water_year_of,
 )
 from .nulls import false_if_null, true_if_null, null_count_expr
+from .sql import quote_ident
 
 __all__ = [
     "day_ceil",
@@ -22,4 +23,5 @@ __all__ = [
     "false_if_null",
     "true_if_null",
     "null_count_expr",
+    "quote_ident",
 ]

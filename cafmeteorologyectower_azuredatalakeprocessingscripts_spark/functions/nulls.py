@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sql import quote_ident
+
 
 def false_if_null(c: Column) -> Column:
     """pandas ``NaN <cmp> x -> False`` equivalent."""
@@ -30,20 +32,19 @@ def null_count_expr(df: DataFrame, cols: list[str] | None = None) -> Column:
     src/AzureDataLakeAccess.py:51). Counts SQL NULL, plus NaN for
     float/double columns (pandas ``isna`` treats both the same).
 
-    Pure projection — no shuffle.
+    Pure projection — no shuffle. Built as ONE SQL string (one parse)
+    rather than a Column term per input column: on the 243-column Flux
+    layout the per-term py4j calls cost ~0.6 s of driver time per job.
     """
     cols = cols if cols is not None else df.columns
     fields = {f.name: f.dataType for f in df.schema.fields}
     terms = []
     for c in cols:
-        dt = fields.get(c)
-        is_missing = F.col(c).isNull()
-        if isinstance(dt, (T.DoubleType, T.FloatType)):
-            is_missing = is_missing | F.isnan(F.col(c))
-        terms.append(F.when(is_missing, 1).otherwise(0))
+        q = quote_ident(c)
+        is_missing = f"{q} IS NULL"
+        if isinstance(fields.get(c), (T.DoubleType, T.FloatType)):
+            is_missing += f" OR isnan({q})"
+        terms.append(f"CASE WHEN {is_missing} THEN 1 ELSE 0 END")
     if not terms:
         return F.lit(0)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    return F.expr(" + ".join(terms))

@@ -18,6 +18,8 @@ import datetime
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sql import quote_ident
+
 
 def water_year(c: Column | str) -> Column:
     """Water-year label of a date/timestamp column (int)."""
@@ -60,7 +62,7 @@ def ts_normalizer(schema, col: str = "ts"):
     t = {f.name: f.dataType.simpleString() for f in schema.fields}.get(col)
     if t == "bigint":
         return lambda df: df.withColumn(
-            col, F.timestamp_micros(F.expr(f"`{col}` div 1000"))
+            col, F.timestamp_micros(F.expr(f"{quote_ident(col)} div 1000"))
         )
     if t == "timestamp_ntz":
         return lambda df: df.withColumn(col, F.col(col).cast("timestamp"))

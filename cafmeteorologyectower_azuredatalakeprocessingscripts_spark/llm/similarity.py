@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sql import quote_ident
 from .dedup import md5_int
 from ..operators.skew import repartition_pinned
 
@@ -146,7 +147,7 @@ def cosine_topk(
     # sub-second query's steady-state wall-clock (ADJUDICATE_r17: the
     # embed_cosine_topk flag reproduced warm; py4j chatter, not the
     # plan, was the recurring cost)
-    vq = f"`{vec_col}`"
+    vq = quote_ident(vec_col)
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qv"),
@@ -317,7 +318,7 @@ def ivf_assign(
     # forms they replace (see _dot_hof_sql), ~40 py4j round trips less
     # per ivf_assign construction — this function is built 2-3x per
     # query (train iteration + assignment + probes)
-    vq = f"`{vec_col}`"
+    vq = quote_ident(vec_col)
     c = centroids.select(
         "centroid_id",
         "__ctr",

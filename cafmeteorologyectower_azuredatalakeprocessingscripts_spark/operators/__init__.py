@@ -1,5 +1,12 @@
 from .dedup import dedup_keep_richest
-from .gapfill import forward_fill, gap_fill, interpolate_linear, scd2_intervals, time_spine
+from .gapfill import (
+    dedup_gap_fill,
+    forward_fill,
+    gap_fill,
+    interpolate_linear,
+    scd2_intervals,
+    time_spine,
+)
 from .unions import spread, union_by_name
 from .topk import latest_per_group
 from .skew import salted_join
@@ -16,6 +23,7 @@ from .incremental import (
 __all__ = [
     "dedup_keep_richest",
     "gap_fill",
+    "dedup_gap_fill",
     "time_spine",
     "forward_fill",
     "interpolate_linear",

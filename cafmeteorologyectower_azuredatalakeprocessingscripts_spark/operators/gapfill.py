@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.time import day_ceil, day_floor
+from .dedup import dedup_keep_richest
 
 # A key-less window serializes the WHOLE frame through one task; warn
 # when the plan-estimated input exceeds this (a bounded per-station
@@ -96,6 +97,32 @@ def gap_fill(
     """
     spine = time_spine(df, ts_col, freq_minutes, partition_cols, pad_to_day)
     return spine.join(df, on=[*partition_cols, ts_col], how="left")
+
+
+def dedup_gap_fill(
+    df: DataFrame,
+    ts_col: str = "TIMESTAMP",
+    freq_minutes: int = 15,
+    partition_cols: Sequence[str] = (),
+    record_col: str | None = "RECORD",
+    pad_to_day: bool = True,
+) -> DataFrame:
+    """``gap_fill(dedup_keep_richest(df))`` with the dedup planned once.
+
+    ``gap_fill`` of a deduped frame builds its spine from that frame and
+    joins it back: two copies of the whole dedup subtree (null count,
+    Exchange, Sort, ``row_number`` Window) that AQE cannot reuse because
+    they carry different columns. Dedup keeps exactly one row per
+    ``(partition_cols, ts)`` key, so the key set before dedup — and with
+    it every group's [min, max] ts and the spine — is the same; the spine
+    here reads only the key columns of ``df``, leaving one dedup.
+    """
+    keys = [*partition_cols, ts_col]
+    spine = time_spine(
+        df.select(*keys), ts_col, freq_minutes, partition_cols, pad_to_day
+    )
+    deduped = dedup_keep_richest(df, keys=keys, record_col=record_col)
+    return spine.join(deduped, on=keys, how="left")
 
 
 def forward_fill(

@@ -14,7 +14,10 @@ The reference implements a manual incremental protocol
 Here that contract is pure driver-side date logic (``resolve_window``)
 plus one tiny Spark job (``high_watermark_date`` = max(TIMESTAMP) of the
 existing output — at scale this reads only the partition of interest
-thanks to site/wateryear partition pruning).
+thanks to site/wateryear partition pruning). ``resolve_window`` reads the
+watermark only when no start date is given, so callers
+(``plans.driver.run_tower_job``) run that job only then; a daily job with
+explicit start and end dates launches no watermark job.
 """
 
 from __future__ import annotations

@@ -5,7 +5,10 @@ read previous aggregate → download+read raw days → concat → drop
 null-RECORD → dedup+gap-fill (twice!) → QC → save. Here the same
 semantics build ONE lazy logical plan — union → filter → dedup → single
 gap-fill → QC — that Catalyst optimizes as a whole (the reference's
-double gap-fill disappears by construction, §4.1).
+double gap-fill disappears by construction, §4.1). Dedup and gap fill
+are one ``dedup_gap_fill``: the spine comes from the filtered union's
+keys, not from the deduped frame, so the dedup subtree is planned and
+evaluated once.
 """
 
 from __future__ import annotations
@@ -15,8 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import dedup_keep_richest
-from ..operators.gapfill import gap_fill, interpolate_linear
+from ..operators.gapfill import dedup_gap_fill, interpolate_linear
 from ..operators.unions import union_by_name
 from ..qc.grade import FluxQCConfig, grade_cs
 from ..qc.metqc import MET_FLUX_MAPPING, MET_MET_MAPPING, met_qaqc
@@ -58,9 +60,12 @@ def aggregate_pipeline(
         df = union_by_name([previous_aggregate, new_raw])
     # P2: drop rows padded by the previous run's gap-fill (:461)
     df = df.filter(F.col(record_col).isNotNull())
-    df = dedup_keep_richest(df, keys=[*partition_cols, ts_col], record_col=record_col)
-    df = gap_fill(
-        df, ts_col=ts_col, freq_minutes=freq_minutes, partition_cols=partition_cols
+    df = dedup_gap_fill(
+        df,
+        ts_col=ts_col,
+        freq_minutes=freq_minutes,
+        partition_cols=partition_cols,
+        record_col=record_col,
     )
     for value_col in interpolate:
         df = interpolate_linear(

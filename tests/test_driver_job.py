@@ -7,6 +7,7 @@ import datetime as dt
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.config import SiteConfig
@@ -311,8 +312,97 @@ def test_run_tower_jobs_multi_site_failure_injection(spark, tmp_path, rawdir):
         assert cw.count() == 0  # every corrupt row dropped, no crash
     # the healthy site fully aggregated AND written despite running last
     assert results[("CookEast", "Flux")].count() == 2 * 48 + 1
-    back = spark.read.parquet(out)
+    back = spark.read.parquet(f"{out}/Flux")
     assert back.filter(
         (F.col("site") == "CookEast") & (F.col("wateryear") == 2022)
     ).count() == 2 * 48 + 1
     assert back.filter(F.col("site") != "CookEast").count() == 0
+
+
+def test_run_tower_jobs_both_tables_survive(spark, tmp_path, rawdir):
+    """Flux and Met of one site share a (site, wateryear) partition; each
+    table writes its own root, so the Met job's dynamic partition
+    overwrite cannot delete the Flux output."""
+    met_dir = tmp_path / "met"
+    os.makedirs(met_dir)
+    _toa5_met(str(met_dir / "CookEast_Met_2022_02_01_0000.dat"), 1, 96)
+
+    def glob_for(cfg, table):
+        return f"{rawdir}/*.dat" if table == "Flux" else f"{met_dir}/*.dat"
+
+    out = str(tmp_path / "out")
+    results = run_tower_jobs(
+        spark, [SiteConfig(site="CookEast")], glob_for, out,
+        start_date=dt.date(2022, 1, 1), end_date=dt.date(2022, 2, 28),
+    )
+    assert not any(isinstance(r, Exception) for r in results.values())
+    for table, rows in (("Flux", 2 * 48 + 1), ("Met", 96 + 1)):
+        back = spark.read.parquet(f"{out}/{table}")
+        assert back.filter(
+            (F.col("site") == "CookEast") & (F.col("wateryear") == 2022)
+        ).count() == rows
+
+
+def test_run_tower_job_explicit_window_skips_watermark(
+    spark, tmp_path, rawdir, monkeypatch
+):
+    """Both dates given: the window does not depend on the watermark, so
+    its Spark job must not run."""
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.plans import (
+        driver,
+    )
+
+    cfg = SiteConfig(site="CookEast")
+    out_path = str(tmp_path / "out")
+    run_tower_job(
+        spark, cfg, "Flux", f"{rawdir}/*.dat", out_path,
+        start_date=dt.date(2022, 1, 1), end_date=dt.date(2022, 1, 1),
+    )
+
+    def no_watermark(*args, **kwargs):
+        raise AssertionError("high_watermark_date ran with explicit dates")
+
+    monkeypatch.setattr(driver, "high_watermark_date", no_watermark)
+    resumed = run_tower_job(
+        spark, cfg, "Flux", f"{rawdir}/*.dat", out_path,
+        previous_aggregate=spark.read.parquet(out_path),
+        start_date=dt.date(2022, 1, 1), end_date=dt.date(2022, 1, 2),
+    )
+    assert resumed.count() == 2 * 48 + 1
+
+
+def test_run_tower_job_tags_jobs_and_restores_description(
+    spark, tmp_path, rawdir, monkeypatch
+):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.plans import (
+        driver,
+    )
+
+    sc = spark.sparkContext
+    seen = []
+    pipeline = driver.aggregate_pipeline
+
+    def spy(*args, **kwargs):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return pipeline(*args, **kwargs)
+
+    monkeypatch.setattr(driver, "aggregate_pipeline", spy)
+    cfg = SiteConfig(site="CookEast")
+    window = dict(start_date=dt.date(2022, 1, 1), end_date=dt.date(2022, 1, 31))
+    try:
+        for caller in ("caller query", None):
+            sc.setJobDescription(caller)
+            run_tower_job(
+                spark, cfg, "Flux", f"{rawdir}/*.dat", str(tmp_path / "out"),
+                **window,
+            )
+            assert sc.getLocalProperty("spark.job.description") == caller
+            # no files match: the scan raises inside the tagged block
+            with pytest.raises(AnalysisException):
+                run_tower_job(
+                    spark, cfg, "Flux", f"{tmp_path}/missing/*.dat", **window
+                )
+            assert sc.getLocalProperty("spark.job.description") == caller
+    finally:
+        sc.setJobDescription(None)
+    assert seen == ["run_tower_job CookEast/Flux"] * 2

@@ -293,3 +293,29 @@ def test_range_join_ntz_consistent_across_dst(spark):
         if s <= t < e
     )
     assert got == want and len(want) > 0
+
+
+def test_null_count_expr_quotes_identifiers(spark):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.functions import (
+        null_count_expr,
+    )
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            (1.0, 2.0, 3.0, "x"),
+            (None, nan, 3.0, None),
+            (nan, nan, None, "y"),
+            (None, None, None, None),
+        ],
+        "`a.b` double, `we``ird` double, `has space` double, s string",
+    )
+    counts = [
+        r["n"] for r in df.select(null_count_expr(df).alias("n")).collect()
+    ]
+    # NULL and NaN both count for doubles; only NULL for strings
+    assert counts == [0, 3, 3, 4]
+    assert [
+        r["n"]
+        for r in df.select(null_count_expr(df, ["we`ird"]).alias("n")).collect()
+    ] == [0, 1, 1, 1]
