@@ -9,7 +9,7 @@ from .time import (
     water_year_of,
 )
 from .nulls import false_if_null, true_if_null, null_count_expr
-from .sql import quote_ident
+from .sql import quote_ident, sql_and, sql_lit, with_sql_columns
 
 __all__ = [
     "day_ceil",
@@ -24,4 +24,7 @@ __all__ = [
     "true_if_null",
     "null_count_expr",
     "quote_ident",
+    "sql_and",
+    "sql_lit",
+    "with_sql_columns",
 ]

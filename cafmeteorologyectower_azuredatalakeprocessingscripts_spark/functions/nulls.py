@@ -1,4 +1,4 @@
-"""Null-semantics helpers.
+"""Null-semantics helpers, as SQL text for one-parse ``F.expr`` builders.
 
 pandas boolean comparisons silently coerce NaN: ``NaN >= x -> False`` but
 ``NaN != 0 -> True``. Spark three-valued logic returns NULL instead. The QC
@@ -6,6 +6,14 @@ library (qc/) must reproduce the pandas outcome exactly (the reference's
 tests rely on it — e.g. src/AzureDataLakeAccess.py:643 spike test passes on
 the first row because the lag-diff is NaN), so every comparison is wrapped
 with an explicit null default.
+
+The per-row null count is a sum of one CASE term per column. Its terms are
+added as a balanced tree, not a left-deep chain: Catalyst's
+``ReorderAssociativeOperator`` re-flattens the whole ``Add`` subtree at
+every ``Add`` node, which is quadratic in the column count for a chain
+and n log n for a balanced tree (on the 243-column Flux layout the chain
+made it the costliest optimizer rule of the append plan). Integer
+addition gives the same sum in any grouping.
 """
 
 from __future__ import annotations
@@ -17,14 +25,22 @@ from pyspark.sql import types as T
 from .sql import quote_ident
 
 
-def false_if_null(c: Column) -> Column:
+def false_if_null(sql: str) -> str:
     """pandas ``NaN <cmp> x -> False`` equivalent."""
-    return F.coalesce(c, F.lit(False))
+    return f"coalesce({sql}, false)"
 
 
-def true_if_null(c: Column) -> Column:
+def true_if_null(sql: str) -> str:
     """pandas ``NaN != x -> True`` equivalent."""
-    return F.coalesce(c, F.lit(True))
+    return f"coalesce({sql}, true)"
+
+
+def _balanced_sum(terms: list[str]) -> str:
+    """``terms`` joined by ``+`` as a balanced tree of depth ⌈log2 n⌉."""
+    while len(terms) > 1:
+        pairs = [f"({a} + {b})" for a, b in zip(terms[::2], terms[1::2])]
+        terms = pairs + terms[len(pairs) * 2:]
+    return terms[0]
 
 
 def null_count_expr(df: DataFrame, cols: list[str] | None = None) -> Column:
@@ -47,4 +63,4 @@ def null_count_expr(df: DataFrame, cols: list[str] | None = None) -> Column:
         terms.append(f"CASE WHEN {is_missing} THEN 1 ELSE 0 END")
     if not terms:
         return F.lit(0)
-    return F.expr(" + ".join(terms))
+    return F.expr(_balanced_sum(terms))

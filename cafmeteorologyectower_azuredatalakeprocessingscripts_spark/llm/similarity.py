@@ -147,11 +147,12 @@ def cosine_topk(
     # sub-second query's steady-state wall-clock (ADJUDICATE_r17: the
     # embed_cosine_topk flag reproduced warm; py4j chatter, not the
     # plan, was the recurring cost)
-    vq = quote_ident(vec_col)
+    # both sides read the same vector column, so one quoted name serves both
+    vcol = quote_ident(vec_col)
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qv"),
-        F.expr(_norm_hof_sql(_as_double_sql(vq))).alias("__qn"),
+        F.expr(_norm_hof_sql(_as_double_sql(vcol))).alias("__qn"),
     )
     # spread the corpus: the scan may be one file/partition locally, and
     # the per-row dot products are the dominant cost. Norms carried —
@@ -160,7 +161,7 @@ def cosine_topk(
     c = repartition_pinned(corpus, F.col(id_col)).select(
         F.col(id_col),
         F.col(vec_col).alias("__cv"),
-        F.expr(_norm_hof_sql(_as_double_sql(vq))).alias("__cn"),
+        F.expr(_norm_hof_sql(_as_double_sql(vcol))).alias("__cn"),
     )
     sim = (
         c.crossJoin(F.broadcast(q))
@@ -318,21 +319,22 @@ def ivf_assign(
     # forms they replace (see _dot_hof_sql), ~40 py4j round trips less
     # per ivf_assign construction — this function is built 2-3x per
     # query (train iteration + assignment + probes)
-    vq = quote_ident(vec_col)
+    # the norm and the affinity dot both read this vector column of df
+    vcol = quote_ident(vec_col)
     c = centroids.select(
         "centroid_id",
         "__ctr",
         F.expr(_norm_hof_sql(_as_double_sql("__ctr"))).alias("__cn"),
     )
     v = df.withColumn(
-        "__vn", F.expr(_norm_hof_sql(_as_double_sql(vq)))
+        "__vn", F.expr(_norm_hof_sql(_as_double_sql(vcol)))
     )
     # round-6 affinity: cell choice becomes engine-exact (an oracle in a
     # different engine replays the same assignment; ties break by id)
     scored = v.crossJoin(F.broadcast(c)).withColumn(
         "__aff",
         F.expr(
-            f"round({_dot_hof_sql(_as_double_sql(vq), _as_double_sql('__ctr'))}"
+            f"round({_dot_hof_sql(_as_double_sql(vcol), _as_double_sql('__ctr'))}"
             " / (__vn * __cn), 6)"
         ),
     )

@@ -8,7 +8,10 @@ gap-fill → QC — that Catalyst optimizes as a whole (the reference's
 double gap-fill disappears by construction, §4.1). Dedup and gap fill
 are one ``dedup_gap_fill``: the spine comes from the filtered union's
 keys, not from the deduped frame, so the dedup subtree is planned and
-evaluated once.
+evaluated once. QC is one projection: the Grade_cs and Met_QAQC SQL
+builders (``grade_cs_exprs``, ``met_qaqc_exprs``) read the schema once
+and their merged ``{column: sql}`` dict is applied with one drop and one
+``selectExpr``, instead of two Column-built projections.
 """
 
 from __future__ import annotations
@@ -20,8 +23,9 @@ from pyspark.sql import functions as F
 
 from ..operators.gapfill import dedup_gap_fill, interpolate_linear
 from ..operators.unions import union_by_name
-from ..qc.grade import FluxQCConfig, grade_cs
-from ..qc.metqc import MET_FLUX_MAPPING, MET_MET_MAPPING, met_qaqc
+from ..functions.sql import with_sql_columns
+from ..qc.grade import FluxQCConfig, grade_cs_exprs
+from ..qc.metqc import MET_FLUX_MAPPING, MET_MET_MAPPING, met_qaqc_exprs
 
 
 def aggregate_pipeline(
@@ -75,21 +79,19 @@ def aggregate_pipeline(
             value_col=value_col,
         )
     if qc:
-        if table == "Flux":
-            df = grade_cs(df, flux_cfg)
-            df = met_qaqc(
-                df,
-                MET_FLUX_MAPPING,
+        # one projection for the whole battery: the Flux and Met produced
+        # column sets are disjoint, so merging the two dicts (Flux first)
+        # gives the same column order as grade_cs then met_qaqc
+        columns = df.columns
+        exprs = grade_cs_exprs(columns, flux_cfg) if table == "Flux" else {}
+        exprs.update(
+            met_qaqc_exprs(
+                columns,
+                MET_FLUX_MAPPING if table == "Flux" else MET_MET_MAPPING,
                 ts_col=ts_col,
                 partition_cols=partition_cols,
                 bug_compat=bug_compat,
             )
-        else:
-            df = met_qaqc(
-                df,
-                MET_MET_MAPPING,
-                ts_col=ts_col,
-                partition_cols=partition_cols,
-                bug_compat=bug_compat,
-            )
+        )
+        df = with_sql_columns(df, exprs)
     return df

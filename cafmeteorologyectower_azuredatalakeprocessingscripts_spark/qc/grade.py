@@ -26,19 +26,24 @@ explicit null defaults. (The reference's no-door branch NameErrors if the
 sample columns are also absent — we treat absent sample columns as
 passing instead; DECISIONS.md.)
 
-Everything is a single projection — no joins, no shuffle; the string
-flags stay StringType (the aggregated schema's later 'Int64' cast is a
-reference quirk we do not replicate — SURVEY.md §1.2).
+Every produced column is ONE SQL string (:func:`grade_cs_exprs`), parsed
+once, and the battery is a single projection — no joins, no shuffle.
+Identifiers go through ``quote_ident``; literals are typed as the
+Column API types Python numbers (``sql_lit``: floats are DOUBLE
+literals, ints stay ints). The string flags stay StringType (the aggregated
+schema's later 'Int64' cast is a reference quirk we do not replicate —
+SURVEY.md §1.2).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Collection
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.nulls import false_if_null
+from ..functions.sql import quote_ident, sql_and, sql_lit, with_sql_columns
 
 
 @dataclass
@@ -74,85 +79,78 @@ class FluxQCConfig:
             raise ValueError("ustar must be non-negative")
 
 
-def _flag_char(fail: Column) -> Column:
-    return F.when(fail, "1").otherwise("0")
+def _flag_char(fail: str) -> str:
+    return f"CASE WHEN {fail} THEN '1' ELSE '0' END"
+
+
+def grade_cs_exprs(
+    columns: Collection[str], cfg: FluxQCConfig | None = None
+) -> dict[str, str]:
+    """``{produced column: SQL}`` of the Grade_cs battery over a frame
+    with ``columns`` (used by :func:`grade_cs` and the pipeline's single
+    QC projection)."""
+    cfg = cfg or FluxQCConfig()
+    cfg.validate()
+
+    def dcol(name: str) -> str:
+        return f"CAST({quote_ident(name)} AS DOUBLE)"
+
+    # shared (per-row, flux-independent) tests — null ⇒ test fails,
+    # matching pandas NaN coercion
+    shared: dict[str, str] = {}
+    if cfg.precip_col in columns:
+        shared["precip_ok"] = false_if_null(
+            f"({dcol(cfg.precip_col)} < {sql_lit(0.001)})"
+        )
+    for key, col, thr in (
+        ("c_sig_ok", cfg.co2_sig_col, cfg.sig_strength_min),
+        ("w_sig_ok", cfg.h2o_sig_col, cfg.sig_strength_min),
+        ("sonic_ok", cfg.sonic_samples_col, cfg.min_samples),
+        ("irga_ok", cfg.irga_samples_col, cfg.min_samples),
+    ):
+        if col in columns:
+            shared[key] = false_if_null(f"({dcol(col)} > {sql_lit(thr)})")
+    if cfg.door_col in columns:
+        shared["door_ok"] = false_if_null(f"({dcol(cfg.door_col)} = 0)")
+
+    out: dict[str, str] = {}
+    for i, flux in enumerate(cfg.flux_cols):
+        lo, hi = (sql_lit(b) for b in cfg.bounds_for(i))
+        fx = dcol(flux)
+        hl = (
+            f"({false_if_null(f'(({fx} < {lo}) OR ({fx} > {hi}))')}"
+            f" OR ({fx} IS NULL))"
+        )
+        grade_ok = false_if_null(
+            f"({dcol(cfg.grade_cols[i])} <= {sql_lit(cfg.grade)})"
+        )
+
+        chars = [_flag_char(hl), _flag_char(f"(NOT {grade_ok})")]
+        # shared's insertion order is the reference's character order
+        chars += [_flag_char(f"(NOT {ok})") for ok in shared.values()]
+        out[cfg.flag_cols[i]] = f"concat({', '.join(chars)})"
+
+        if "door_ok" in shared:
+            good = sql_and(
+                shared.get("precip_ok", "true"),
+                grade_ok,
+                shared["door_ok"],
+                f"(NOT {hl})",
+                shared.get("c_sig_ok", "true"),
+                shared.get("w_sig_ok", "true"),
+            )
+        else:
+            good = sql_and(grade_ok, f"(NOT {hl})")
+        if "sonic_ok" in shared or "irga_ok" in shared:
+            samples_ok = (
+                f"({shared.get('sonic_ok', 'false')}"
+                f" OR {shared.get('irga_ok', 'false')})"
+            )
+            good = sql_and(good, samples_ok)
+        out[f"{flux}_Graded"] = f"CASE WHEN {good} THEN {quote_ident(flux)} END"
+    return out
 
 
 def grade_cs(df: DataFrame, cfg: FluxQCConfig | None = None) -> DataFrame:
     """Append ``{flux}_Graded`` + ``{H,LE,Fc}_Flags`` columns."""
-    cfg = cfg or FluxQCConfig()
-    cfg.validate()
-    cols = set(df.columns)
-
-    def dcol(name: str) -> Column:
-        return F.col(name).cast("double")
-
-    # shared (per-row, flux-independent) tests — null ⇒ test fails,
-    # matching pandas NaN coercion
-    shared: dict[str, Column] = {}
-    if cfg.precip_col in cols:
-        shared["precip_ok"] = false_if_null(dcol(cfg.precip_col) < 0.001)
-    if cfg.co2_sig_col in cols:
-        shared["c_sig_ok"] = false_if_null(
-            dcol(cfg.co2_sig_col) > cfg.sig_strength_min
-        )
-    if cfg.h2o_sig_col in cols:
-        shared["w_sig_ok"] = false_if_null(
-            dcol(cfg.h2o_sig_col) > cfg.sig_strength_min
-        )
-    if cfg.sonic_samples_col in cols:
-        shared["sonic_ok"] = false_if_null(
-            dcol(cfg.sonic_samples_col) > cfg.min_samples
-        )
-    if cfg.irga_samples_col in cols:
-        shared["irga_ok"] = false_if_null(
-            dcol(cfg.irga_samples_col) > cfg.min_samples
-        )
-    if cfg.door_col in cols:
-        shared["door_ok"] = false_if_null(dcol(cfg.door_col) == 0)
-
-    out: dict[str, Column] = {}
-    for i, flux in enumerate(cfg.flux_cols):
-        lo, hi = cfg.bounds_for(i)
-        fx = dcol(flux)
-        hl = false_if_null((fx < lo) | (fx > hi)) | fx.isNull()
-        grade_ok = false_if_null(dcol(cfg.grade_cols[i]) <= cfg.grade)
-
-        chars = [_flag_char(hl), _flag_char(~grade_ok)]
-        if "precip_ok" in shared:
-            chars.append(_flag_char(~shared["precip_ok"]))
-        if "c_sig_ok" in shared:
-            chars.append(_flag_char(~shared["c_sig_ok"]))
-        if "w_sig_ok" in shared:
-            chars.append(_flag_char(~shared["w_sig_ok"]))
-        if "sonic_ok" in shared:
-            chars.append(_flag_char(~shared["sonic_ok"]))
-        if "irga_ok" in shared:
-            chars.append(_flag_char(~shared["irga_ok"]))
-        if "door_ok" in shared:
-            chars.append(_flag_char(~shared["door_ok"]))
-        out[cfg.flag_cols[i]] = F.concat(*chars)
-
-        samples_ok = None
-        if "sonic_ok" in shared or "irga_ok" in shared:
-            samples_ok = shared.get("sonic_ok", F.lit(False)) | shared.get(
-                "irga_ok", F.lit(False)
-            )
-        if "door_ok" in shared:
-            good = (
-                shared.get("precip_ok", F.lit(True))
-                & grade_ok
-                & shared["door_ok"]
-                & ~hl
-                & shared.get("c_sig_ok", F.lit(True))
-                & shared.get("w_sig_ok", F.lit(True))
-            )
-        else:
-            good = grade_ok & ~hl
-        if samples_ok is not None:
-            good = good & samples_ok
-        out[f"{flux}_Graded"] = F.when(good, F.col(flux))
-
-    produced = list(out.keys())
-    clean = df.drop(*[c for c in produced if c in df.columns])
-    return clean.withColumns(out)
+    return with_sql_columns(df, grade_cs_exprs(df.columns, cfg))

@@ -588,3 +588,77 @@ def test_vocab_top_terms(spark):
     }
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+# golden-value pin of the one-parse SQL builders in llm/dedup.py: literal
+# signatures on a fixed corpus, so an edit to the SQL strings that drifts
+# a hash shows here, not only as a recall change
+_PIN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "The quick brown fox jumps over the lazy  dog!"),
+    (3, "the quick brown fox leaps over the lazy dog today"),
+    (4, "spark plans one projection for the whole qc battery"),
+    (5, "a b"),  # fewer words than a shingle: no MinHash row
+]
+
+_PIN_MINHASH = [
+    (1, 49941480, 171775074, 380524988, 72386601, 102547730, 73598202, 480415908,
+     806571334, 195179306, 68385495, 412882378, 724280054, 575705132, 412140905,
+     14940187, 156362929, 7),
+    (2, 49941480, 158493585, 922330835, 72386601, 102547730, 232563355, 480415908,
+     999072304, 195179306, 68385495, 412882378, 724280054, 575705132, 412140905,
+     14940187, 156362929, 7),
+    (3, 49941480, 171775074, 344434657, 72386601, 192199779, 73598202, 601544392,
+     119209969, 195179306, 68385495, 146052960, 819397431, 173624080, 412140905,
+     88244629, 2238944, 8),
+    (4, 4259271, 53884446, 11109777, 310307966, 74993785, 498284060, 92956507,
+     183923522, 89123028, 88577535, 56091360, 96227574, 231580467, 170893207,
+     214634895, 226050294, 7),
+]
+
+_PIN_BUCKETS = [
+    (1, 0, "00eaf5ccf6e108e05d6a5b65b5a68016"),
+    (1, 1, "cbefb3b5316ab0750793493466ed1701"),
+    (1, 2, "b60f4b0bc1022cda1d8fe7bc5abdbc3b"),
+    (1, 3, "c3859a35cf9b89a63fb05db0dbc526ac"),
+    (2, 0, "ac6b21d863618cb6ed9c3f1b47ec8a93"),
+    (2, 1, "c23ed583820857dd14a8b51dd8cd75d0"),
+    (2, 2, "b60f4b0bc1022cda1d8fe7bc5abdbc3b"),
+    (2, 3, "c3859a35cf9b89a63fb05db0dbc526ac"),
+    (3, 0, "2e688bb970cb56577c0601a44f016c18"),
+    (3, 1, "605732cf7f227ca0474b2049b4ce8d7e"),
+    (3, 2, "31eeafb3485bf1ff169e21a7795a221f"),
+    (3, 3, "1c3c09294232fa5e106adae78de32744"),
+    (4, 0, "ebaa82c9d3e90110e3c9ea43eda756a1"),
+    (4, 1, "7914b6fc0d129c96198b17aca12e100d"),
+    (4, 2, "515d75674bc23dd464ab3b16774e0462"),
+    (4, 3, "4ea09ef697059879defce535812b8abd"),
+]
+
+_PIN_SIMHASH64 = [
+    (1, 3448465102, 265567480),
+    (2, 3750438618, 265567480),
+    (3, 3708380740, 265567416),
+    (4, 2660984473, 2638502250),
+    (5, 3231721128, 12670392),
+]
+
+
+def test_dedup_sql_builders_golden(spark):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import (
+        lsh_buckets,
+        minhash_signatures,
+        simhash64,
+    )
+
+    df = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
+    sig = minhash_signatures(df, with_sizes=True)
+    assert sig.columns == ["id"] + [f"mh_{i}" for i in range(16)] + ["n_sh"]
+    assert [tuple(r) for r in sig.orderBy("id").collect()] == _PIN_MINHASH
+    buckets = lsh_buckets(sig).orderBy("id", "band").collect()
+    assert [tuple(r) for r in buckets] == _PIN_BUCKETS
+    sh = simhash64(df)
+    assert sh.schema.simpleString() == (
+        "struct<id:bigint,simhash_hi:bigint,simhash_lo:bigint>"
+    )
+    assert [tuple(r) for r in sh.orderBy("id").collect()] == _PIN_SIMHASH64

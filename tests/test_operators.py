@@ -319,3 +319,64 @@ def test_null_count_expr_quotes_identifiers(spark):
         r["n"]
         for r in df.select(null_count_expr(df, ["we`ird"]).alias("n")).collect()
     ] == [0, 1, 1, 1]
+
+
+def _null_count_frame(spark, n):
+    """6 rows, ``n`` columns c0..: doubles at even j, strings at odd j;
+    cell (i, j) is NULL when (i + j) % 3 == 0, NaN (doubles) when it is 1."""
+    nan = float("nan")
+    cols = [f"c{j}" for j in range(n)]
+    rows = []
+    for i in range(6):
+        row = [i]
+        for j in range(n):
+            k = (i + j) % 3
+            if j % 2 == 0:
+                row.append(None if k == 0 else nan if k == 1 else float(i))
+            else:
+                row.append(None if k == 0 else "v")
+        rows.append(tuple(row))
+    types = ["double" if j % 2 == 0 else "string" for j in range(n)]
+    schema = ", ".join(["id long"] + [f"{c} {t}" for c, t in zip(cols, types)])
+    want = [
+        sum(
+            (i + j) % 3 == 0 or (j % 2 == 0 and (i + j) % 3 == 1)
+            for j in range(n)
+        )
+        for i in range(6)
+    ]
+    return spark.createDataFrame(rows, schema), cols, want
+
+
+@pytest.mark.parametrize("n", [0, 1, 2, 3, 243])
+def test_null_count_expr_matches_hand_count(spark, n):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.functions import (
+        null_count_expr,
+    )
+
+    df, cols, want = _null_count_frame(spark, n)
+    got = df.select("id", null_count_expr(df, cols).alias("n")).orderBy("id")
+    assert [r["n"] for r in got.collect()] == want
+
+
+@pytest.mark.parametrize("n", [2, 3, 5, 243])
+def test_null_count_expr_add_tree_is_balanced(spark, n):
+    """The CASE terms are summed as a balanced tree: Catalyst's
+    ReorderAssociativeOperator re-flattens the Add subtree at every Add
+    node, quadratic in n for a left-deep chain."""
+    import math
+
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.functions import (
+        null_count_expr,
+    )
+
+    df, cols, _ = _null_count_frame(spark, n)
+    plan = df.select(null_count_expr(df, cols).alias("n"))._jdf.queryExecution()
+    root = plan.analyzed().projectList().head().child()
+
+    def add_depth(e) -> int:
+        if e.nodeName() != "Add":
+            return 0
+        return 1 + max(add_depth(e.left()), add_depth(e.right()))
+
+    assert add_depth(root) <= math.ceil(math.log2(n)) + 1

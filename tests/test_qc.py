@@ -215,3 +215,46 @@ def test_grade_cs_idempotent(spark):
     twice = grade_cs(once)
     assert sorted(once.columns) == sorted(twice.columns)
     assert once.orderBy("TIMESTAMP").collect() == twice.orderBy("TIMESTAMP").collect()
+
+
+def test_qc_battery_build_py4j_commands_bounded(spark):
+    """Building grade_cs + met_qaqc on the full 243-column Flux layout
+    sends a bounded number of py4j commands: each produced column is one
+    SQL string in one projection (a Column-built battery sent ~4,100).
+    One warm-up build first, so the JVM-view lookups are cached and the
+    count is deterministic."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.qc import (
+        MET_FLUX_MAPPING,
+    )
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.schemas import (
+        get_full_schema,
+        to_canonical,
+    )
+
+    df = to_canonical(
+        spark.createDataFrame([], get_full_schema("Flux", "Raw", "V40826")),
+        "Flux",
+        "V40826",
+    )
+    met_qaqc(grade_cs(df), MET_FLUX_MAPPING)
+    send = cs.ClientServerConnection.send_command
+    sent = [0]
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        out = met_qaqc(grade_cs(df), MET_FLUX_MAPPING)
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    assert "Precip_Filtered" in out.columns and "Fc_Flags" in out.columns
+    assert sent[0] <= 400
