@@ -653,12 +653,10 @@ def minhash_signatures(
     sh = shingles_df if shingles_df is not None else shingles(df, text_col, id_col, n)
     x = (F.col("sh_h") % MINHASH_P).alias("x")
     hashed = sh.select("id", x)
-    # one-parse expr twins of min((A*x + B) % P) (r17): identical
-    # integer expressions (operator precedence and literal typing match
-    # the Column form — every A/B constant fits int32, x is bigint), 1
-    # py4j round trip per agg instead of ~15 through the Column API;
-    # this listcomp alone was 0.42 s of dedup_minhash_lsh's profiled
-    # construction
+    # one SQL parse per agg: ~15 py4j round trips less than the Column
+    # API (this listcomp was 0.42 s of dedup_minhash_lsh's profiled
+    # construction). Every A/B constant fits int32 and x is bigint, so
+    # the literals need no type suffix
     aggs = [
         F.expr(
             f"min(({MINHASH_A[i]} * x + {MINHASH_B[i]}) % {MINHASH_P})"
@@ -686,10 +684,8 @@ def lsh_buckets(
     re-evaluating the whole signature pipeline for a separate sizes
     frame — a few bytes per membership row against a corpus-sized
     recompute)."""
-    # one-parse expr twin of the array-of-structs (r17): named_struct /
-    # md5 / concat_ws are the exact expressions F.struct/F.md5/
-    # F.concat_ws built — one parse for the whole band array instead of
-    # ~10 py4j round trips per band
+    # one parse for the whole band array instead of ~10 py4j round
+    # trips per band through the Column API
     band_sql = ", ".join(
         f"named_struct('band', {b}, 'bucket', md5(concat_ws(',', "
         + ", ".join(f"mh_{b * rows + r}" for r in range(rows))
@@ -970,6 +966,28 @@ def connected_components(
     )
 
 
+# SimHash votes and recombine are built as SQL text, one parse per
+# column: a Column-built vote costs ~12 py4j round trips and the
+# recombine chain ~6 per bit (a profiled construction spent ~75% of
+# ~2.1 s in py4j latency). Integer expressions, pinned by test.
+
+
+def _vote_sql(h: str, i: int) -> str:
+    """Per-document vote on bit ``i`` of token hash ``h``: +1 for each
+    token with the bit set, -1 for each without."""
+    return f"sum(CASE WHEN (shiftright({h}, {i}) & 1) = 1 THEN 1 ELSE -1 END)"
+
+
+def _recombine_sql(votes: str, bits: int) -> str:
+    """BIGINT signature from the vote columns ``{votes}_0..{bits-1}``:
+    bit i is set iff vote i is positive."""
+    return "CAST(0 AS BIGINT) + " + " + ".join(
+        f"CASE WHEN {votes}_{i} > 0 THEN CAST({2 ** i} AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END"
+        for i in range(bits)
+    )
+
+
 def simhash(
     df: DataFrame,
     text_col: str = "text",
@@ -1001,26 +1019,75 @@ def simhash(
         .select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
         .select("id", (md5_int(F.col("tok")) % F.lit(2 ** bits)).alias("h"))
     )
-    # one-parse expr twins (r17): CASE WHEN is the exact CaseWhen node
-    # F.when/.otherwise built, shiftright/& the same Shift/BitwiseAnd —
-    # 1 round trip per vote instead of ~12, and the recombine chain is
-    # ONE parse (the Column loop built it via ~6 calls per bit; the
-    # profiled construction was ~2.1 s, ~75% py4j latency). Integer
-    # expressions — bit-equal by construction, pinned by test.
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright(h, {i}) & 1) = 1 THEN 1 ELSE -1 END)"
-        ).alias(f"v_{i}")
-        for i in range(bits)
-    ]
+    votes = [F.expr(f"{_vote_sql('h', i)} AS v_{i}") for i in range(bits)]
     sig = tok.groupBy("id").agg(*votes)
-    recombine = " + ".join(
-        f"CASE WHEN v_{i} > 0 THEN CAST({2 ** i} AS BIGINT) "
-        "ELSE CAST(0 AS BIGINT) END"
-        for i in range(bits)
+    return sig.selectExpr("id", f"{_recombine_sql('v', bits)} AS simhash")
+
+
+# md5 hex offsets of the 32-bit SimHash slices, lowest slice first:
+# simhash64's lo/hi halves are hex chars 1-8 / 9-16, the same bits as
+# simhash128's s0/s1.
+_SIMHASH64_SLICES = (("simhash_lo", 1), ("simhash_hi", 9))
+_SIMHASH128_SLICES = (
+    ("simhash_s0", 1),
+    ("simhash_s1", 9),
+    ("simhash_s2", 17),
+    ("simhash_s3", 25),
+)
+
+
+def _sliced_simhash(
+    df: DataFrame, text_col: str, id_col: str, slices: tuple[tuple[str, int], ...]
+) -> DataFrame:
+    """(id, *slice names): one 32-bit SimHash per (name, md5 hex offset)
+    slice, in ``slices`` order. Every slice is a substring of the ONE
+    md5 per token, and all votes land in one hash aggregation that
+    map-side-collapses to one row per document before the exchange."""
+    toks = F.split(norm_text(text_col), " ")
+    tok = (
+        repartition_pinned(df, F.col(id_col))
+        .select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
+        .selectExpr(
+            "id",
+            *[
+                f"CAST(conv(substring(md5(tok), {off}, 8), 16, 10) AS BIGINT)"
+                f" AS __h_{name}"
+                for name, off in slices
+            ],
+        )
     )
-    out = F.expr(f"CAST(0 AS BIGINT) + {recombine}")
-    return sig.select("id", out.alias("simhash"))
+    votes = [
+        F.expr(f"{_vote_sql(f'__h_{name}', i)} AS v_{name}_{i}")
+        for name, _ in slices
+        for i in range(32)
+    ]
+    return tok.groupBy("id").agg(*votes).selectExpr(
+        "id", *[f"{_recombine_sql(f'v_{name}', 32)} AS {name}" for name, _ in slices]
+    )
+
+
+def _slice_blocks(
+    slices: tuple[tuple[str, int], ...], max_hamming: int
+) -> list[tuple[str, int, int]]:
+    """(slice_column, start_bit, width) layout of the ``max_hamming + 1``
+    pigeonhole blocks over 32-bit signature slices: balanced across the
+    slices (earlier slices take the remainder), never straddling a
+    32-bit seam, each slice's blocks laid out by
+    :func:`pigeonhole_blocks`."""
+    bits = 32 * len(slices)
+    n = max_hamming + 1
+    if not 1 <= n <= bits:
+        raise ValueError(
+            f"max_hamming must be in [0, {bits - 1}] for {bits}-bit signatures, "
+            f"got {max_hamming}"
+        )
+    base, extra = divmod(n, len(slices))
+    out: list[tuple[str, int, int]] = []
+    for i, (col, _) in enumerate(slices):
+        k = base + (1 if i < extra else 0)
+        if k:
+            out += [(col, s, w) for s, w in pigeonhole_blocks(32, k)]
+    return out
 
 
 def simhash64(
@@ -1043,41 +1110,8 @@ def simhash64(
     Same execution shape as :func:`simhash`: explode → codegen md5
     projection → one hash aggregation with 64 conditional sums that
     map-side-collapses to one row per document before the exchange."""
-    toks = F.split(norm_text(text_col), " ")
-    tok = (
-        repartition_pinned(df, F.col(id_col))
-        .select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
-        .select(
-            "id",
-            F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h_lo"),
-            F.conv(F.substring(F.md5(F.col("tok")), 9, 8), 16, 10)
-            .cast("bigint")
-            .alias("h_hi"),
-        )
-    )
-    # one-parse expr twins — same identity argument as simhash() above
-    votes = [
-        F.expr(
-            f"sum(CASE WHEN (shiftright({h}, {i}) & 1) = 1 "
-            "THEN 1 ELSE -1 END)"
-        ).alias(f"v_{side}_{i}")
-        for side, h in (("lo", "h_lo"), ("hi", "h_hi"))
-        for i in range(32)
-    ]
-    sig = tok.groupBy("id").agg(*votes)
-    outs = {}
-    for side in ("lo", "hi"):
-        recombine = " + ".join(
-            f"CASE WHEN v_{side}_{i} > 0 THEN CAST({2 ** i} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-            for i in range(32)
-        )
-        outs[side] = F.expr(f"CAST(0 AS BIGINT) + {recombine}")
-    return sig.select(
-        "id", outs["hi"].alias("simhash_hi"), outs["lo"].alias("simhash_lo")
-    )
+    # the hi half comes first in the output
+    return _sliced_simhash(df, text_col, id_col, _SIMHASH64_SLICES[::-1])
 
 
 def simhash64_blocks(max_hamming: int) -> list[tuple[str, int, int]]:
@@ -1086,18 +1120,7 @@ def simhash64_blocks(max_hamming: int) -> list[tuple[str, int, int]]:
     balanced across the halves (widths ~64/n) and never straddle the
     32-bit seam. Shared by :func:`simhash64_pairs` and the SQL oracle
     builder so both replay the identical buckets."""
-    n = max_hamming + 1
-    if not 1 <= n <= 64:
-        raise ValueError(
-            f"max_hamming must be in [0, 63] for 64-bit signatures, got "
-            f"{max_hamming}"
-        )
-    n_lo = (n + 1) // 2
-    n_hi = n - n_lo
-    blocks = [("simhash_lo", s, w) for s, w in pigeonhole_blocks(32, n_lo)]
-    if n_hi:
-        blocks += [("simhash_hi", s, w) for s, w in pigeonhole_blocks(32, n_hi)]
-    return blocks
+    return _slice_blocks(_SIMHASH64_SLICES, max_hamming)
 
 
 def _pigeonhole_pairs(
@@ -1214,17 +1237,6 @@ def simhash64_pairs(
     )
 
 
-# 128-bit SimHash slice layout: md5 hex offsets of the four 32-bit
-# slices, lowest slice first (s0 = hex chars 1-8, matching simhash64's
-# "lo" = chars 1-8 / "hi" = chars 9-16 convention).
-_SIMHASH128_SLICES = (
-    ("simhash_s0", 1),
-    ("simhash_s1", 9),
-    ("simhash_s2", 17),
-    ("simhash_s3", 25),
-)
-
-
 def simhash128(
     df: DataFrame,
     text_col: str = "text",
@@ -1250,39 +1262,7 @@ def simhash128(
     md5 per token (all four slices are substrings of it) → one hash
     aggregation with 128 conditional sums that map-side-collapses to
     one row per document before the exchange."""
-    toks = F.split(norm_text(text_col), " ")
-    tok = (
-        repartition_pinned(df, F.col(id_col))
-        .select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
-        .select(
-            "id",
-            *[
-                F.conv(F.substring(F.md5(F.col("tok")), off, 8), 16, 10)
-                .cast("bigint")
-                .alias(f"__h_{name}")
-                for name, off in _SIMHASH128_SLICES
-            ],
-        )
-    )
-    votes = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col(f"__h_{name}"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"v_{name}_{i}")
-        for name, _ in _SIMHASH128_SLICES
-        for i in range(32)
-    ]
-    sig = tok.groupBy("id").agg(*votes)
-    outs = []
-    for name, _ in _SIMHASH128_SLICES:
-        acc = F.lit(0).cast("bigint")
-        for i in range(32):
-            acc = acc + F.when(
-                F.col(f"v_{name}_{i}") > 0, F.lit(2**i).cast("bigint")
-            ).otherwise(F.lit(0).cast("bigint"))
-        outs.append(acc.alias(name))
-    return sig.select("id", *outs)
+    return _sliced_simhash(df, text_col, id_col, _SIMHASH128_SLICES)
 
 
 def simhash128_blocks(max_hamming: int) -> list[tuple[str, int, int]]:
@@ -1292,21 +1272,7 @@ def simhash128_blocks(max_hamming: int) -> list[tuple[str, int, int]]:
     :func:`simhash64_blocks` over its two halves. Shared by
     :func:`simhash128_pairs` and the SQL oracle builder so both replay
     the identical buckets."""
-    n = max_hamming + 1
-    if not 1 <= n <= 128:
-        raise ValueError(
-            f"max_hamming must be in [0, 127] for 128-bit signatures, got "
-            f"{max_hamming}"
-        )
-    cols = [name for name, _ in _SIMHASH128_SLICES]
-    # balanced split of n blocks over 4 slices (earlier slices take the
-    # remainder), each slice's blocks laid out by pigeonhole_blocks
-    per = [n // 4 + (1 if i < n % 4 else 0) for i in range(4)]
-    out: list[tuple[str, int, int]] = []
-    for col, k in zip(cols, per):
-        if k:
-            out += [(col, s, w) for s, w in pigeonhole_blocks(32, k)]
-    return out
+    return _slice_blocks(_SIMHASH128_SLICES, max_hamming)
 
 
 def simhash128_pairs(

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 import warnings
 from collections.abc import Iterator
+from functools import lru_cache, partial
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,87 +30,14 @@ from .dedup import md5_int
 from ..operators.skew import repartition_pinned
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-# -- one-parse SQL-string twins of _dot/_norm (r17, VERDICT r16 #4) ----
-# The Column HOF builders above cost ~15-20 py4j round trips EACH
-# (F.aggregate/F.zip_with construct their lambdas variable-by-variable
-# through the gateway); a profiled semantic_dedup construction spent
-# ~0.9 s of its 1.2 s in py4j socket latency, ~0.2 s of it in 12 HOF
-# invocations. These twins build the IDENTICAL expression (same
-# functions, same 0D init, same fold order — bit-equal results; only
-# the lambda variable names differ, which Catalyst treats as
-# alpha-equivalent) as one expr parse = one round trip. Same precedent
-# as _srp_bucket_sql ("one string parse keeps plan construction
-# milliseconds"). Hot constructors only (ivf_assign / kmeans /
-# semdedup); the Column forms stay for every other call site.
-
-
-def _dot_hof_sql(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "0D, (acc, v) -> acc + v)"
-    )
-
-
-def _norm_hof_sql(a: str) -> str:
-    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
-
-
-def _as_double_sql(c: str) -> str:
-    return f"CAST({c} AS ARRAY<DOUBLE>)"
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _dot_static_sql(a: str, b: str, dim: int) -> str:
-    """Dot product unrolled over a known dim as ONE SQL string — a plain
-    codegen expression (the lambda forms above run interpreted, ~an
-    order of magnitude slower in hot pair loops), parsed by Catalyst in
-    one call (building the same tree via thousands of py4j Column ops
-    measured ~10s of driver time per query construction). The fold
-    order (0D + t0) + t1 + ... is identical to ``aggregate``'s left
-    fold, so doubles are bit-equal."""
-    return "(0D + " + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)) + ")"
-
-
-def _norm_static_sql(a: str, dim: int) -> str:
-    return (
-        "sqrt(0D + "
-        + " + ".join(f"{a}[{i}] * {a}[{i}]" for i in range(dim))
-        + ")"
-    )
-
-
-def _as_double(c: Column) -> Column:
-    # native element-wise Cast, not a transform lambda: one expression
-    # node (codegen-friendly and immune to ProjectCollapse inlining a
-    # per-element lambda into every unrolled element reference)
-    return c.cast("array<double>")
-
-
-# Above this width the unrolled static-SQL forms below become fragile:
+# Above this width the unrolled dot and norm forms become fragile:
 # Catalyst's project collapse inlines the producing expression into
 # every element reference, and codegen recursion over the resulting
 # tree overflows the JVM stack (measured: StackOverflowError at
 # dim=512 behind a cast; dim<=128 is comfortably safe). The lambda
-# left-fold forms are bit-identical (same fold order — parity-tested)
-# and depth-constant, just interpreted per element — the right trade
-# for wide production embeddings.
+# left-fold forms are bit-identical (same fold order) and
+# depth-constant, just interpreted per element — the right trade for
+# wide production embeddings.
 _STATIC_EXPR_MAX_DIM = 128
 
 # bucket-local BLAS Gram blocks tile at this many rows: 4096² doubles =
@@ -119,17 +47,93 @@ _STATIC_EXPR_MAX_DIM = 128
 # Tiling changes memory only; the products and rounding are identical.
 _ARROW_BLOCK = 4096
 
+# The vector math is built as SQL text and parsed once by Catalyst: a
+# Column-built higher-order function costs ~15-20 py4j round trips
+# (F.aggregate/F.zip_with construct their lambdas variable by variable
+# through the gateway), a string one. Every builder takes and returns
+# SQL expressions, so identifiers are quoted by the caller.
 
-def _norm_expr(a: str, dim: int) -> Column:
-    if dim <= _STATIC_EXPR_MAX_DIM:
-        return F.expr(_norm_static_sql(a, dim))
-    return _norm(F.col(a))
+
+def _as_double_sql(c: str) -> str:
+    # native element-wise Cast, not a transform lambda: one expression
+    # node (codegen-friendly and immune to ProjectCollapse inlining a
+    # per-element lambda into every unrolled element reference)
+    return f"CAST({c} AS ARRAY<DOUBLE>)"
 
 
-def _dot_expr(a: str, b: str, dim: int) -> Column:
-    if dim <= _STATIC_EXPR_MAX_DIM:
-        return F.expr(_dot_static_sql(a, b, dim))
-    return _dot(F.col(a), F.col(b))
+def _unrolled(dim: int | None) -> bool:
+    return dim is not None and dim <= _STATIC_EXPR_MAX_DIM
+
+
+def _dot_sql(a: str, b: str, dim: int | None = None) -> str:
+    """Dot product of two array<double> expressions. With a known
+    ``dim`` up to ``_STATIC_EXPR_MAX_DIM`` it is unrolled into a plain
+    codegen expression (the lambda fold runs interpreted, ~an order of
+    magnitude slower in hot pair loops); otherwise a
+    ``zip_with``/``aggregate`` left fold. The fold order
+    (0D + t0) + t1 + ... is the same in both, so doubles are bit-equal."""
+    if _unrolled(dim):
+        return "(0D + " + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)) + ")"
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+
+
+def _norm_sql(a: str, dim: int | None = None) -> str:
+    """Euclidean norm of an array<double> expression; same unrolled /
+    lambda-fold switch and fold order as :func:`_dot_sql`."""
+    if _unrolled(dim):
+        return "sqrt" + _dot_sql(a, a, dim)
+    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
+
+
+def _cos_sql(
+    a: str,
+    b: str,
+    na: str | None = None,
+    nb: str | None = None,
+    dim: int | None = None,
+) -> str:
+    """Round-6 cosine ``dot / (na * nb)`` of two array<double>
+    expressions. Pass carried norm columns as ``na``/``nb`` where the
+    caller computed them once per vector — per-pair work is then one
+    dot, with the same doubles as norms computed inline (the default).
+
+    Callers scoring inside a broadcast-join projection leave ``dim``
+    unset on purpose: a 64-dim cosine unrolls to ~190 cast+multiply
+    terms, overflows janino's method budget there and runs INTERPRETED
+    on a much bigger tree — measured 1.9x slower than the lambda fold
+    at 50k x 160 centroids (extends D-17)."""
+    na = na or _norm_sql(a, dim)
+    nb = nb or _norm_sql(b, dim)
+    return f"round({_dot_sql(a, b, dim)} / ({na} * {nb}), 6)"
+
+
+def _top_k(
+    scored: DataFrame, part: str, score: str, tie: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """The ``k`` rows of each ``part`` group with the highest ``score``,
+    ties broken by ascending ``tie``, numbered 1..k in ``rank``
+    (``row_number``: fully deterministic, no shared ranks)."""
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _with_norm(
+    df: DataFrame, id_col: str, vec_col: str, tag: str, *extra
+) -> DataFrame:
+    """(id, __{tag}v, __{tag}n, *extra): the raw vector and its norm,
+    computed once per vector and carried to the pair stage."""
+    v = quote_ident(vec_col)
+    return df.select(
+        F.col(id_col),
+        F.expr(f"{v} AS __{tag}v"),
+        F.expr(f"{_norm_sql(_as_double_sql(v))} AS __{tag}n"),
+        *extra,
+    )
+
+
+# cosine of a broadcast query row (__qv, __qn) against a corpus row
+# (__cv, __cn) — the scorer of every carried-norm top-k operator
+_QC_COS = _cos_sql(_as_double_sql("__qv"), _as_double_sql("__cv"), "__qn", "__cn")
 
 
 def cosine_topk(
@@ -142,52 +146,18 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine (query side broadcast;
     ties broken by corpus id — fully deterministic)."""
-    # expr-twin constructors (r17): bit-identical expressions to the
-    # Column HOF forms, one parse each — construction was ~50% of this
-    # sub-second query's steady-state wall-clock (ADJUDICATE_r17: the
-    # embed_cosine_topk flag reproduced warm; py4j chatter, not the
-    # plan, was the recurring cost)
-    # both sides read the same vector column, so one quoted name serves both
-    vcol = quote_ident(vec_col)
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        F.expr(_norm_hof_sql(_as_double_sql(vcol))).alias("__qn"),
-    )
+    q = _with_norm(queries, query_id_col, vec_col, "q")
     # spread the corpus: the scan may be one file/partition locally, and
-    # the per-row dot products are the dominant cost. Norms carried —
-    # computed once per vector, per-pair work is one dot (dot/(qn*cn)
-    # is the exact cosine() expression: bit-identical, oracle unchanged)
-    c = repartition_pinned(corpus, F.col(id_col)).select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cv"),
-        F.expr(_norm_hof_sql(_as_double_sql(vcol))).alias("__cn"),
-    )
+    # the per-row dot products are the dominant cost
+    c = _with_norm(repartition_pinned(corpus, F.col(id_col)), id_col, vec_col, "c")
     sim = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn(
-            "cosine",
-            F.expr(
-                "round("
-                + _dot_hof_sql(
-                    _as_double_sql("__qv"), _as_double_sql("__cv")
-                )
-                + " / (__qn * __cn), 6)"
-            ),
-        )
+        .withColumn("cosine", F.expr(_QC_COS))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+    return _top_k(sim, query_id_col, "cosine", id_col, k).select(
+        query_id_col, id_col, "cosine", "rank"
     )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=64)
@@ -222,16 +192,8 @@ def _srp_bucket_sql(vec_sql: str, dim: int, planes: int, offset: int = 0) -> str
     parts = []
     for p, row in enumerate(srp_weights(dim, planes, offset)):
         arr = ", ".join(f"{w!r}D" for w in row)
-        proj = (
-            f"aggregate(zip_with({vec_sql}, array({arr}), (x, y) -> x * y), "
-            f"0D, (acc, e) -> acc + e)"
-        )
-        parts.append(f"IF({proj} > 0, {2 ** p}, 0)")
+        parts.append(f"IF({_dot_sql(vec_sql, f'array({arr})')} > 0, {2 ** p}, 0)")
     return "(" + " + ".join(parts) + ")"
-
-
-def _srp_bucket(vec_sql: str, dim: int, planes: int, offset: int = 0) -> Column:
-    return F.expr(_srp_bucket_sql(vec_sql, dim, planes, offset))
 
 
 def lsh_ann_topk(
@@ -246,52 +208,17 @@ def lsh_ann_topk(
 ) -> DataFrame:
     """Approximate top-k: compare only corpus vectors in the query's SRP
     bucket. Recall < 1 by design; the bucket join is the scale win."""
-    cast_vec = f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cv"),
-        _norm(_as_double(F.col(vec_col))).alias("__cn"),
-        _srp_bucket(cast_vec, dim, planes).alias("__bkt"),
-    )
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        _norm(_as_double(F.col(vec_col))).alias("__qn"),
-        _srp_bucket(cast_vec, dim, planes).alias("__bkt"),
-    )
+    bucket = F.expr(_srp_bucket_sql(_as_double_sql(quote_ident(vec_col)), dim, planes))
+    c = _with_norm(corpus, id_col, vec_col, "c", bucket.alias("__bkt"))
+    q = _with_norm(queries, query_id_col, vec_col, "q", bucket.alias("__bkt"))
     sim = (
         c.join(F.broadcast(q), "__bkt")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(_as_double(F.col("__qv")), _as_double(F.col("__cv")))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
+        .withColumn("cosine", F.expr(_QC_COS))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+    return _top_k(sim, query_id_col, "cosine", id_col, k).select(
+        query_id_col, id_col, "cosine", "rank"
     )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
-def _cos_expr(a: str, b: str, dim: int | None):
-    """Round-6 cosine between two array columns (interpreted
-    zip_with/aggregate). ``dim`` is accepted for signature stability but
-    the unrolled static form is deliberately NOT used here: a 64-dim
-    cosine unrolls to ~190 cast+multiply terms, overflows janino's
-    method budget inside the broadcast-join projection, and runs
-    INTERPRETED on a much bigger tree — measured 1.9x slower than the
-    HOF form at 50k x 160 centroids (extends D-17). The profitable
-    optimization is carrying norms (see ivf_assign/semdedup): per-pair
-    work drops to one dot, bit-identically."""
-    return F.round(cosine(_as_double(F.col(a)), _as_double(F.col(b))), 6)
 
 
 def ivf_assign(
@@ -308,43 +235,27 @@ def ivf_assign(
     construction — so assignment is a map-only pass over the corpus.
     ``dim`` is accepted for signature stability with the static-SQL
     call sites only and is NOT used by the affinity loop — the unrolled
-    form loses here (see ``_cos_expr``); the affinity runs the carried-
-    norm HOF dot regardless."""
+    form loses here (see ``_cos_sql``); the affinity runs the carried-
+    norm lambda-fold dot regardless."""
     # norms computed ONCE per centroid and per corpus vector and carried
     # as scalars: the n_centroids x corpus affinity loop then does one
     # dot per pair instead of dot + two norms (3x less interpreted-HOF
-    # work; dot/(na*nb) is the exact expression cosine() builds, so the
-    # affinity is bit-identical and the oracle is unchanged)
-    # one-parse expr strings (r17): bit-identical to the Column HOF
-    # forms they replace (see _dot_hof_sql), ~40 py4j round trips less
-    # per ivf_assign construction — this function is built 2-3x per
-    # query (train iteration + assignment + probes)
-    # the norm and the affinity dot both read this vector column of df
+    # work, bit-identical affinity, oracle unchanged)
     vcol = quote_ident(vec_col)
     c = centroids.select(
         "centroid_id",
         "__ctr",
-        F.expr(_norm_hof_sql(_as_double_sql("__ctr"))).alias("__cn"),
+        F.expr(_norm_sql(_as_double_sql("__ctr"))).alias("__cn"),
     )
-    v = df.withColumn(
-        "__vn", F.expr(_norm_hof_sql(_as_double_sql(vcol)))
-    )
+    v = df.withColumn("__vn", F.expr(_norm_sql(_as_double_sql(vcol))))
     # round-6 affinity: cell choice becomes engine-exact (an oracle in a
     # different engine replays the same assignment; ties break by id)
     scored = v.crossJoin(F.broadcast(c)).withColumn(
         "__aff",
-        F.expr(
-            f"round({_dot_hof_sql(_as_double_sql(vcol), _as_double_sql('__ctr'))}"
-            " / (__vn * __cn), 6)"
-        ),
+        F.expr(_cos_sql(_as_double_sql(vcol), _as_double_sql("__ctr"), "__vn", "__cn")),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__aff").desc(), F.col("centroid_id").asc()
-    )
-    return (
-        scored.withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= n_probe)
-        .drop("__ctr", "__aff", "__cr", "__vn", "__cn")
+    return _top_k(scored, id_col, "__aff", "centroid_id", n_probe, rank="__cr").drop(
+        "__ctr", "__aff", "__cr", "__vn", "__cn"
     )
 
 
@@ -536,7 +447,8 @@ def kmeans_centroids(
     Lloyd iterations recover balance without changing the dataflow.
     """
     v = corpus.select(
-        F.col(id_col).alias("__kid"), _as_double(F.col(vec_col)).alias("__kv")
+        F.col(id_col).alias("__kid"),
+        F.expr(_as_double_sql(quote_ident(vec_col))).alias("__kv"),
     )
     cents = (
         v.orderBy("__kid")
@@ -563,9 +475,6 @@ def kmeans_centroids(
         cents = (
             means.groupBy("centroid_id")
             .agg(
-                # one-parse expr twins of array_sort(collect_list(
-                # struct(...))) / transform(s -> s.__m) (r17): same
-                # expressions, fewer py4j round trips per iteration
                 F.expr("array_sort(collect_list(struct(__pos, __m)))").alias(
                     "__s"
                 )
@@ -634,54 +543,37 @@ def ivf_ann_topk(
         vec_col=vec_col,
         dim=dim,
     )
+    vcol = quote_ident(vec_col)
     if assign == "arrow":
-        cells = ivf_assign_arrow(
-            corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("__cv")),
-            cents,
-            n_probe=1,
-            id_col=id_col,
-            vec_col="__cv",
-            coarse_probe=coarse_probe,
-        )
-        probes = ivf_assign_arrow(
-            queries.select(
-                F.col(query_id_col), _as_double(F.col(vec_col)).alias("__qv")
-            ),
-            cents,
-            n_probe=n_probe,
-            id_col=query_id_col,
-            vec_col="__qv",
-            coarse_probe=coarse_probe,
-        )
+        # the arrow assigner reads doubles straight out of the batch
+        vcol = _as_double_sql(vcol)
+        assign_to = partial(ivf_assign_arrow, coarse_probe=coarse_probe)
     else:
-        cells = ivf_assign(
-            corpus.select(F.col(id_col), F.col(vec_col).alias("__cv")),
-            cents,
-            n_probe=1,
-            id_col=id_col,
-            vec_col="__cv",
-            dim=dim,
-        )
-        probes = ivf_assign(
-            queries.select(F.col(query_id_col), F.col(vec_col).alias("__qv")),
-            cents,
-            n_probe=n_probe,
-            id_col=query_id_col,
-            vec_col="__qv",
-            dim=dim,
-        )
+        assign_to = partial(ivf_assign, dim=dim)
+    cells = assign_to(
+        corpus.select(F.col(id_col), F.expr(f"{vcol} AS __cv")),
+        cents,
+        n_probe=1,
+        id_col=id_col,
+        vec_col="__cv",
+    )
+    probes = assign_to(
+        queries.select(F.col(query_id_col), F.expr(f"{vcol} AS __qv")),
+        cents,
+        n_probe=n_probe,
+        id_col=query_id_col,
+        vec_col="__qv",
+    )
     sim = (
         cells.join(F.broadcast(probes), "centroid_id")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("cosine", _cos_expr("__qv", "__cv", dim))
+        .withColumn(
+            "cosine",
+            F.expr(_cos_sql(_as_double_sql("__qv"), _as_double_sql("__cv"))),
+        )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    return _top_k(sim, query_id_col, "cosine", id_col, k).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 
@@ -781,7 +673,7 @@ def embed_neardup_pairs(
     ``score`` picks the candidate-pair cosine implementation:
     ``'expr'`` (default) is the engine-exact expression form the DuckDB
     oracle replays — unrolled static SQL at dim <= 128, the
-    bit-identical lambda left fold above (see ``_dot_expr``). The
+    bit-identical lambda left fold above (see ``_dot_sql``). The
     lambda fold runs INTERPRETED per element, so at production widths
     (dim 384-1536) the candidate scoring dominates the whole operator;
     ``'arrow'`` swaps the whole candidate stage for bucket-local BLAS
@@ -877,9 +769,9 @@ def embed_neardup_pairs(
         v = spread(
             df.select(
                 F.col(id_col).alias("__id"),
-                _as_double(F.col(vec_col)).alias("__v"),
+                F.expr(_as_double_sql(quote_ident(vec_col))).alias("__v"),
             )
-        ).withColumn("__n", _norm_expr("__v", dim))
+        ).withColumn("__n", F.expr(_norm_sql("__v", dim)))
         # norms computed ONCE per vector and carried as scalars — the
         # per-pair cosine is then a single unrolled dot (bit-identical
         # to recomputing norms inline, so the oracle form is unchanged);
@@ -919,29 +811,22 @@ def embed_neardup_pairs(
         return (
             a.join(b, ["__tbl", "__bkt"])
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "cosine",
-                F.round(
-                    _dot_expr("__va", "__vb", dim)
-                    / (F.col("__na") * F.col("__nb")),
-                    6,
-                ),
-            )
+            .withColumn("cosine", F.expr(_cos_sql("__va", "__vb", "__na", "__nb", dim)))
             .filter(F.col("cosine") >= threshold)
             .groupBy("id_a", "id_b")
             .agg(F.max("cosine").alias("cosine"))
             .select("id_a", "id_b", "cosine")
         )
+    vcol = quote_ident(vec_col)
     a = repartition_pinned(df, F.col(id_col)).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
+        F.col(id_col).alias("id_a"), F.col(vcol).alias("__va")
     )
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    b = df.select(F.col(id_col).alias("id_b"), F.col(vcol).alias("__vb"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine",
-            F.round(cosine(_as_double(F.col("__va")), _as_double(F.col("__vb"))), 6),
+            "cosine", F.expr(_cos_sql(_as_double_sql("__va"), _as_double_sql("__vb")))
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -1111,7 +996,7 @@ def semdedup(
         dim=dim,
     )
     cast_corpus = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("__cv")
+        F.col(id_col), F.expr(_as_double_sql(quote_ident(vec_col))).alias("__cv")
     )
     if assign == "arrow":
         assigned = ivf_assign_arrow(
@@ -1126,7 +1011,7 @@ def semdedup(
         assigned = ivf_assign(
             cast_corpus, cents, n_probe=1, id_col=id_col, vec_col="__cv", dim=dim
         )
-    cells = assigned.withColumn("__n", F.expr(_norm_hof_sql("__cv")))
+    cells = assigned.withColumn("__n", F.expr(_norm_sql("__cv")))
     # norm computed BEFORE the persist so both pair sides read the
     # materialized value instead of re-deriving it per branch
     if persist_cells:
@@ -1145,8 +1030,8 @@ def semdedup(
         if cells_out is not None:
             cells_out.append(cells)
     # norms ride the persisted cells (computed once per vector): the
-    # within-cluster pair loop does ONE dot per pair — dot/(na*nb) is
-    # exactly the expression cosine() builds, bit-identical result
+    # within-cluster pair loop does ONE dot per pair, bit-identical to
+    # norms computed inline
     a = cells.select(
         F.col(id_col).alias("__ida"),
         F.col("__cv").alias("__va"),
@@ -1164,12 +1049,7 @@ def semdedup(
     pair_sim = (
         a.join(b, "centroid_id")
         .filter(F.col("__idb") < F.col("__ida"))
-        .withColumn(
-            "__cos",
-            F.expr(
-                f"round({_dot_hof_sql('__va', '__vb')} / (__na * __nb), 6)"
-            ),
-        )
+        .withColumn("__cos", F.expr(_cos_sql("__va", "__vb", "__na", "__nb")))
         .groupBy(F.col("__ida").alias(id_col))
         .agg(F.max("__cos").alias("max_sim_lower"))
     )
@@ -1209,41 +1089,21 @@ def hard_negatives(
     """
     from ..operators.unions import spread
 
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        _norm(_as_double(F.col(vec_col))).alias("__qn"),
-        F.col(label_col).alias("__ql"),
+    q = _with_norm(
+        queries, query_id_col, vec_col, "q", F.col(label_col).alias("__ql")
     )
     # spread(): no-op on well-partitioned data — only un-serializes a
     # single-row-group local scan; the join itself needs no particular
     # corpus partitioning (anchors broadcast), so the map-only claim
     # holds at scale
-    c = spread(corpus).select(
-        F.col(id_col),
-        F.col(vec_col).alias("__cv"),
-        _norm(_as_double(F.col(vec_col))).alias("__cn"),
-        F.col(label_col),
-    )
+    c = _with_norm(spread(corpus), id_col, vec_col, "c", F.col(label_col))
     sim = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col(label_col) != F.col("__ql"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(_as_double(F.col("__qv")), _as_double(F.col("__cv")))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ),
-        )
+        .withColumn("cosine", F.expr(_QC_COS))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, label_col, "cosine", "rank")
+    return _top_k(sim, query_id_col, "cosine", id_col, k).select(
+        query_id_col, id_col, label_col, "cosine", "rank"
     )
 
 

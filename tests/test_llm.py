@@ -643,6 +643,14 @@ _PIN_SIMHASH64 = [
     (5, 3231721128, 12670392),
 ]
 
+_PIN_SIMHASH128 = [
+    (1, 265567480, 3448465102, 763522338, 566922015),
+    (2, 265567480, 3750438618, 1023632418, 294558554),
+    (3, 265567416, 3708380740, 755048448, 545294866),
+    (4, 2638502250, 2660984473, 1067311903, 1428831171),
+    (5, 12670392, 3231721128, 818092130, 1630602753),
+]
+
 
 def test_dedup_sql_builders_golden(spark):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import (
@@ -662,3 +670,17 @@ def test_dedup_sql_builders_golden(spark):
         "struct<id:bigint,simhash_hi:bigint,simhash_lo:bigint>"
     )
     assert [tuple(r) for r in sh.orderBy("id").collect()] == _PIN_SIMHASH64
+
+
+def test_simhash128_golden(spark):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import (
+        simhash128,
+    )
+
+    df = spark.createDataFrame(_PIN_DOCS, "doc_id long, text string")
+    sh = simhash128(df)
+    assert sh.schema.simpleString() == (
+        "struct<id:bigint,simhash_s0:bigint,simhash_s1:bigint,"
+        "simhash_s2:bigint,simhash_s3:bigint>"
+    )
+    assert [tuple(r) for r in sh.orderBy("id").collect()] == _PIN_SIMHASH128

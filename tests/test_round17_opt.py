@@ -345,122 +345,3 @@ def test_sized_codec_partitions_degrades_to_none_on_planning_failure(
 
     monkeypatch.setattr(type(df), "rdd", property(_broken_rdd))
     assert sized_codec_partitions(df, 1024) is None
-
-
-# ---------------- r17 change 5: one-parse expr twins of the HOF builders
-
-
-def test_hof_sql_twins_bit_identical_to_column_forms(spark):
-    """_dot_hof_sql/_norm_hof_sql build the SAME expression as the
-    Column HOF builders they replace in the hot constructors (VERDICT
-    r16 #4: ~0.9 s of semantic_dedup's construction was py4j round-trip
-    latency; the twins are one expr parse each). Results must be
-    bit-equal — exact float equality, no tolerance."""
-    from pyspark.sql import functions as F
-
-    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
-        _as_double,
-        _as_double_sql,
-        _dot,
-        _dot_hof_sql,
-        _norm,
-        _norm_hof_sql,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (i, [((i * 7 + j) % 13) / 7.0 for j in range(9)],
-             [((i * 5 + j) % 11) / 3.0 for j in range(9)])
-            for i in range(64)
-        ],
-        "id long, a array<double>, b array<float>",
-    )
-    rows = df.select(
-        _dot(F.col("a"), _as_double(F.col("b"))).alias("dot_col"),
-        F.expr(_dot_hof_sql("a", _as_double_sql("b"))).alias("dot_sql"),
-        _norm(F.col("a")).alias("norm_col"),
-        F.expr(_norm_hof_sql("a")).alias("norm_sql"),
-    ).collect()
-    for r in rows:
-        assert r["dot_col"] == r["dot_sql"]  # bitwise: same fold order
-        assert r["norm_col"] == r["norm_sql"]
-
-
-def test_semdedup_result_identical_to_column_form_rebuild(spark):
-    """semdedup's expr-twin constructors must reproduce the pre-r17
-    Column-form output row-for-row (same clusters, same max_sim_lower
-    doubles, same keep flags) on a frame wide enough to exercise the
-    training iteration and the pair stage."""
-    from pyspark.sql import functions as F
-
-    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
-        semdedup,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            (i, [float((i * 11 + j * 3) % 17) - 8.0 for j in range(8)])
-            for i in range(120)
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = semdedup(emb, n_centroids=4, threshold=0.3, train_iters=1, dim=8)
-    got = {
-        r["vec_id"]: (r["centroid_id"], r["max_sim_lower"], r["keep"])
-        for r in out.collect()
-    }
-    # reference: the identical math built through the Column HOF path
-    # (the pre-r17 encoding) — inline replica of the pre-r17 pair stage
-    # over the same assignment
-    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
-        _as_double,
-        _dot,
-        _norm,
-        ivf_assign,
-        kmeans_centroids,
-    )
-
-    cents = kmeans_centroids(emb, n_centroids=4, iters=1, dim=8)
-    cast = emb.select("vec_id", _as_double(F.col("embedding")).alias("__cv"))
-    cells = ivf_assign(cast, cents, n_probe=1, vec_col="__cv").withColumn(
-        "__n", _norm(F.col("__cv"))
-    )
-    a = cells.select(
-        F.col("vec_id").alias("__ida"),
-        F.col("__cv").alias("__va"),
-        F.col("__n").alias("__na"),
-        "centroid_id",
-    )
-    b = cells.select(
-        F.col("vec_id").alias("__idb"),
-        F.col("__cv").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "centroid_id",
-    )
-    pair = (
-        a.join(b, "centroid_id")
-        .filter(F.col("__idb") < F.col("__ida"))
-        .withColumn(
-            "__cos",
-            F.round(
-                _dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ),
-        )
-        .groupBy(F.col("__ida").alias("vec_id"))
-        .agg(F.max("__cos").alias("max_sim_lower"))
-    )
-    ref_rows = (
-        cells.select("vec_id", "centroid_id")
-        .join(pair, "vec_id", "left")
-        .collect()
-    )
-    assert len(ref_rows) == len(got) == 120
-    for r in ref_rows:
-        cid, sim, keep = got[r["vec_id"]]
-        assert cid == r["centroid_id"]
-        assert sim == r["max_sim_lower"]  # bitwise-equal doubles
-        ref_keep = (r["max_sim_lower"] is None) or (r["max_sim_lower"] < 0.3)
-        assert keep == ref_keep
-    cents.unpersist()

@@ -518,7 +518,7 @@ def test_embed_neardup_wide_dim_compiles_and_runs(spark):
     """dim=512 (production embedding width) used to crash whole-stage
     codegen with StackOverflowError — project collapse inlined the cast
     into every element reference of the unrolled static dot/norm. The
-    _dot_expr/_norm_expr auto-switch above dim 128 must keep the
+    _dot_sql/_norm_sql auto-switch above dim 128 must keep the
     operator runnable at any width, in both scorer forms."""
     from pyspark.sql import functions as F
 

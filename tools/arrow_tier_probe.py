@@ -76,13 +76,13 @@ def max_occupancy(df, planes: int, tables: int = 8) -> int:
     """Max (table, bucket) group size under the SAME tagging the
     operator builds for this plane count."""
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
-        _as_double,
+        _as_double_sql,
         _srp_bucket_sql,
     )
 
     v = df.select(
         F.col("vec_id").alias("__id"),
-        _as_double(F.col("embedding")).alias("__v"),
+        F.expr(_as_double_sql("embedding")).alias("__v"),
     )
     buckets = ", ".join(
         _srp_bucket_sql("__v", DIM, planes, offset=t * planes)
