@@ -780,7 +780,7 @@ def q_simhash64_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """128-bit SimHash near-dup pairs WITH the occupancy valve — the
     corpus-scale SimHash pair-former (llm/dedup.py:simhash128_pairs).
-    The tier probe (tools/simhash_tier_probe.py) measured the 64-bit
+    The SimHash tier probe (SCALING.md) measured the 64-bit
     layout quadratic with a catastrophic constant (375G candidate pairs
     at 2M docs); this path widens the pigeonhole blocks to 16-32 bits
     from the SAME md5 the projection already computes and drops

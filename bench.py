@@ -18,7 +18,7 @@ rule: raw totals stay authoritative within a single phase (interleaved
 A/Bs); *_normalized totals are indicative only (ADVICE r10: the
 uniform-drift assumption carries ±10-15%); any suspected per-query
 regression is decided by ratio_to_probe and, if close, the
-interleaved ratio test (tools/adjudicate_r10.py). The per-query [min, median, max] spread and the
+interleaved ratio test (tools/adjudicate.py). The per-query [min, median, max] spread and the
 extra-section timings are emitted on a PRECEDING line and mirrored to
 BENCH_extra.json (the driver's tail capture truncated the old single
 giant line in r3 and r6, losing the headline "value"). Each query is

@@ -1220,7 +1220,7 @@ def simhash64_pairs(
     selective. Exact Hamming is the sum of the two halves'
     bit_count(xor).
 
-    SCALE CEILING (measured, tools/simhash_tier_probe.py): 9-bit blocks
+    SCALE CEILING (measured, SCALING.md; tools/valve_probe.py): 9-bit blocks
     mean at most 2^9 buckets per block forever, so candidate mass is
     Θ(n²/2^9) — 236M candidates at 50k docs, 375 BILLION at 2M. Above
     ~10^5 docs use :func:`simhash128_pairs` (wider blocks from the same
@@ -1246,7 +1246,7 @@ def simhash128(
     slices — the full width of the md5 the token projection already
     computes, so the wider signature costs zero extra hashing.
 
-    Why width matters (measured, tools/simhash_tier_probe.py): pigeonhole
+    Why width matters (measured, SCALING.md; tools/valve_probe.py): pigeonhole
     blocking keys on a fixed bit-slice of the signature, so the bucket
     space per block is 2^width FOREVER — candidate mass is
     Θ(n²/2^width). At 64 bits / max_hamming=6 the blocks are ~9 bits
@@ -1288,7 +1288,7 @@ def simhash128_pairs(
     the blocks are 16-32 bits wide at the default ``max_hamming=6``
     (vs ~9 bits for 64-bit signatures): candidate mass drops by the
     bucket-space ratio, measured 17× at 50k docs and growing with n
-    (tools/simhash_tier_probe.py — the 64-bit layout is quadratic with
+    (SCALING.md, tools/valve_probe.py — the 64-bit layout is quadratic with
     a small constant and is the wrong default above ~10^5 docs).
 
     ``max_bucket_size`` is the SKEW VALVE (same contract as

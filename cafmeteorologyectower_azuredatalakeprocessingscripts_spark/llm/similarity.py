@@ -312,8 +312,8 @@ def ivf_assign_arrow(
     - top-``n_probe`` selection happens inside the batch, so the n·k
       scored rows are never materialized, never shuffled — where the
       expression form shuffles n·k rows through a window
-      (scale_probe measured the difference at 500k x 1600: see
-      SCALING.md).
+      (the scaling probe measured the difference at 500k x 1600:
+      see SCALING.md).
 
     Exactness caveat (why this is not the oracle path):
     :func:`ivf_assign` folds the dot left-to-right, which DuckDB's
@@ -1114,10 +1114,10 @@ def srp_planes_for(n_vectors: int, occupancy: int = 256) -> int:
     THE scaling rule for :func:`embed_neardup_pairs` /
     :func:`lsh_ann_topk`: with a FIXED plane count, bucket occupancy
     grows ∝ n and candidate pairs ∝ n² — measured 72.6× runtime for a
-    10× corpus (tools/scale_probe.py). Scaling planes with log2(n)
+    10× corpus (SCALING.md). Scaling planes with log2(n)
     holds occupancy flat so pair work grows ~linearly (measured ~12×
     for 10× data with the recall-compensating table doubling below —
-    tools/scale_probe.py, SCALING.md).
+    SCALING.md).
 
     More planes lower per-table recall at a given angle
     (recall/table = (1-θ/π)^planes), so when planes grow, grow

@@ -212,7 +212,7 @@ def test_jaccard_loss_probe_positive_control(spark):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import (
         jaccard_pairs,
     )
-    from tools.jaccard_loss_probe import (
+    from tools.synth import (
         SHINGLE_N,
         THRESHOLD,
         seeded_pairs,

@@ -4,27 +4,14 @@ and the ADVICE r13 items (JPEG entropy-word memory cap, ICO entry
 fallback, BPE dead pre-explode filter)."""
 
 import pytest
+from conftest import SMALL_CORPUS
 from pyspark.sql import functions as F
-
-
-def _docs(spark):
-    return spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "pack my box with five dozen liquor jugs"),
-            (4, "sphinx of black quartz judge my vow"),
-            (5, ""),
-            (6, "the the the quick quick zebra"),
-        ],
-        "doc_id long, text string",
-    )
 
 
 # ------------------------------------------------ VERDICT r13 #1: oov fusion
 
 
-def test_oov_fused_matches_two_op_composition(spark):
+def test_oov_fused_matches_two_op_composition(spark, make_docs):
     """oov_rate_against_top must equal oov_rate(d, vocab_top_terms(d, k))
     row-for-row — the fusion is a plan change, not a semantics change."""
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.text import (
@@ -33,14 +20,14 @@ def test_oov_fused_matches_two_op_composition(spark):
         vocab_top_terms,
     )
 
-    d = _docs(spark)
+    d = make_docs(SMALL_CORPUS, start=1)
     for k in (3, 5, 100):
         old = {tuple(r) for r in oov_rate(d, vocab_top_terms(d, k=k)).collect()}
         new = {tuple(r) for r in oov_rate_against_top(d, k=k).collect()}
         assert new == old
 
 
-def test_oov_fused_plan_reuses_corpus_exchange(spark):
+def test_oov_fused_plan_reuses_corpus_exchange(spark, make_docs):
     """The point of the fusion: the vocab build and the probe side share
     ONE per-(doc, term) exchange. Pin the ReusedExchange node in the
     final adaptive plan (read through collect() on the SAME
@@ -50,7 +37,7 @@ def test_oov_fused_plan_reuses_corpus_exchange(spark):
         oov_rate_against_top,
     )
 
-    out = oov_rate_against_top(_docs(spark), k=4)
+    out = oov_rate_against_top(make_docs(SMALL_CORPUS, start=1), k=4)
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ReusedExchange") >= 1, plan
@@ -59,7 +46,7 @@ def test_oov_fused_plan_reuses_corpus_exchange(spark):
 # --------------------------------------- VERDICT r13 #3: shingle cache leak
 
 
-def test_jaccard_pairs_leaves_no_persistent_rdds(spark):
+def test_jaccard_pairs_leaves_no_persistent_rdds(spark, make_docs):
     """jaccard_pairs' internal shingle table must not leak cached RDDs
     into the caller's session (the class of bug the r13 BPE fix closed:
     library ops own their storage). The shared-subtree dedup now rides
@@ -70,14 +57,14 @@ def test_jaccard_pairs_leaves_no_persistent_rdds(spark):
 
     sc = spark.sparkContext
     before = len(sc._jsc.getPersistentRDDs())
-    jaccard_pairs(_docs(spark), n=2, threshold=0.1).collect()
+    jaccard_pairs(make_docs(SMALL_CORPUS, start=1), n=2, threshold=0.1).collect()
     jaccard_pairs(
-        _docs(spark), n=2, threshold=0.1, max_doc_freq=3
+        make_docs(SMALL_CORPUS, start=1), n=2, threshold=0.1, max_doc_freq=3
     ).collect()
     assert len(sc._jsc.getPersistentRDDs()) == before
 
 
-def test_incremental_dedup_leaves_no_persistent_rdds(spark):
+def test_incremental_dedup_leaves_no_persistent_rdds(spark, make_docs):
     """Same contract for incremental_dedup, the other dedup entry point
     that cached internally: materialize the result, then the session's
     persistent-RDD set must be exactly as found."""
@@ -85,7 +72,7 @@ def test_incremental_dedup_leaves_no_persistent_rdds(spark):
         incremental_dedup,
     )
 
-    base = _docs(spark).filter(F.col("doc_id") <= 3)
+    base = make_docs(SMALL_CORPUS, start=1).filter(F.col("doc_id") <= 3)
     new = spark.createDataFrame(
         [
             (10, "the quick brown fox jumps over the lazy dog"),
@@ -99,7 +86,7 @@ def test_incremental_dedup_leaves_no_persistent_rdds(spark):
     assert len(sc._jsc.getPersistentRDDs()) == before
 
 
-def test_incremental_dedup_cache_out_handle(spark):
+def test_incremental_dedup_cache_out_handle(spark, make_docs):
     """cache_out=[] is the opt-in: intermediates persist during the run
     and the CALLER releases them — after unpersisting every handle the
     session is clean again, and results match the cache-free default."""
@@ -107,7 +94,7 @@ def test_incremental_dedup_cache_out_handle(spark):
         incremental_dedup,
     )
 
-    base = _docs(spark).filter(F.col("doc_id") <= 3)
+    base = make_docs(SMALL_CORPUS, start=1).filter(F.col("doc_id") <= 3)
     new = spark.createDataFrame(
         [
             (10, "the quick brown fox jumps over the lazy dog"),

@@ -4,27 +4,14 @@ r14 items (BPE oracle delimiter corpus guard, oov null-id pinning,
 scan_audit eager-query exception)."""
 
 import pytest
+from conftest import SMALL_CORPUS
 from pyspark.sql import functions as F
-
-
-def _docs(spark):
-    return spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "pack my box with five dozen liquor jugs"),
-            (4, "sphinx of black quartz judge my vow"),
-            (5, ""),
-            (6, "the the the quick quick zebra"),
-        ],
-        "doc_id long, text string",
-    )
 
 
 # ------------------------------------- VERDICT r14 #3: charlm persist leak
 
 
-def test_charlm_score_leaves_no_persistent_rdds(spark):
+def test_charlm_score_leaves_no_persistent_rdds(spark, make_docs):
     """charlm_score(model='broadcast') must not leak a session-lifetime
     cache on the default call (the jaccard/BPE/incremental_dedup
     contract: library ops own their storage; persists are cache_out
@@ -35,12 +22,12 @@ def test_charlm_score_leaves_no_persistent_rdds(spark):
 
     sc = spark.sparkContext
     before = len(sc._jsc.getPersistentRDDs())
-    charlm_score(_docs(spark)).collect()
-    charlm_score(_docs(spark), model="window").collect()
+    charlm_score(make_docs(SMALL_CORPUS, start=1)).collect()
+    charlm_score(make_docs(SMALL_CORPUS, start=1), model="window").collect()
     assert len(sc._jsc.getPersistentRDDs()) == before
 
 
-def test_charlm_score_cache_out_handle(spark):
+def test_charlm_score_cache_out_handle(spark, make_docs):
     """cache_out=[] is the opt-in: the per-(doc, bigram) frame persists
     during the run, the caller unpersists the handle, and the result
     matches the cache-free default bit-for-bit."""
@@ -50,11 +37,11 @@ def test_charlm_score_cache_out_handle(spark):
 
     sc = spark.sparkContext
     before = len(sc._jsc.getPersistentRDDs())
-    expected = sorted(tuple(r) for r in charlm_score(_docs(spark)).collect())
+    expected = sorted(tuple(r) for r in charlm_score(make_docs(SMALL_CORPUS, start=1)).collect())
     handles: list = []
     got = sorted(
         tuple(r)
-        for r in charlm_score(_docs(spark), cache_out=handles).collect()
+        for r in charlm_score(make_docs(SMALL_CORPUS, start=1), cache_out=handles).collect()
     )
     assert got == expected
     assert len(handles) == 1
@@ -84,7 +71,7 @@ def _docs_with_null_id(spark):
     )
 
 
-def test_vocab_top_terms_excludes_null_id_docs(spark):
+def test_vocab_top_terms_excludes_null_id_docs(spark, make_docs):
     """Null-id docs contribute no tokens to the vocabulary (the shared
     contract, ADVICE r14 #4): 'zzz' outnumbers every real token yet
     must not appear, and the list must equal the null-free corpus's."""
@@ -95,7 +82,7 @@ def test_vocab_top_terms_excludes_null_id_docs(spark):
     with_null = {
         tuple(r) for r in vocab_top_terms(_docs_with_null_id(spark), k=3).collect()
     }
-    without = {tuple(r) for r in vocab_top_terms(_docs(spark), k=3).collect()}
+    without = {tuple(r) for r in vocab_top_terms(make_docs(SMALL_CORPUS, start=1), k=3).collect()}
     assert with_null == without
     assert not any(r[0] == "zzz" for r in with_null)
 
@@ -136,8 +123,9 @@ def test_no_registry_query_hits_eager_count_fallback(spark):
     import __spark_entry__ as entrymod
 
     # eager-at-construction queries (training loops / convergence
-    # iterations) are excluded on cost grounds, same set as
-    # tools/scan_audit.py — their code paths contain no SRP sizing.
+    # iterations) are excluded on cost grounds, same set as the
+    # duplicate-scan column of tools/dump_plans.py — their code paths
+    # contain no SRP sizing.
     eager = {"bpe_train_merges"}
     # connected-components queries run their convergence loop at
     # construction and the RETURNED frame rides the final
@@ -216,8 +204,8 @@ def test_span_removal_modes_equals_union_of_single_modes(spark):
 # ------------------------------------- VERDICT r14 #4: BPE merge budgets
 
 
-def _bpe_corpora(spark):
-    yield _docs(spark)
+def _bpe_corpora(spark, make_docs):
+    yield make_docs(SMALL_CORPUS, start=1)
     # overlapping runs — the non-overlapping left-to-right rule and
     # per-position pair counting must agree between trainers
     yield spark.createDataFrame(
@@ -226,7 +214,7 @@ def _bpe_corpora(spark):
     )
 
 
-def test_bpe_hybrid_merge_identical_to_distributed(spark):
+def test_bpe_hybrid_merge_identical_to_distributed(spark, make_docs):
     """bpe_train_hybrid (one histogram job + driver merge loop) must
     produce the EXACT merge list of bpe_train (one Spark job per merge)
     — same tie-break, same non-overlapping application, same min_freq
@@ -237,7 +225,7 @@ def test_bpe_hybrid_merge_identical_to_distributed(spark):
         bpe_train_hybrid,
     )
 
-    for d in _bpe_corpora(spark):
+    for d in _bpe_corpora(spark, make_docs):
         for n_merges, min_freq in ((12, 2), (40, 1)):
             dist = bpe_train(d, n_merges=n_merges, min_freq=min_freq)
             hyb = bpe_train_hybrid(d, n_merges=n_merges, min_freq=min_freq)

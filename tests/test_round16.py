@@ -436,13 +436,7 @@ def test_bench_diff_abs_bands_load_from_frozen_file():
     runtime (ADVICE r15 #3: no hand-copied literals that silently go
     stale on a re-freeze) and cover the whole payload-synthesis
     family, each with a sane lo < hi."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    try:
-        from bench_diff import abs_bands
-    finally:
-        sys.path.remove("/root/repo/tools")
+    from tools.bench_diff import abs_bands
 
     bands = abs_bands()
     for name in (

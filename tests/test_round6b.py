@@ -28,18 +28,12 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.operators import
 )
 
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
-    )
-
-
 # ------------------------------------------------------------- chunking
 
 
-def test_chunk_tokens_windows_and_trailing_partial(spark):
+def test_chunk_tokens_windows_and_trailing_partial(spark, make_docs):
     ten = " ".join(f"t{i}" for i in range(1, 11))  # 10 tokens
-    out = chunk_tokens(_docs(spark, [ten]), chunk_size=4, stride=3)
+    out = chunk_tokens(make_docs([ten]), chunk_size=4, stride=3)
     rows = {r["chunk_idx"]: r for r in out.collect()}
     # starts 1,4,7,10 -> four chunks, last is a 1-token suffix
     assert sorted(rows) == [0, 1, 2, 3]
@@ -50,44 +44,44 @@ def test_chunk_tokens_windows_and_trailing_partial(spark):
     assert all(r["n_tok"] == len(r["chunk_text"].split()) for r in rows.values())
 
 
-def test_chunk_tokens_overlap_invariant(spark):
+def test_chunk_tokens_overlap_invariant(spark, make_docs):
     # stride < size => adjacent chunks share exactly size - stride tokens
     text = " ".join(f"w{i}" for i in range(25))
-    out = chunk_tokens(_docs(spark, [text]), chunk_size=8, stride=5)
+    out = chunk_tokens(make_docs([text]), chunk_size=8, stride=5)
     rows = sorted(out.collect(), key=lambda r: r["chunk_idx"])
     for a, b in zip(rows, rows[1:]):
         if b["n_tok"] >= 3:
             assert a["chunk_text"].split()[-3:] == b["chunk_text"].split()[:3]
 
 
-def test_chunk_tokens_empty_and_whitespace_doc_emits_nothing(spark):
-    out = chunk_tokens(_docs(spark, ["", "   ", "one two"]), 4, 4)
+def test_chunk_tokens_empty_and_whitespace_doc_emits_nothing(spark, make_docs):
+    out = chunk_tokens(make_docs(["", "   ", "one two"]), 4, 4)
     assert [r["doc_id"] for r in out.collect()] == [2]
 
 
-def test_chunk_tokens_rejects_degenerate_params(spark):
+def test_chunk_tokens_rejects_degenerate_params(spark, make_docs):
     with pytest.raises(ValueError):
-        chunk_tokens(_docs(spark, ["x"]), chunk_size=0, stride=3)
+        chunk_tokens(make_docs(["x"]), chunk_size=0, stride=3)
     with pytest.raises(ValueError):
-        chunk_tokens(_docs(spark, ["x"]), chunk_size=4, stride=0)
+        chunk_tokens(make_docs(["x"]), chunk_size=4, stride=0)
 
 
 # ------------------------------------------------------------- charlm
 
 
-def test_charlm_in_distribution_beats_gibberish(spark):
+def test_charlm_in_distribution_beats_gibberish(spark, make_docs):
     bland = "the cat sat on the mat and the dog sat on the log. "
     corpus = [bland * 3] * 8 + ["zq xv jk qz wx kj zzqqxxvvjj"]
-    out = {r["doc_id"]: r for r in charlm_score(_docs(spark, corpus)).collect()}
+    out = {r["doc_id"]: r for r in charlm_score(make_docs(corpus)).collect()}
     in_dist = out[0]["avg_neglogprob"]
     gib = out[8]["avg_neglogprob"]
     assert gib > in_dist > 0
 
 
-def test_charlm_short_docs_score_zero(spark):
+def test_charlm_short_docs_score_zero(spark, make_docs):
     out = {
         r["doc_id"]: r
-        for r in charlm_score(_docs(spark, ["", "a", "ab"])).collect()
+        for r in charlm_score(make_docs(["", "a", "ab"])).collect()
     }
     assert out[0]["n_bigrams"] == 0 and out[0]["avg_neglogprob"] == 0.0
     assert out[1]["n_bigrams"] == 0
@@ -97,8 +91,8 @@ def test_charlm_short_docs_score_zero(spark):
 # ------------------------------------------------------------- oov rate
 
 
-def test_oov_rate_exact_counts(spark):
-    docs = _docs(spark, ["a a a b", "a c", ""])
+def test_oov_rate_exact_counts(spark, make_docs):
+    docs = make_docs(["a a a b", "a c", ""])
     vocab = vocab_top_terms(docs, k=1)  # top-1 term is 'a' (4 occurrences)
     out = {r["doc_id"]: r for r in oov_rate(docs, vocab).collect()}
     assert (out[0]["n_tok"], out[0]["n_oov"]) == (4, 1)
@@ -110,10 +104,9 @@ def test_oov_rate_exact_counts(spark):
 # ------------------------------------------------- levenshtein pairs
 
 
-def test_levenshtein_pairs_blocked_and_bounded(spark):
+def test_levenshtein_pairs_blocked_and_bounded(spark, make_docs):
     base = "the quick brown fox jumps over the lazy dog again and again"
-    docs = _docs(
-        spark,
+    docs = make_docs(
         [
             base,
             base.replace("lazy", "hazy"),  # same prefix, distance 1
@@ -127,21 +120,21 @@ def test_levenshtein_pairs_blocked_and_bounded(spark):
     assert [(r["doc_a"], r["doc_b"], r["dist"]) for r in out] == [(0, 1, 1)]
 
 
-def test_levenshtein_pairs_threshold_filters(spark):
+def test_levenshtein_pairs_threshold_filters(spark, make_docs):
     a = "shared prefix here " + "x" * 40
     b = "shared prefix here " + "y" * 40
     out = levenshtein_blocked_pairs(
-        _docs(spark, [a, b]), prefix_len=16, probe_len=60, max_dist=10
+        make_docs([a, b]), prefix_len=16, probe_len=60, max_dist=10
     ).collect()
     assert out == []  # distance 40 > threshold -> dropped, not clamped
 
 
-def test_levenshtein_pairs_rejects_bad_params(spark):
+def test_levenshtein_pairs_rejects_bad_params(spark, make_docs):
     with pytest.raises(ValueError):
-        levenshtein_blocked_pairs(_docs(spark, ["x"]), prefix_len=0)
+        levenshtein_blocked_pairs(make_docs(["x"]), prefix_len=0)
     with pytest.raises(ValueError):
         levenshtein_blocked_pairs(
-            _docs(spark, ["x"]), prefix_len=16, probe_len=8
+            make_docs(["x"]), prefix_len=16, probe_len=8
         )
 
 

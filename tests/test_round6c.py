@@ -19,22 +19,16 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.operators import
 )
 
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
-    )
-
-
 # ------------------------------------------------------------- bm25
 
 
-def test_bm25_rare_term_outranks_common(spark):
+def test_bm25_rare_term_outranks_common(spark, make_docs):
     corpus = (
         ["alpha beta gamma delta"] * 8  # 'alpha' is everywhere
         + ["needle beta gamma delta"]  # 'needle' appears once
         + ["unrelated words only here"]
     )
-    out = bm25_topk(_docs(spark, corpus), ["alpha", "needle"], k=10).collect()
+    out = bm25_topk(make_docs(corpus), ["alpha", "needle"], k=10).collect()
     # the needle doc must rank first: idf('needle') >> idf('alpha')
     assert out[0]["doc_id"] == 8
     assert out[0]["n_hit_terms"] == 1
@@ -46,26 +40,26 @@ def test_bm25_rare_term_outranks_common(spark):
     assert 9 not in {r["doc_id"] for r in out}
 
 
-def test_bm25_tf_saturation(spark):
+def test_bm25_tf_saturation(spark, make_docs):
     # k1 saturates term frequency: 10 repeats must score higher than 1
     # but far less than 10x (same doc length via padding)
     pad = " pad" * 20
     corpus = ["term" + pad, ("term " * 10).strip() + pad]
     out = {
         r["doc_id"]: r["score_micro"]
-        for r in bm25_topk(_docs(spark, corpus), ["term"], k=5).collect()
+        for r in bm25_topk(make_docs(corpus), ["term"], k=5).collect()
     }
     assert out[1] > out[0]
     assert out[1] < 5 * out[0]
 
 
-def test_bm25_rejects_bad_args(spark):
+def test_bm25_rejects_bad_args(spark, make_docs):
     with pytest.raises(ValueError):
-        bm25_topk(_docs(spark, ["x"]), [], k=5)
+        bm25_topk(make_docs(["x"]), [], k=5)
     with pytest.raises(ValueError):
-        bm25_topk(_docs(spark, ["x"]), ["a", "A"], k=5)
+        bm25_topk(make_docs(["x"]), ["a", "A"], k=5)
     with pytest.raises(ValueError):
-        bm25_topk(_docs(spark, ["x"]), ["a"], k=0)
+        bm25_topk(make_docs(["x"]), ["a"], k=0)
 
 
 # ------------------------------------------------------------- zorder

@@ -37,21 +37,15 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.operators.rollin
 # ------------------------------------------------------------- semdedup
 
 
-def _vecs(spark, rows):
-    return spark.createDataFrame(
-        [Row(vec_id=i, embedding=v, label=l) for i, (v, l) in enumerate(rows)]
-    )
-
-
-def test_semdedup_drops_higher_id_near_duplicate(spark):
+def test_semdedup_drops_higher_id_near_duplicate(spark, make_vecs):
     # 0 and 2 are identical directions; 1 is orthogonal
-    df = _vecs(
-        spark,
+    df = make_vecs(
         [
-            ([1.0, 0.0], 0),
-            ([0.0, 1.0], 1),
-            ([2.0, 0.0], 0),
+            (0, [1.0, 0.0]),
+            (1, [0.0, 1.0]),
+            (2, [2.0, 0.0]),
         ],
+        labels=[0, 1, 0],
     )
     out = {
         r["vec_id"]: r
@@ -63,16 +57,16 @@ def test_semdedup_drops_higher_id_near_duplicate(spark):
     assert out[2]["max_sim_lower"] == pytest.approx(1.0)
 
 
-def test_semdedup_cross_cluster_duplicates_not_compared(spark):
+def test_semdedup_cross_cluster_duplicates_not_compared(spark, make_vecs):
     # identical vectors but the quantizer (2 centroids seeded from ids
     # 0/1) puts them in different cells → SemDeDup by design keeps both
-    df = _vecs(
-        spark,
+    df = make_vecs(
         [
-            ([1.0, 0.0], 0),
-            ([-1.0, 0.05], 1),
-            ([-1.0, 0.05], 1),
+            (0, [1.0, 0.0]),
+            (1, [-1.0, 0.05]),
+            (2, [-1.0, 0.05]),
         ],
+        labels=[0, 1, 1],
     )
     out = semdedup(df, n_centroids=2, threshold=0.9)
     assert out.filter(~F.col("keep")).count() == 1  # only the same-cell dup
@@ -81,15 +75,15 @@ def test_semdedup_cross_cluster_duplicates_not_compared(spark):
 # ------------------------------------------------------- hard negatives
 
 
-def test_hard_negatives_excludes_same_label(spark):
-    corpus = _vecs(
-        spark,
+def test_hard_negatives_excludes_same_label(spark, make_vecs):
+    corpus = make_vecs(
         [
-            ([1.0, 0.0], 0),  # anchor
-            ([1.0, 0.01], 0),  # near-identical but SAME label → excluded
-            ([0.9, 0.1], 1),  # the hard negative
-            ([-1.0, 0.0], 1),  # an easy negative
+            (0, [1.0, 0.0]),  # anchor
+            (1, [1.0, 0.01]),  # near-identical but SAME label → excluded
+            (2, [0.9, 0.1]),  # the hard negative
+            (3, [-1.0, 0.0]),  # an easy negative
         ],
+        labels=[0, 0, 1, 1],
     )
     anchors = corpus.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding", "label"
@@ -449,12 +443,14 @@ def test_srp_planes_for_holds_occupancy():
         srp_planes_for(0)
 
 
-def test_embed_neardup_default_planes_autosize(spark):
+def test_embed_neardup_default_planes_autosize(spark, make_vecs):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
         embed_neardup_pairs,
     )
 
-    df = _vecs(spark, [([1.0, 0.0], 0), ([1.0, 0.001], 0), ([0.0, 1.0], 1)])
+    df = make_vecs(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.001]), (2, [0.0, 1.0])], labels=[0, 0, 1]
+    )
     # planes omitted: auto-sized from the corpus count — still finds the
     # near-identical pair, still no cross join in the plan
     out = embed_neardup_pairs(df, threshold=0.99, dim=2)

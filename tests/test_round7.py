@@ -10,21 +10,14 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 
-def _vecs(spark, rows):
-    return spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float(x) for x in v]) for i, v in rows]
-    )
-
-
 # ------------------------------------------------- semdedup cache handle
-def test_semdedup_cells_out_handle_releases_cache(spark):
+def test_semdedup_cells_out_handle_releases_cache(spark, make_vecs):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
         semdedup,
     )
 
     spark.catalog.clearCache()
-    df = _vecs(
-        spark,
+    df = make_vecs(
         [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [0.0, 1.0])],
     )
     handle: list = []
@@ -39,13 +32,13 @@ def test_semdedup_cells_out_handle_releases_cache(spark):
     assert jsc.getPersistentRDDs().isEmpty()
 
 
-def test_semdedup_persist_false_leaves_no_cache(spark):
+def test_semdedup_persist_false_leaves_no_cache(spark, make_vecs):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
         semdedup,
     )
 
     spark.catalog.clearCache()
-    df = _vecs(spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0])])
+    df = make_vecs([(1, [1.0, 0.0]), (2, [0.0, 1.0])])
     handle: list = []
     semdedup(df, n_centroids=1, persist_cells=False, cells_out=handle).collect()
     assert handle == []
@@ -92,13 +85,13 @@ def test_winsorize_keep_nulls_passes_rows_through(spark):
 
 
 # --------------------------------- embed_neardup_pairs approx_count path
-def test_embed_neardup_approx_count_skips_count_job(spark):
+def test_embed_neardup_approx_count_skips_count_job(spark, make_vecs):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
         embed_neardup_pairs,
     )
 
-    df = _vecs(
-        spark, [(i, [1.0 if j == i % 4 else 0.0 for j in range(4)]) for i in range(20)]
+    df = make_vecs(
+        [(i, [1.0 if j == i % 4 else 0.0 for j in range(4)]) for i in range(20)]
     )
 
     def _boom():
@@ -275,7 +268,7 @@ def test_resize_images_real_png_path(spark):
 
 
 # -------------------------------------------------- arrow IVF assignment
-def test_ivf_assign_arrow_matches_expression_form(spark):
+def test_ivf_assign_arrow_matches_expression_form(spark, make_vecs):
     import random
 
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
@@ -285,8 +278,7 @@ def test_ivf_assign_arrow_matches_expression_form(spark):
     )
 
     rng = random.Random(11)
-    df = _vecs(
-        spark,
+    df = make_vecs(
         [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(80)],
     )
     cents = kmeans_centroids(df, n_centroids=6)
@@ -305,13 +297,12 @@ def test_ivf_assign_arrow_matches_expression_form(spark):
     assert len(full) == 80 * 6
 
 
-def test_semdedup_arrow_assign_matches_expr(spark):
+def test_semdedup_arrow_assign_matches_expr(spark, make_vecs):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
         semdedup,
     )
 
-    df = _vecs(
-        spark,
+    df = make_vecs(
         [
             (1, [1.0, 0.0, 0.0]),
             (2, [0.999, 0.01, 0.0]),

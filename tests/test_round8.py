@@ -330,10 +330,7 @@ def test_rotation_debt_tool_reads_records():
     """tools/rotation_debt aggregates driver + local correctness
     records; the current registry must have zero never-checked entries
     once the local r8 record is counted."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import rotation_debt
+    from tools import rotation_debt
 
     driver, local, latest = rotation_debt.load_rounds()
     assert latest >= 8

@@ -391,13 +391,7 @@ def test_repetition_hash_grams_parity(spark):
 # ---------------------------------------------------------------------------
 
 
-def _docs(spark, texts):
-    return spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-
-
-def test_simhash128_slices_extend_simhash64(spark):
+def test_simhash128_slices_extend_simhash64(spark, make_docs):
     """The 128-bit signature's low two slices ARE simhash64's halves:
     s0 = md5 hex chars 1-8 (= lo), s1 = chars 9-16 (= hi), same votes,
     same recombine — bit-for-bit. The wider signature only ADDS slices;
@@ -407,8 +401,7 @@ def test_simhash128_slices_extend_simhash64(spark):
         simhash128,
     )
 
-    d = _docs(
-        spark,
+    d = make_docs(
         ["alpha beta gamma delta", "alpha beta gamma epsilon", "x y z"],
     )
     s64 = {r.id: (r.simhash_lo, r.simhash_hi) for r in simhash64(d).collect()}
@@ -423,7 +416,7 @@ def test_simhash128_slices_extend_simhash64(spark):
         assert all(0 <= v < 2**32 for v in s128[i])
 
 
-def test_simhash128_pairs_exact_recall_vs_brute(spark):
+def test_simhash128_pairs_exact_recall_vs_brute(spark, make_docs):
     """Pigeonhole blocking over the four slices must return EXACTLY the
     brute-force all-pairs Hamming result (recall 1.0 by disjoint
     blocks), for h values that leave slices uncovered (h=0: one block
@@ -436,7 +429,7 @@ def test_simhash128_pairs_exact_recall_vs_brute(spark):
     base = " ".join(
         w for w in "alpha beta gamma delta epsilon zeta".split() for _ in range(5)
     )
-    d = _docs(spark, [base, base + " lambda", base, "x y z w v u t s r q"])
+    d = make_docs([base, base + " lambda", base, "x y z w v u t s r q"])
     rows = {
         r.id: (r.simhash_s0, r.simhash_s1, r.simhash_s2, r.simhash_s3)
         for r in simhash128(d).collect()
@@ -467,7 +460,7 @@ def test_simhash128_pairs_exact_recall_vs_brute(spark):
         simhash128_pairs(d, max_hamming=128)
 
 
-def test_simhash128_bucket_valve_is_subset_of_exact(spark):
+def test_simhash128_bucket_valve_is_subset_of_exact(spark, make_docs):
     """max_bucket_size drops over-cap buckets from the candidate index:
     output must be a SUBSET of the exact result (never invents pairs),
     surviving pairs keep their exact hamming, and a cap of 1 on a
@@ -478,7 +471,7 @@ def test_simhash128_bucket_valve_is_subset_of_exact(spark):
     )
 
     same = ["alpha beta gamma delta epsilon"] * 6 + ["q r s t u v w"]
-    d = _docs(spark, same)
+    d = make_docs(same)
     exact = {
         (r.id_a, r.id_b): r.hamming
         for r in simhash128_pairs(d, max_hamming=4).collect()

@@ -6,7 +6,7 @@ The ratio (min(query) / probe-bracket-mean) is the drift-cancelled
 number the adjudicator decides on — diffing it across rounds replaces
 the manual ratio-test runs for first-pass triage. Queries flagged here
 (rel > TOL, the same 1.35x sub-second-noise bound
-tools/adjudicate_r10.py uses) still get the interleaved ratio test
+tools/adjudicate.py uses) still get the interleaved ratio test
 before being called regressions; everything under it is noise by the
 measured band.
 

@@ -2,7 +2,7 @@
 queries() entry and its oracle_sql() side-by-side, compare row count +
 column names + order-insensitive values.
 
-Usage: PYTHONPATH=/root/repo python tools/check_correctness.py [sf_dir] [names...]
+Usage: python tools/check_correctness.py [sf_dir] [names...]
 
 Env: CAF_CORRECTNESS_JSON=<path> additionally writes a machine-readable
 record in the driver's CORRECTNESS_r0N.json shape (one object per query
@@ -19,7 +19,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+if __name__ == "__main__":  # run as a script: import this checkout
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark

@@ -1,56 +1,41 @@
-"""r17 scaled-tier core-scaling probe (VERDICT r16 #8).
+"""Core-scaling probe at a 10x synthetic tier.
 
-The driver's 8-vs-32-core column at sf0.1 is launch-cost-bound: the
-queries that read ratio ~1 there (pricing_summary 0.98, sessionize
-1.03, dedup_minhash_lsh 1.08, flagship_tower 1.11, top_revenue 0.87,
-flagship_partitioned 0.78) are 0.3-1.8 s jobs whose wall-clock is
-dominated by job launch, not per-partition work — so the column says
-nothing about whether the plans parallelize. This probe re-runs the
-same queries at a 10x synthetic tier where there IS real work, so the
-parallelism claim carries evidence either way.
+At sf0.1 the 8-vs-32-core column is launch-cost-bound: most queries are
+0.3-1.8 s jobs whose wall clock is job launch, not per-partition work,
+so a ratio near 1 there says nothing about whether the plans
+parallelize. This re-runs them at ``REPLICAS``x the data, where there is
+real work (tier layout: tools/synth.py ``write_replica_tier``; probe
+data only, never the oracle or the bench).
 
-Tier construction (probe data only — never touches the oracle or the
-bench):
+Method: the tier is written once to ``TIER_DIR``; then tools/ab.py runs
+two child legs of this checkout that differ only in SPARK_GRAFT_CPUS
+(the bench contract knob, so the master is not hard-coded), interleaved,
+every probe query ``N_RUNS`` times per visit, min basis.
 
-- lineitem/orders: 10 key-offset replicas (l_orderkey/o_orderkey +=
-  r*stride; o_custkey unchanged so the customer dim stays 1x broadcast
-  size) — pricing_summary groups are unchanged, top_revenue's join
-  fan-out stays 1:1 per replica.
-- events: 10 replicas with user_id/event_id offset per replica, ts
-  unchanged — sessionize gets 10x independent user series;
-  flagship_partitioned/tower keep the SAME series keys (event_type),
-  so their per-series windows carry 10x rows — deliberately: that is
-  exactly the shape whose scaling the sf0.1 column could not see.
-- documents: 10 word-shuffled replicas (scale_probe's synth — vocab
-  preserved, shingle overlap destroyed so fuzzy-dedup candidate
-  structure stays sparse instead of exploding quadratically).
-
-Method: data written once to /tmp/sf10x_synth (parquet, deterministic);
-then alternating child processes pinned to local[32] / local[8] via
-SPARK_GRAFT_CPUS (the bench contract knob — master is NOT hard-coded),
-each timing every probe query N_RUNS times with the noop sink, caches
-cleared between runs. Interleaved c32/c8/c32/c8 rounds, min basis.
-
-Usage: PYTHONPATH=/root/repo python tools/core_scaling_probe.py
+Usage: python tools/core_scaling_probe.py [--out PATH]
 Env: N_ROUNDS (default 2 per core count), N_RUNS (default 2),
-     REPLICAS (default 10).
-Writes /tmp/core_scaling_probe.json; copy to CORE_SCALING_r17.json.
+     REPLICAS (default 10), TIER_DIR (default: a temp-dir path),
+     SPARK_GRAFT_SF_DIR (source tier, default sf0.1).
+Writes core_scaling_probe.json in the working directory unless --out.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import subprocess
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":
+    sys.path.insert(0, ROOT)
 
 N_ROUNDS = int(os.environ.get("N_ROUNDS", "2"))
 N_RUNS = int(os.environ.get("N_RUNS", "2"))
 REPLICAS = int(os.environ.get("REPLICAS", "10"))
-TIER_DIR = os.environ.get("TIER_DIR", "/tmp/sf10x_synth")
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+TIER_DIR = os.environ.get("TIER_DIR", os.path.join(tempfile.gettempdir(), "sf10x_synth"))
+CPUS = ("32", "8")
 
 QUERIES = [
     # floor-bound at sf0.1 (ratio ~1 in the driver's c8 column)
@@ -65,166 +50,51 @@ QUERIES = [
     "charlm_quality",
 ]
 
-STRIDE = 1_000_000_000
 
-
-def build_tier() -> None:
-    """Write the 10x synthetic tier once (skips if already present)."""
+def build_tier(sf_dir: str) -> None:
+    """Write the synthetic tier once (skipped if already present)."""
     if os.path.exists(os.path.join(TIER_DIR, "_DONE")):
         return
-    from pyspark.sql import functions as F
-
-    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import (
-        get_spark,
-    )
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
+    from tools.synth import write_replica_tier
 
     spark = get_spark("caf-scaling-tier-build")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def reps(df, cols_off):
-        parts = []
-        for r in range(REPLICAS):
-            p = df
-            for c in cols_off:
-                p = p.withColumn(c, F.col(c) + F.lit(r * STRIDE))
-            parts.append(p)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    rd = lambda t: spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet"))
-
-    reps(rd("lineitem"), ["l_orderkey"]).write.mode("overwrite").parquet(
-        os.path.join(TIER_DIR, "lineitem.parquet")
-    )
-    reps(rd("orders"), ["o_orderkey"]).write.mode("overwrite").parquet(
-        os.path.join(TIER_DIR, "orders.parquet")
-    )
-    reps(rd("events"), ["user_id", "event_id"]).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(TIER_DIR, "events.parquet"))
-    # documents: word-shuffled replicas (vocab kept, shingles destroyed)
-    d = rd("documents")
-    parts = []
-    for r in range(REPLICAS):
-        if r == 0:
-            parts.append(d)
-            continue
-        shuffled = d.select(
-            (F.col("doc_id") + F.lit(r * STRIDE)).alias("doc_id"),
-            F.array_join(
-                F.expr(
-                    "transform(split(text, ' '), "
-                    f"(w, i) -> element_at(split(text, ' '), "
-                    f"1 + CAST(pmod(xxhash64(w, i, {r}), "
-                    "size(split(text, ' '))) AS INT)))"
-                ),
-                " ",
-            ).alias("text"),
-            *[c for c in d.columns if c not in ("doc_id", "text")],
-        )
-        parts.append(shuffled)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(os.path.join(TIER_DIR, "documents.parquet"))
-    # small dims: copy-through so T() finds them
-    for t in ("customer", "nation", "region", "supplier", "part", "embeddings"):
-        rd(t).write.mode("overwrite").parquet(os.path.join(TIER_DIR, f"{t}.parquet"))
-    open(os.path.join(TIER_DIR, "_DONE"), "w").write("ok")
+    write_replica_tier(spark, sf_dir, TIER_DIR, REPLICAS)
+    with open(os.path.join(TIER_DIR, "_DONE"), "w") as f:
+        f.write("ok")
     spark.stop()
 
 
-CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, sys.argv[1])
-os.chdir(sys.argv[1])
-import __spark_entry__ as entrymod
-from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
-spark = get_spark("caf-core-scaling-leg")
-spark.sparkContext.setLogLevel("ERROR")
-tier = sys.argv[2]
-names = json.loads(sys.argv[3])
-n_runs = int(sys.argv[4])
-qs = entrymod.queries()
-# warm the JVM + python workers off the timed path
-qs["wateryear_rollup"](spark, tier).write.format("noop").mode("overwrite").save()
-spark.range(64).repartition(64).mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
-out = {}
-for name in names:
-    samples = []
-    for _ in range(n_runs):
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription("core-scaling: " + name)
-        t0 = time.perf_counter()
-        qs[name](spark, tier).write.format("noop").mode("overwrite").save()
-        samples.append(round(time.perf_counter() - t0, 3))
-    out[name] = samples
-print("CHILD_RESULT " + json.dumps(out))
-"""
-
-
 def main() -> None:
-    build_tier()
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    res: dict[str, dict[str, list[float]]] = {"32": {}, "8": {}}
-    for rnd in range(N_ROUNDS):
-        for cpus in ("32", "8"):
-            env = dict(os.environ)
-            env["SPARK_GRAFT_CPUS"] = cpus
-            env.pop("SPARK_GRAFT_MASTER", None)
-            p = subprocess.run(
-                [
-                    sys.executable,
-                    "-c",
-                    CHILD,
-                    repo,
-                    TIER_DIR,
-                    json.dumps(QUERIES),
-                    str(N_RUNS),
-                ],
-                env=env,
-                capture_output=True,
-                text=True,
-            )
-            line = [
-                ln
-                for ln in p.stdout.splitlines()
-                if ln.startswith("CHILD_RESULT ")
-            ]
-            if not line:
-                print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-                raise SystemExit(f"child (cpus={cpus}) produced no result")
-            got = json.loads(line[0][len("CHILD_RESULT "):])
-            for k, v in got.items():
-                res[cpus].setdefault(k, []).extend(v)
-            print(
-                json.dumps({"round": rnd, "cpus": cpus, "samples": got}),
-                flush=True,
-            )
+    ap = argparse.ArgumentParser(description="core-scaling probe at a synthetic tier")
+    ap.add_argument("--out", default="core_scaling_probe.json")
+    args = ap.parse_args()
+    from tools.ab import Child, default_sf_dir, interleave
 
-    table = {}
-    for name in QUERIES:
-        m32 = min(res["32"][name])
-        m8 = min(res["8"][name])
-        table[name] = {
-            "c32_min": m32,
-            "c8_min": m8,
-            "c8_over_c32": round(m8 / m32, 2),
-        }
+    build_tier(default_sf_dir())
+    legs = [
+        Child(f"c{c}", ROOT, QUERIES, TIER_DIR, env={"SPARK_GRAFT_CPUS": c, "SPARK_GRAFT_MASTER": None})
+        for c in CPUS
+    ]
+    rec = interleave(legs, N_ROUNDS, N_RUNS)
+    hi, lo = (rec["legs"][f"c{c}"]["cells"] for c in CPUS)
     out = {
         "tier": f"{REPLICAS}x key-offset/word-shuffled synth of sf0.1",
-        "method": (
-            "alternating child processes local[32]/local[8] via "
-            "SPARK_GRAFT_CPUS, noop sink, caches cleared, min basis"
-        ),
+        "method": f"child legs local[{CPUS[0]}]/local[{CPUS[1]}] via SPARK_GRAFT_CPUS; {rec['method']}",
         "n_rounds": N_ROUNDS,
         "n_runs_each": N_RUNS,
-        "queries": table,
-        "raw": res,
+        "queries": {
+            q: {
+                f"c{CPUS[0]}_min": hi[q]["min"],
+                f"c{CPUS[1]}_min": lo[q]["min"],
+                f"c{CPUS[1]}_over_c{CPUS[0]}": round(lo[q]["min"] / hi[q]["min"], 2),
+            }
+            for q in QUERIES
+        },
+        "raw": {c: {q: rec["legs"][f"c{c}"]["cells"][q]["samples"] for q in QUERIES} for c in CPUS},
     }
-    with open("/tmp/core_scaling_probe.json", "w") as f:
+    with open(args.out, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out, indent=1))
 

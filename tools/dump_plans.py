@@ -1,19 +1,37 @@
-"""Generate PLANS.md: a compact physical-plan audit of the headline
-queries — scans (ReadSchema / PushedFilters), exchange count, join
-strategies, and whole-stage-codegen spans. Run after plan-affecting
-changes: `PYTHONPATH=/root/repo python tools/dump_plans.py`."""
+"""Physical-plan audit of the bench queries.
+
+Default: regenerate PLANS.md, one summary row per headline + EXTRA query:
+scans (ReadSchema column count / PushedFilters), distinct exchanges,
+join strategies, and duplicate scans (source tables the OPTIMIZED plan
+references more than once — the signature of a broadcast build
+recomputing a whole corpus aggregation, the r14 q_oov_rate bug).
+
+A duplicate-scan entry is a prompt to read the executed plan, not a
+verdict: cached frames still print their original scans in the
+optimized plan though execution reads the InMemoryRelation once,
+iterative operators (kmeans_centroids) carry one scan per Lloyd round
+in the lineage, and AQE stage reuse dedupes identical subtrees only at
+execution.
+
+With ``--out DIR --tag TAG [names...]``: write ``.explain("formatted")``
+of each query (default: the whole bench set, HEADLINE + EXTRA_QUERIES)
+to DIR/<query>_<tag>.txt instead — an optimization round's before/after
+evidence files (plans/r17/*_before.txt, *_after.txt).
+
+Usage: python tools/dump_plans.py [--out plans/rNN --tag before|after] [names...]
+Env: SPARK_GRAFT_SF_DIR (default sf0.1).
+"""
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entrymod
-from bench import HEADLINE
-from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":
+    sys.path.insert(0, ROOT)
 
 # plan-audited alongside the bench headline: the curation/layout ops
 # whose scale story is about plan shape (broadcast sides, single
@@ -90,7 +108,8 @@ EXTRA = [
 
 
 def summarize(df) -> dict:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     scans = []
     for m in re.finditer(r"FileScan parquet \[([^\]]*)\][^\n]*", plan):
         line = m.group(0)
@@ -115,25 +134,27 @@ def summarize(df) -> dict:
         m.group(1)
         for m in re.finditer(r"\bExchange [^\n]*?\[plan_id=(\d+)\]", plan)
     }
+    tables = re.findall(r"/(\w+)\.parquet", qe.optimizedPlan().toString())
+    dup = {t: tables.count(t) for t in sorted(set(tables)) if tables.count(t) > 1}
     return {
         "scans": scans,
         "joins": joins,
         "exchanges": len(structural),
+        "dup_scans": dup,
     }
 
 
-def main() -> None:
-    spark = get_spark("plan-audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    qs = entrymod.queries()
+def write_summary(spark, qs, sf_dir: str) -> None:
+    from bench import HEADLINE
+
     lines = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
-        f"Generated by `tools/dump_plans.py` at `{sf_dir}`. Shows what the",
+        f"Generated by `tools/dump_plans.py` at `{os.path.basename(sf_dir.rstrip('/'))}`. Shows what the",
         "optimizer actually produced: per-scan projected column count and",
         "pushed filters (column pruning / predicate pushdown reaching the",
-        "parquet reader), shuffle (Exchange) count, and join strategies.",
+        "parquet reader), shuffle (Exchange) count, join strategies, and",
+        "duplicate scans (tables the optimized plan reads more than once).",
         "",
         "Note: the driver's sf parquet files each hold ONE row group, so",
         "scan-stage parallelism is 1 by data layout (a row group cannot be",
@@ -148,23 +169,59 @@ def main() -> None:
         "for the transition and is dropped from r9 on; compare r9 tables",
         "against r8's `exchanges` column, not `textual`.",
         "",
-        "| query | scans (cols, pushdown) | exchanges | joins |",
-        "|---|---|---|---|",
+        "| query | scans (cols, pushdown) | exchanges | joins | duplicate scans |",
+        "|---|---|---|---|---|",
     ]
     for name in HEADLINE + EXTRA:
         s = summarize(qs[name](spark, sf_dir))
         lines.append(
-            "| {} | {} | {} | {} |".format(
+            "| {} | {} | {} | {} | {} |".format(
                 name,
                 "; ".join(s["scans"]) or "—",
                 s["exchanges"],
                 ", ".join(s["joins"]) or "—",
+                ", ".join(f"{t}×{c}" for t, c in s["dup_scans"].items()) or "—",
             )
         )
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    out = os.path.join(ROOT, "PLANS.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {out}")
+
+
+def write_explains(spark, qs, sf_dir: str, out_dir: str, tag: str, names: list[str]) -> None:
+    from bench import EXTRA_QUERIES, HEADLINE
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names or (HEADLINE + EXTRA_QUERIES):
+        df = qs[name](spark, sf_dir)
+        txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+            f.write(txt)
+        print(f"wrote {name}_{tag}.txt")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description="physical-plan audit of the bench queries")
+    ap.add_argument("--out", help="write per-query explain files to this directory instead of PLANS.md")
+    ap.add_argument("--tag", default="before", help="file suffix with --out")
+    ap.add_argument("names", nargs="*", help="queries for --out (default: the bench set)")
+    args = ap.parse_args()
+    if args.names and not args.out:
+        ap.error("query names select explain files; they need --out")
+
+    import __spark_entry__ as entrymod
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
+    from tools.ab import default_sf_dir
+
+    spark = get_spark("plan-audit")
+    spark.sparkContext.setLogLevel("ERROR")
+    sf_dir = default_sf_dir()
+    qs = entrymod.queries()
+    if args.out:
+        write_explains(spark, qs, sf_dir, args.out, args.tag, args.names)
+    else:
+        write_summary(spark, qs, sf_dir)
 
 
 if __name__ == "__main__":

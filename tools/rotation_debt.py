@@ -22,11 +22,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entrymod
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":
+    sys.path.insert(0, REPO)
 
 
 def load_rounds() -> tuple[dict[str, int], dict[str, int], int]:
@@ -59,6 +57,8 @@ def load_rounds() -> tuple[dict[str, int], dict[str, int], int]:
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
+
     suggest = 50
     if "--suggest" in sys.argv:
         suggest = int(sys.argv[sys.argv.index("--suggest") + 1])
