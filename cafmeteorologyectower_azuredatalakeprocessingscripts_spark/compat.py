@@ -205,4 +205,7 @@ def AccessAzure(
         end_date=_parse_date(endDate),
         qc=QC,
         freq_minutes=_freq_minutes(Time),
+        # the reference reads production logger files: bind every
+        # column of the full layout, not the curated subset
+        full_layout=True,
     )

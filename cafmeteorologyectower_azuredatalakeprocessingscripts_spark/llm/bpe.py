@@ -21,11 +21,9 @@ distinct-word table is ~1e8 rows, not 1e12 docs). Each iteration is:
 4. every ``checkpoint_every`` merges, ``localCheckpoint()`` cuts the
    lineage so the plan does not grow linearly with merges.
 
-Registry note: iterative + driver-scalar-per-round makes this the
-documented non-SQL-expressible shape (a DuckDB oracle cannot replay a
-50-round loop in one query); it ships library + reference-checked
-tests in r13 and is the standing candidate for a weaker rows-only
-driver query in r14 if the freeze lifts.
+Registry note: the ``bpe_train_merges`` and ``bpe_train_hybrid``
+queries check both trainers against one DuckDB replay that unrolls the
+greedy loop into one query per merge (``_bpe_train_sql``).
 
 Scale: never an all-pairs or per-doc loop — the only per-row Python is
 the Arrow-batched merge rewriter over the word table. Tie-break
@@ -35,69 +33,96 @@ sequences.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _END = "</w>"
 
-_WORDS_SCHEMA = T.StructType(
-    [
-        T.StructField("syms", T.ArrayType(T.StringType())),
-        T.StructField("n", T.LongType()),
-    ]
-)
+_WORDS_SCHEMA = "syms array<string>, n long"
 
 
-def _word_table(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    """(symbol-array, count) over the corpus's distinct words: split on
-    whitespace, drop empties, one global aggregation. Symbols start as
-    single characters with an end-of-word marker."""
+def _word_histogram(
+    df: DataFrame,
+    text_col: str,
+    lowercase: bool,
+    min_word_freq: int = 1,
+    max_distinct_words: int | None = None,
+) -> DataFrame:
+    """(w, n) over the corpus's distinct words: split on whitespace,
+    drop empties, one global aggregation — the one corpus collapse every
+    trainer family starts from. ``min_word_freq`` drops rare words and
+    ``max_distinct_words`` keeps the top-N by (count desc, word asc): the
+    documented, deterministic histogram cutoffs (off by default)."""
     txt = F.col(text_col)
     if lowercase:
         txt = F.lower(txt)
-    words = (
+    hist = (
         df.select(F.explode(F.split(txt, r"\s+")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # chars + end marker, all JVM-side
-    return words.select(
-        F.concat(
-            F.split(F.col("w"), "(?!$)"), F.array(F.lit(_END))
-        ).alias("syms"),
-        "n",
+    if min_word_freq > 1:
+        hist = hist.filter(F.col("n") >= min_word_freq)
+    if max_distinct_words is not None:
+        hist = hist.orderBy(F.desc("n"), F.asc("w")).limit(max_distinct_words)
+    return hist
+
+
+def _bpe_symbols(w: Column) -> Column:
+    """Single characters plus the end-of-word marker, all JVM-side."""
+    return F.concat(F.split(w, "(?!$)"), F.array(F.lit(_END)))
+
+
+def _word_table(
+    df: DataFrame, text_col: str, lowercase: bool, symbols=_bpe_symbols
+) -> DataFrame:
+    """(symbol-array, count) over the corpus's distinct words; the
+    ``symbols`` column expression spells a word as its start symbols."""
+    return _word_histogram(df, text_col, lowercase).select(
+        symbols(F.col("w")).alias("syms"), "n"
     )
 
 
-def _top_pair(words: DataFrame) -> tuple[str, str, int] | None:
-    """One distributed pair-count round: the winning adjacent pair by
-    (count desc, left asc, right asc) — or None when no pair exists."""
+def _pair_counts(words: DataFrame) -> DataFrame:
+    """(left, right, freq): the word-count-weighted adjacent-pair
+    histogram of a word table, all JVM-side."""
     # the >=2 guard runs BEFORE the explode (ADVICE r13: filtering
     # after the select leaned on missing-reference resolution, and a
     # 1-symbol word would build the descending sequence(0,-1) first —
-    # vacuous today since every word is chars+'</w>', but the guard
-    # belongs where it protects)
-    pairs = words.filter(F.size("syms") >= 2).select(
-        "n",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("syms") - 2),
-                lambda i: F.struct(
-                    F.col("syms").getItem(i).alias("left"),
-                    F.col("syms").getItem(i + 1).alias("right"),
-                ),
-            )
-        ).alias("p"),
-    )
-    row = (
-        pairs.groupBy("p.left", "p.right")
+    # vacuous for BPE since every word is chars+'</w>', but a one-letter
+    # WordPiece word is a single symbol)
+    return (
+        words.filter(F.size("syms") >= 2)
+        .select(
+            "n",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(0), F.size("syms") - 2),
+                    lambda i: F.struct(
+                        F.col("syms").getItem(i).alias("left"),
+                        F.col("syms").getItem(i + 1).alias("right"),
+                    ),
+                )
+            ).alias("p"),
+        )
+        .groupBy("p.left", "p.right")
         .agg(F.sum("n").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("left"), F.asc("right"))
+    )
+
+
+def _best_pair(
+    pairs: DataFrame, by: str = "freq"
+) -> tuple[str, str, int] | None:
+    """The winning ``(left, right, freq)`` row by (``by`` desc, left
+    asc, right asc) — the pinned tie-break — or None when empty."""
+    row = (
+        pairs.orderBy(F.desc(by), F.asc("left"), F.asc("right"))
         .limit(1)
         .collect()
     )
@@ -107,13 +132,20 @@ def _top_pair(words: DataFrame) -> tuple[str, str, int] | None:
     return r["left"], r["right"], int(r["freq"])
 
 
+def _top_pair(words: DataFrame) -> tuple[str, str, int] | None:
+    """One distributed pair-count round: the winning adjacent pair by
+    (count desc, left asc, right asc) — or None when no pair exists."""
+    return _best_pair(_pair_counts(words))
+
+
 def _rewrite_syms(syms, pairs):
     """Apply ``pairs`` — ``(left, right, fused)`` triples IN ORDER —
     to one symbol list: each merge replaces adjacent (left, right)
     with the fused symbol, non-overlapping left-to-right. The ONE
-    rewrite loop shared by :func:`_apply_merges` and the fused
-    pair-count stage (:func:`_pair_counts_after_merges`), so the two
-    paths are merge-identical by construction."""
+    rewrite loop of every merge trainer: :func:`_apply_merges`, the
+    fused pair-count stage (:func:`_pair_counts_after_merges`) and the
+    BPE and WordPiece driver-side heap loops, so all paths are
+    merge-identical by construction."""
     syms = list(syms)
     for left, right, fused in pairs:
         res = []
@@ -131,12 +163,13 @@ def _rewrite_syms(syms, pairs):
 
 
 def _apply_merges(
-    words: DataFrame, merges: list[tuple[str, str]]
+    words: DataFrame, merges: list[tuple[str, str]], fuse=operator.add
 ) -> DataFrame:
     """Rewrite every symbol array applying ``merges`` IN ORDER, each
-    replacing adjacent (left, right) with the fused symbol,
-    non-overlapping left-to-right — Arrow-batched; there is no built-in
-    for adjacent-pair rewriting.
+    replacing adjacent (left, right) with ``fuse(left, right)`` (BPE:
+    ``left + right``; WordPiece: ``wordpiece._fuse``), non-overlapping
+    left-to-right — Arrow-batched; there is no built-in for
+    adjacent-pair rewriting.
 
     Takes the whole pending-merge list so the un-checkpointed tail of
     the training loop is ONE MapInPandas stage instead of a chain of
@@ -148,7 +181,7 @@ def _apply_merges(
     distributed identity tests)."""
     if not merges:
         return words
-    pairs = [(left, right, left + right) for left, right in merges]
+    pairs = [(left, right, fuse(left, right)) for left, right in merges]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -156,15 +189,6 @@ def _apply_merges(
             yield pd.DataFrame({"syms": out, "n": pdf["n"]})
 
     return words.mapInPandas(run, _WORDS_SCHEMA)
-
-
-_PAIR_COUNTS_SCHEMA = T.StructType(
-    [
-        T.StructField("left", T.StringType()),
-        T.StructField("right", T.StringType()),
-        T.StructField("freq", T.LongType()),
-    ]
-)
 
 
 def _pair_counts_after_merges(
@@ -204,7 +228,7 @@ def _pair_counts_after_merges(
                     }
                 )
 
-    return words.mapInPandas(run, _PAIR_COUNTS_SCHEMA)
+    return words.mapInPandas(run, "left string, right string, freq long")
 
 
 def _top_pair_after_merges(
@@ -218,24 +242,11 @@ def _top_pair_after_merges(
     Python crossing at all."""
     if not merges:
         return _top_pair(words)
-    row = (
+    return _best_pair(
         _pair_counts_after_merges(words, merges)
         .groupBy("left", "right")
         .agg(F.sum("freq").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc("left"), F.asc("right"))
-        .limit(1)
-        .collect()
     )
-    if not row:
-        return None
-    r = row[0]
-    return r["left"], r["right"], int(r["freq"])
-
-
-def _apply_merge(words: DataFrame, left: str, right: str) -> DataFrame:
-    """Single-merge form of :func:`_apply_merges` (kept for API and
-    test compatibility)."""
-    return _apply_merges(words, [(left, right)])
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -258,6 +269,67 @@ def _release_rdds(spark, ids: set[int]) -> None:
             rdd.unpersist(False)
 
 
+@contextmanager
+def _checkpoint_scope(spark):
+    """Yield ``checkpoint(frame)``: an eager ``localCheckpoint`` that
+    releases the checkpoints older than the one it just made (once the
+    new one materializes they are no longer inputs). On exit — also
+    after a raise — every checkpoint made inside the scope is released,
+    so the session's persistent-RDD set is left exactly as found."""
+    outside = _persistent_rdd_ids(spark)
+    held: set[int] = set()
+
+    def checkpoint(frame: DataFrame) -> DataFrame:
+        nonlocal held
+        out = frame.localCheckpoint()
+        now = _persistent_rdd_ids(spark) - outside
+        stale = held & now
+        _release_rdds(spark, stale)
+        held = now - stale
+        return out
+
+    try:
+        yield checkpoint
+    finally:
+        _release_rdds(spark, _persistent_rdd_ids(spark) - outside)
+
+
+def _merge_train(
+    base: DataFrame,
+    n_merges: int,
+    min_freq: int,
+    checkpoint_every: int,
+    top_pair,
+    fuse,
+) -> list[tuple[int, str, str, int]]:
+    """The per-merge distributed loop of :func:`bpe_train` and
+    ``wordpiece.wordpiece_train``: ``top_pair(words, pending)`` scores
+    the word table with the un-checkpointed ``pending`` merges applied
+    and returns the winning ``(left, right, freq)`` or None; the loop
+    stops when the winner's frequency drops below ``min_freq``. Every
+    ``checkpoint_every`` merges the pending tail is applied (with
+    ``fuse``) and checkpointed, so the plan does not grow with the
+    merge count."""
+    if n_merges < 1:
+        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    with _checkpoint_scope(base.sparkSession) as checkpoint:
+        base = checkpoint(base)
+        pending: list[tuple[str, str]] = []
+        merges: list[tuple[int, str, str, int]] = []
+        for k in range(n_merges):
+            best = top_pair(base, pending)
+            if best is None or best[2] < min_freq:
+                break
+            left, right, freq = best
+            merges.append((k, left, right, freq))
+            pending.append((left, right))
+            if (k + 1) % checkpoint_every == 0:
+                # materialize the pending tail before the plan grows
+                base = checkpoint(_apply_merges(base, pending, fuse))
+                pending = []
+        return merges
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
@@ -277,46 +349,21 @@ def bpe_train(
     per-window Python rewrite work is O(checkpoint_every²) passes per
     word (ADVICE r16 — the old lazy chain recomputed the same work;
     keep the value modest rather than raising it substantially, the
-    r17 sweep measured the budget-10 optimum at the default)."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    spark = df.sparkSession
-    outside = _persistent_rdd_ids(spark)
-    held: set[int] = set()
+    r17 sweep measured the budget-10 optimum at the default).
 
-    def checkpoint(frame: DataFrame) -> DataFrame:
-        nonlocal held
-        out = frame.localCheckpoint()  # eager: once this materializes,
-        now = _persistent_rdd_ids(spark) - outside
-        stale = held & now  # ... the older checkpoints are no longer inputs
-        _release_rdds(spark, stale)
-        held = now - stale
-        return out
-
-    try:
-        base = checkpoint(_word_table(df, text_col, lowercase))
-        pending: list[tuple[str, str]] = []
-        merges: list[tuple[int, str, str, int]] = []
-        for k in range(n_merges):
-            # the un-checkpointed merge tail rides as ONE fused Python
-            # stage over the last checkpoint (r16 — see _apply_merges),
-            # and since r17 the adjacent-pair count itself is folded
-            # into that same stage (_pair_counts_after_merges): only a
-            # histogram crosses back to the JVM, not the rewritten
-            # symbol arrays + their explode
-            best = _top_pair_after_merges(base, pending)
-            if best is None or best[2] < min_freq:
-                break
-            left, right, freq = best
-            merges.append((k, left, right, freq))
-            pending.append((left, right))
-            if (k + 1) % checkpoint_every == 0:
-                # materialize the pending tail before the plan grows
-                base = checkpoint(_apply_merges(base, pending))
-                pending = []
-        return merges
-    finally:
-        _release_rdds(spark, _persistent_rdd_ids(spark) - outside)
+    The un-checkpointed merge tail rides as ONE fused Python stage over
+    the last checkpoint (r16 — see _apply_merges), and since r17 the
+    adjacent-pair count itself is folded into that same stage
+    (_top_pair_after_merges): only a histogram crosses back to the JVM,
+    not the rewritten symbol arrays + their explode."""
+    return _merge_train(
+        _word_table(df, text_col, lowercase),
+        n_merges,
+        min_freq,
+        checkpoint_every,
+        _top_pair_after_merges,
+        operator.add,
+    )
 
 
 def bpe_train_hybrid(
@@ -357,23 +404,31 @@ def bpe_train_hybrid(
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
-    hist = (
-        df.select(F.explode(F.split(txt, r"\s+")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    if min_word_freq > 1:
-        hist = hist.filter(F.col("n") >= min_word_freq)
-    if max_distinct_words is not None:
-        hist = hist.orderBy(F.desc("n"), F.asc("w")).limit(max_distinct_words)
-    pdf = hist.toPandas()
+    hist = _word_histogram(
+        df, text_col, lowercase, min_word_freq, max_distinct_words
+    ).toPandas()
     return _train_from_histogram(
-        list(pdf["w"]), [int(x) for x in pdf["n"]], n_merges, min_freq
+        list(hist["w"]), [int(x) for x in hist["n"]], n_merges, min_freq
     )
+
+
+def _check_counts(
+    hist_counts: list[int], harm: str = "desync the incremental pair bookkeeping"
+) -> None:
+    """Precondition of every driver-side trainer (ADVICE r15 #2): every
+    histogram count must be >= 1. The heap loops' retraction bookkeeping
+    (``del pair_count[p]`` once a running total hits <= 0) is only sound
+    under that invariant — a zero/negative count would desync
+    ``pair_words`` from ``pair_count`` and silently skip rewrites — and
+    unigram EM weights expected counts by it. Spark ``groupBy`` counts
+    and ``Counter`` values always satisfy it; guard the public boundary
+    so a direct caller cannot violate it silently."""
+    for c in hist_counts:
+        if c < 1:
+            raise ValueError(
+                f"histogram counts must all be >= 1, got {c}; "
+                f"zero/negative counts would {harm}"
+            )
 
 
 def _train_from_histogram(
@@ -388,24 +443,10 @@ def _train_from_histogram(
     reference with no Spark in the loop. Same pinned tie-break
     (freq desc, left asc, right asc), same non-overlapping
     left-to-right merge application, same ``min_freq`` stop as
-    :func:`bpe_train`.
-
-    Precondition (ADVICE r15 #2): every histogram count must be >= 1.
-    The retraction bookkeeping below (``del pair_count[p]`` once a
-    running total hits <= 0) is only sound under that invariant — a
-    zero/negative count would desync ``pair_words`` from
-    ``pair_count`` and silently skip rewrites. Spark ``groupBy``
-    counts and ``Counter`` values always satisfy it; guard the public
-    boundary so a direct caller cannot violate it silently."""
+    :func:`bpe_train`. Precondition: :func:`_check_counts`."""
     import heapq
 
-    for c in hist_counts:
-        if c < 1:
-            raise ValueError(
-                f"histogram counts must all be >= 1, got {c}; "
-                "zero/negative counts would desync the incremental "
-                "pair bookkeeping"
-            )
+    _check_counts(hist_counts)
 
     words: list[list[str]] = [list(w) + [_END] for w in hist_words]
     counts: list[int] = list(hist_counts)
@@ -456,17 +497,7 @@ def _train_from_histogram(
                 else:
                     pair_words[p].discard(wi)
                 touched.add(p)
-            res: list[str] = []
-            i = 0
-            ln = len(syms)
-            while i < ln:
-                if i + 1 < ln and syms[i] == left and syms[i + 1] == right:
-                    res.append(fused)
-                    i += 2
-                else:
-                    res.append(syms[i])
-                    i += 1
-            words[wi] = res
+            res = words[wi] = _rewrite_syms(syms, ((left, right, fused),))
             for i in range(len(res) - 1):
                 p = (res[i], res[i + 1])
                 pair_count[p] = pair_count.get(p, 0) + cw
@@ -508,13 +539,6 @@ def bpe_apply(
     merge list is vocabulary-sized — broadcast-small by construction);
     per-word segmentation is memoized per batch since corpora repeat
     words heavily."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_tokens", T.IntegerType()),
-            T.StructField("n_words", T.IntegerType()),
-        ]
-    )
     df = df.select(id_col, text_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -538,4 +562,4 @@ def bpe_apply(
                 nw.append(len(words))
             yield pd.DataFrame({"doc_id": ids, "n_tokens": ntok, "n_words": nw})
 
-    return df.mapInPandas(run, schema)
+    return df.mapInPandas(run, "doc_id long, n_tokens int, n_words int")

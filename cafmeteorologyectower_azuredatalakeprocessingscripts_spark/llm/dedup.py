@@ -1123,20 +1123,15 @@ def simhash64_blocks(max_hamming: int) -> list[tuple[str, int, int]]:
     return _slice_blocks(_SIMHASH64_SLICES, max_hamming)
 
 
-def _pigeonhole_pairs(
-    sig: DataFrame,
-    slice_cols: list[str],
-    blocks: list[tuple[str, int, int]],
-    max_hamming: int,
-    max_bucket_size: int | None,
+def pigeonhole_tags(
+    sig: DataFrame, blocks: list[tuple[str, int, int]], keep: list[str]
 ) -> DataFrame:
-    """Shared pigeonhole pair join for the multi-slice SimHash families:
-    tag each signature with its (blk, val) keys, optionally drop
-    over-cap buckets (the occupancy valve), self-equi-join on the key,
-    dedup candidates, exact-filter on the summed per-slice Hamming."""
-    tagged = sig.select(
-        "id",
-        *slice_cols,
+    """``keep`` plus one (blk, val) row per pigeonhole block of each
+    signature row: block ``j`` = ``(col, s, w)`` keys on bits
+    ``[s, s + w)`` of ``col``. The bucket key of the pair join below and
+    of the valve probe's occupancy count."""
+    return sig.select(
+        *keep,
         F.explode(
             F.array(
                 *[
@@ -1150,9 +1145,21 @@ def _pigeonhole_pairs(
                 ]
             )
         ).alias("b"),
-    ).select(
-        "id", *slice_cols, F.col("b.blk").alias("blk"), F.col("b.val").alias("val")
-    )
+    ).select(*keep, F.col("b.blk").alias("blk"), F.col("b.val").alias("val"))
+
+
+def _pigeonhole_pairs(
+    sig: DataFrame,
+    slice_cols: list[str],
+    blocks: list[tuple[str, int, int]],
+    max_hamming: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Shared pigeonhole pair join for the multi-slice SimHash families:
+    tag each signature with its (blk, val) keys, optionally drop
+    over-cap buckets (the occupancy valve), self-equi-join on the key,
+    dedup candidates, exact-filter on the summed per-slice Hamming."""
+    tagged = pigeonhole_tags(sig, blocks, ["id", *slice_cols])
     if max_bucket_size is not None:
         # occupancy valve as a count-over-window on the join key: the
         # window's (blk, val) exchange is the SAME clustering the

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sql import plan_size_bytes
 from .bmp import BmpUnsupported, decode_bmp, encode_bmp, is_bmp
 from .gif import GifUnsupported, decode_gif, encode_gif, is_gif
 from .aiff import AiffUnsupported, decode_aiff, encode_aiff, is_aiff
@@ -705,9 +706,9 @@ def sized_codec_partitions(df: DataFrame, bytes_per_task: int) -> int | None:
     count is only computed once the sized width beats 1, so the cheap
     exits skip the RDD conversion entirely."""
     try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        est = plan_size_bytes(df)
+        if est is None:
+            return None
         cores = df.sparkSession.sparkContext.defaultParallelism
         width = min(cores, max(1, -(-est // bytes_per_task)))
         if width <= 1 or width <= df.rdd.getNumPartitions():

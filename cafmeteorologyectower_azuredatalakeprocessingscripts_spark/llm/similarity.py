@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.sql import quote_ident
+from ..functions.sql import plan_size_bytes, quote_ident
 from .dedup import md5_int
 from ..operators.skew import repartition_pinned
 
@@ -734,7 +734,7 @@ def embed_neardup_pairs(
             # upstream pass before the real job, re-run per call).
             n_est = approx_count
             if n_est is None:
-                est = _plan_size_bytes(df)
+                est = plan_size_bytes(df)
                 if est is not None:
                     # the vector column dominates the row: dim doubles
                     # (8B each in the optimized plan) + id/overhead
@@ -847,25 +847,6 @@ _EXPR_ASSIGN_WARN_BYTES_K = 4_000_000_000
 _EAGER_COUNT_WARN_BYTES = 64_000_000
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst ``sizeInBytes`` estimate of ``df``, or ``None`` when the
-    stats are unavailable/unknown. Plan-side only — no job, no count."""
-    try:
-        # py4j maps scala.math.BigInt to a Python int on some builds
-        # and to a JavaObject on others — str() handles both (the
-        # .toString() form raised AttributeError on the int mapping and
-        # silently disabled the byte trigger; caught by the r9 gapfill
-        # guard's test).
-        est_bytes = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if est_bytes >= (1 << 62):  # Long.MaxValue-ish = stats unknown
-            return None
-        return est_bytes
-    except Exception:  # stats unavailable
-        return None
-
-
 _SAMPLE_PARTS = 4  # partitions counted by _sampled_count_estimate
 _SAMPLE_ROWS_CAP = 1 << 22  # per-partition row cap bounding the job
 
@@ -911,7 +892,7 @@ def _warn_if_expr_assign_quadratic(corpus: DataFrame, n_centroids: int) -> None:
     """Loud foot-gun guard (VERDICT r7 #6): the default ``assign='expr'``
     is the oracle-exact path, NOT the scale path. Estimation stays plan
     side (Catalyst ``sizeInBytes``) — no job, no count."""
-    est_bytes = _plan_size_bytes(corpus)
+    est_bytes = plan_size_bytes(corpus)
     if n_centroids >= _EXPR_ASSIGN_WARN_K or (
         est_bytes is not None
         and est_bytes * n_centroids > _EXPR_ASSIGN_WARN_BYTES_K

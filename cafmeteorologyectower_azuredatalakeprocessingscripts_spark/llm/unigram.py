@@ -49,7 +49,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .bpe import _check_counts, _checkpoint_scope, _word_histogram
 
 _QUANT = 1e-9
 _NEG_INF = float("-inf")
@@ -57,18 +58,6 @@ _NEG_INF = float("-inf")
 
 def _quantize(x: float) -> float:
     return round(x / _QUANT) * _QUANT
-
-
-def _word_hist(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
-    return (
-        df.select(F.explode(F.split(txt, r"\s+")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def seed_pieces(
@@ -172,13 +161,6 @@ def _em_counts_spark(
     vocab-sized), then one piece-keyed aggregation. The per-partition
     float-sum order is absorbed by the _QUANT rounding AFTER the
     global sum."""
-    schema = T.StructType(
-        [
-            T.StructField("piece", T.StringType()),
-            T.StructField("cnt", T.DoubleType()),
-        ]
-    )
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             acc: dict[str, float] = {}
@@ -190,7 +172,7 @@ def _em_counts_spark(
                 )
 
     rows = (
-        words.mapInPandas(run, schema)
+        words.mapInPandas(run, "piece string, cnt double")
         .groupBy("piece")
         .agg(F.sum("cnt").alias("cnt"))
         .collect()
@@ -343,20 +325,16 @@ def unigram_train(
     expected counts) reaches the driver, so unlike the BPE/WordPiece
     hybrids there is NO histogram collect at all. The word table is
     localCheckpointed once (it feeds every E-step) and the storage is
-    released before returning (the ``bpe_train`` session contract).
+    released before returning (the ``bpe._checkpoint_scope`` session
+    contract).
     ``min_word_freq`` / ``max_distinct_words`` are the same documented
     histogram cutoffs as the hybrid trainers."""
-    from .bpe import _persistent_rdd_ids, _release_rdds
-
-    hist = _word_hist(df, text_col, lowercase)
-    if min_word_freq > 1:
-        hist = hist.filter(F.col("n") >= min_word_freq)
-    if max_distinct_words is not None:
-        hist = hist.orderBy(F.desc("n"), F.asc("w")).limit(max_distinct_words)
-    spark = df.sparkSession
-    outside = _persistent_rdd_ids(spark)
-    try:
-        words = hist.localCheckpoint()
+    with _checkpoint_scope(df.sparkSession) as checkpoint:
+        words = checkpoint(
+            _word_histogram(
+                df, text_col, lowercase, min_word_freq, max_distinct_words
+            )
+        )
         pieces = _seed_pieces_spark(words, seed_size, max_piece_len)
 
         def em(logp, max_len):
@@ -365,8 +343,6 @@ def unigram_train(
         return _train(
             em, pieces, vocab_size, n_em_iters, shrink_factor, max_piece_len
         )
-    finally:
-        _release_rdds(spark, _persistent_rdd_ids(spark) - outside)
 
 
 def unigram_train_local(
@@ -382,16 +358,8 @@ def unigram_train_local(
     Spark-free half for property tests and for corpora whose
     histogram is already in hand. Identical results to
     :func:`unigram_train` under the quantization contract.
-
-    Precondition (shared with the hybrid trainers): every histogram
-    count must be >= 1."""
-    for c in hist_counts:
-        if c < 1:
-            raise ValueError(
-                f"histogram counts must all be >= 1, got {c}; "
-                "zero/negative counts would corrupt the expected-count "
-                "weighting"
-            )
+    Precondition: ``bpe._check_counts``."""
+    _check_counts(hist_counts, "corrupt the expected-count weighting")
 
     pieces = seed_pieces(hist_words, hist_counts, seed_size, max_piece_len)
 

@@ -25,8 +25,8 @@ Determinism pins (the cross-engine contract, mirroring ``bpe``):
   and Python's float yields the identical bit pattern, so the
   distributed and hybrid paths cannot disagree on rounding;
 - tie-break: score desc, then (left, right) ascending binary compare;
-- merge application is non-overlapping left-to-right (shared
-  ``bpe._apply_merge`` machinery semantics);
+- merge application is non-overlapping left-to-right (the one
+  ``bpe._rewrite_syms`` loop, with :func:`_fuse` as the fusion rule);
 - the stop rule is on the winning pair's raw FREQUENCY
   (``min_freq``), not its score — a score threshold would couple the
   stop to corpus-size-dependent unigram mass.
@@ -34,7 +34,8 @@ Determinism pins (the cross-engine contract, mirroring ``bpe``):
 Same two execution shapes as BPE, same scale split:
 
 - :func:`wordpiece_train` — one Spark job per merge (pair counts +
-  symbol counts + broadcast join for the score); the audit path.
+  symbol counts + broadcast join for the score); the audit path, run
+  by the shared ``bpe._merge_train`` loop.
 - :func:`wordpiece_train_hybrid` — ONE distributed (word, count)
   histogram, then a driver-side merge loop with incremental pair AND
   unigram maintenance (lazy-deletion heap; a merge only re-scores
@@ -50,11 +51,19 @@ path) or the vocabulary-sized driver loop (hybrid path).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bpe import _WORDS_SCHEMA, _persistent_rdd_ids, _release_rdds
+from .bpe import (
+    _apply_merges,
+    _best_pair,
+    _check_counts,
+    _merge_train,
+    _pair_counts,
+    _rewrite_syms,
+    _word_histogram,
+    _word_table,
+)
 
 _CONT = "##"
 
@@ -69,62 +78,39 @@ def _wp_syms(word: str) -> list[str]:
     return [word[0]] + [_CONT + c for c in word[1:]]
 
 
-def _wp_word_table(df: DataFrame, text_col: str, lowercase: bool) -> DataFrame:
-    """(symbol-array, count) over the corpus's distinct words, symbols
-    in the ##-continuation convention — all JVM-side."""
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
-    words = (
-        df.select(F.explode(F.split(txt, r"\s+")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    chars = F.split(F.col("w"), "(?!$)")
-    return words.select(
-        F.concat(
-            F.slice(chars, 1, 1),
-            F.transform(
-                F.slice(chars, 2, F.greatest(F.size(chars) - 1, F.lit(0))),
-                lambda c: F.concat(F.lit(_CONT), c),
-            ),
-        ).alias("syms"),
-        "n",
+def _wp_symbols(w: Column) -> Column:
+    """The word's characters in the ##-continuation convention, all
+    JVM-side."""
+    chars = F.split(w, "(?!$)")
+    return F.concat(
+        F.slice(chars, 1, 1),
+        F.transform(
+            F.slice(chars, 2, F.greatest(F.size(chars) - 1, F.lit(0))),
+            lambda c: F.concat(F.lit(_CONT), c),
+        ),
     )
 
 
-def _top_scored_pair(words: DataFrame) -> tuple[str, str, int] | None:
-    """One distributed scoring round: pair frequencies and symbol
-    unigram frequencies from the same word table, score =
+def _top_scored_pair(
+    words: DataFrame, merges: list[tuple[str, str]]
+) -> tuple[str, str, int] | None:
+    """One distributed scoring round over the word table with the
+    pending ``merges`` applied (ONE fused Python stage for the whole
+    un-checkpointed tail, r16): pair frequencies and symbol unigram
+    frequencies from the same rewritten table, score =
     pair/(left_uni*right_uni) as DOUBLE, winner by (score desc, left
     asc, right asc). Returns (left, right, pair_freq) or None.
 
     The unigram side is vocabulary-sized, so both score joins are
     broadcast — no shuffle beyond the two aggregations."""
-    pairs = (
-        words.filter(F.size("syms") >= 2)
-        .select(
-            "n",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("syms") - 2),
-                    lambda i: F.struct(
-                        F.col("syms").getItem(i).alias("left"),
-                        F.col("syms").getItem(i + 1).alias("right"),
-                    ),
-                )
-            ).alias("p"),
-        )
-        .groupBy("p.left", "p.right")
-        .agg(F.sum("n").alias("freq"))
-    )
+    words = _apply_merges(words, merges, _fuse)
+    pairs = _pair_counts(words)
     unigrams = (
         words.select("n", F.explode("syms").alias("s"))
         .groupBy("s")
         .agg(F.sum("n").alias("uni"))
     )
-    row = (
+    return _best_pair(
         pairs.join(
             F.broadcast(unigrams.withColumnRenamed("uni", "l_uni")),
             pairs["left"] == F.col("s"),
@@ -143,63 +129,9 @@ def _top_scored_pair(words: DataFrame) -> tuple[str, str, int] | None:
                 F.col("freq").cast("double")
                 / (F.col("l_uni") * F.col("r_uni")).cast("double")
             ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("left"), F.asc("right"))
-        .limit(1)
-        .collect()
+        ),
+        "score",
     )
-    if not row:
-        return None
-    r = row[0]
-    return r["left"], r["right"], int(r["freq"])
-
-
-def _apply_wp_merges(
-    words: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """Non-overlapping left-to-right rewrite applying ``merges`` IN
-    ORDER, each fusing adjacent (left, right) into the ##-stripped
-    fused symbol — Arrow-batched like ``bpe._apply_merges`` (the
-    fusion rule differs, the scan is the same). Takes the whole
-    pending list so the un-checkpointed merge tail is ONE Python
-    stage, not a chain of crossings (r16, the bpe fusion)."""
-    from collections.abc import Iterator
-
-    if not merges:
-        return words
-    pairs = [(left, right, _fuse(left, right)) for left, right in merges]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for syms in pdf["syms"]:
-                syms = list(syms)
-                for left, right, fused in pairs:
-                    res = []
-                    i = 0
-                    ln = len(syms)
-                    while i < ln:
-                        if (
-                            i + 1 < ln
-                            and syms[i] == left
-                            and syms[i + 1] == right
-                        ):
-                            res.append(fused)
-                            i += 2
-                        else:
-                            res.append(syms[i])
-                            i += 1
-                    syms = res
-                out.append(syms)
-            yield pd.DataFrame({"syms": out, "n": pdf["n"]})
-
-    return words.mapInPandas(run, _WORDS_SCHEMA)
-
-
-def _apply_wp_merge(words: DataFrame, left: str, right: str) -> DataFrame:
-    """Single-merge form of :func:`_apply_wp_merges` (kept for API and
-    test compatibility)."""
-    return _apply_wp_merges(words, [(left, right)])
 
 
 def wordpiece_train(
@@ -215,40 +147,15 @@ def wordpiece_train(
     Stops early when the winning pair's raw frequency drops below
     ``min_freq``. Checkpoint storage is released before returning —
     the session's persistent-RDD set is left exactly as found (the
-    ``bpe_train`` contract)."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    spark = df.sparkSession
-    outside = _persistent_rdd_ids(spark)
-    held: set[int] = set()
-
-    def checkpoint(frame: DataFrame) -> DataFrame:
-        nonlocal held
-        out = frame.localCheckpoint()
-        now = _persistent_rdd_ids(spark) - outside
-        stale = held & now
-        _release_rdds(spark, stale)
-        held = now - stale
-        return out
-
-    try:
-        base = checkpoint(_wp_word_table(df, text_col, lowercase))
-        pending: list[tuple[str, str]] = []
-        merges: list[tuple[int, str, str, int]] = []
-        for k in range(n_merges):
-            # un-checkpointed tail as ONE fused Python stage (r16)
-            best = _top_scored_pair(_apply_wp_merges(base, pending))
-            if best is None or best[2] < min_freq:
-                break
-            left, right, freq = best
-            merges.append((k, left, right, freq))
-            pending.append((left, right))
-            if (k + 1) % checkpoint_every == 0:
-                base = checkpoint(_apply_wp_merges(base, pending))
-                pending = []
-        return merges
-    finally:
-        _release_rdds(spark, _persistent_rdd_ids(spark) - outside)
+    ``bpe._checkpoint_scope`` contract)."""
+    return _merge_train(
+        _word_table(df, text_col, lowercase, _wp_symbols),
+        n_merges,
+        min_freq,
+        checkpoint_every,
+        _top_scored_pair,
+        _fuse,
+    )
 
 
 def wordpiece_train_hybrid(
@@ -269,22 +176,11 @@ def wordpiece_train_hybrid(
     words would have contributed pair or unigram mass."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
-    hist = (
-        df.select(F.explode(F.split(txt, r"\s+")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    if min_word_freq > 1:
-        hist = hist.filter(F.col("n") >= min_word_freq)
-    if max_distinct_words is not None:
-        hist = hist.orderBy(F.desc("n"), F.asc("w")).limit(max_distinct_words)
-    pdf = hist.toPandas()
+    hist = _word_histogram(
+        df, text_col, lowercase, min_word_freq, max_distinct_words
+    ).toPandas()
     return _wordpiece_from_histogram(
-        list(pdf["w"]), [int(x) for x in pdf["n"]], n_merges, min_freq
+        list(hist["w"]), [int(x) for x in hist["n"]], n_merges, min_freq
     )
 
 
@@ -303,19 +199,11 @@ def _wordpiece_from_histogram(
     rewrite or containing one of those three symbols are re-scored
     (``sym_pairs`` index). Heap entries snapshot (pair, left-uni,
     right-uni) counts and are dropped as stale when any differ —
-    lazy deletion, no in-heap updates.
-
-    Precondition (shared with ``bpe._train_from_histogram``): every
-    histogram count must be >= 1."""
+    lazy deletion, no in-heap updates. Precondition:
+    ``bpe._check_counts``."""
     import heapq
 
-    for c in hist_counts:
-        if c < 1:
-            raise ValueError(
-                f"histogram counts must all be >= 1, got {c}; "
-                "zero/negative counts would desync the incremental "
-                "pair bookkeeping"
-            )
+    _check_counts(hist_counts)
 
     words: list[list[str]] = [_wp_syms(w) for w in hist_words]
     counts: list[int] = list(hist_counts)
@@ -398,19 +286,9 @@ def _wordpiece_from_histogram(
                 else:
                     pair_words[p].discard(wi)
                 touched.add(p)
-            res: list[str] = []
-            i = 0
-            ln = len(syms)
-            n_fused = 0
-            while i < ln:
-                if i + 1 < ln and syms[i] == left and syms[i + 1] == right:
-                    res.append(fused)
-                    n_fused += 1
-                    i += 2
-                else:
-                    res.append(syms[i])
-                    i += 1
-            words[wi] = res
+            res = words[wi] = _rewrite_syms(syms, ((left, right, fused),))
+            # each fusion shortens the word by one symbol
+            n_fused = len(syms) - len(res)
             if n_fused:
                 d = n_fused * cw
                 uni_count[left] = uni_count.get(left, 0) - d

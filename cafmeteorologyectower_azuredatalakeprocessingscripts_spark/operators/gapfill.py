@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sql import plan_size_bytes
 from ..functions.time import day_ceil, day_floor
 from .dedup import dedup_keep_richest
 
@@ -35,17 +36,9 @@ def _warn_if_global_window(df: DataFrame, op: str) -> None:
     """Loud foot-gun guard (VERDICT r8 #5, same pattern as semdedup's
     ``_warn_if_expr_assign_quadratic``): estimation stays plan-side
     (Catalyst ``sizeInBytes``) — no job, no count."""
-    try:
-        # py4j maps scala.math.BigInt to a Python int on some builds
-        # and to a JavaObject on others — str() handles both.
-        est_bytes = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        if est_bytes >= (1 << 62):  # Long.MaxValue-ish = stats unknown
-            return
-    except Exception:  # stats unavailable — stay silent, not wrong
-        return
-    if est_bytes > _GLOBAL_WINDOW_WARN_BYTES:
+    est_bytes = plan_size_bytes(df)
+    # stats unavailable or unknown — stay silent, not wrong
+    if est_bytes is not None and est_bytes > _GLOBAL_WINDOW_WARN_BYTES:
         warnings.warn(
             f"{op} with key_col=None plans a whole-frame single-"
             f"partition window (est. input ~{est_bytes} bytes): the "

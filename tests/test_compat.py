@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark import compat
 from tests.test_driver_job import _COLS, _toa5
+from tests.test_full_layout_qc import _write_fixture
 
 
 def test_fast_read_hdr4_with_indx_fill(spark, tmp_path):
@@ -81,37 +82,71 @@ def test_metqc_met_naming(spark):
     assert "MSLP" in out.columns
 
 
-def test_access_azure_reference_call_shape(spark, tmp_path):
-    """The reference driver's main call (src/LTARCAFTowerReport.py:82:
-    ``ADLA.AccessAzure(Sites[k], col, Time, access, CEF, QC=False)``)
-    works verbatim against a local raw dir — download loop replaced by a
-    direct glob read, window/QC/save semantics via run_tower_job."""
-    import os
-
+def _full_layout_raw(tmp_path):
+    """A raw dir holding one full-width (243-column) V40826 Flux day
+    file, as the loggers write it, and the workbook access dict; returns
+    (dir, access, written values)."""
     d = tmp_path / "raw"
-    os.makedirs(d)
-    _toa5(str(d / "CookEast_Flux_2022_01_01_0000.dat"), 1, 1000, 48)
+    d.mkdir()
+    kept = _write_fixture(str(d / "CookEast_Flux_2022_06_01_0000.dat"))
     access = {
         "Flux": {"grade": 7, "LE_B": -150, "H_B": -150, "F_B": -60,
                  "ustar": 0, "Ver": "V40826", "UPLOAD": str(tmp_path / "up")},
         "Met": {"LE_B": 1000, "H_B": 1000, "F_B": 20},
         "Val_3": {}, "Val_4": {},
     }
+    return d, access, kept
+
+
+def test_access_azure_reference_call_shape(spark, tmp_path):
+    """The reference driver's main call (src/LTARCAFTowerReport.py:82:
+    ``ADLA.AccessAzure(Sites[k], col, Time, access, CEF, QC=False)``)
+    works verbatim against a local raw dir — download loop replaced by a
+    direct glob read, window/QC/save semantics via run_tower_job."""
+    d, access, _ = _full_layout_raw(tmp_path)
     df = compat.AccessAzure(
         "CookEast", "Flux", "30min", access, str(d), QC=False,
-        startDate="2022-01-01", endDate="1/31/2022",
+        startDate="2022-06-01", endDate="6/30/2022",
         spark=spark, save=False,
     )
     assert df.count() == 48 + 1  # day spine + midnight tick
     assert "H_Flags" not in df.columns  # QC=False honored
     qc = compat.AccessAzure(
         "CookEast", "Flux", "30min", access, str(d),
-        startDate=dt.date(2022, 1, 1), endDate=dt.date(2022, 1, 31),
+        startDate=dt.date(2022, 6, 1), endDate=dt.date(2022, 6, 30),
         spark=spark, save=True, out_path=str(tmp_path / "out"),
     )
     assert qc.filter(F.col("RECORD") == 1000).first()["H_Flags"] is not None
     back = spark.read.parquet(str(tmp_path / "out"))
     assert back.count() == 48 + 1
+
+
+def test_access_azure_binds_production_columns_by_name(spark, tmp_path):
+    """A production logger file carries the full layout: AccessAzure
+    must bind each value to its named column, not shift the file onto
+    the 25-column curated view by position (which put Fc_molar's values
+    under H and filler under LE, without an error)."""
+    import math
+
+    d, access, kept = _full_layout_raw(tmp_path)
+    df = compat.AccessAzure(
+        "CookEast", "Flux", "30min", access, str(d), QC=False,
+        startDate="2022-06-01", endDate="2022-06-30",
+        spark=spark, save=False,
+    )
+    cols = ["H", "LE", "Fc_molar", "door_is_open_Hst"]
+    got = {
+        r["TIMESTAMP"]: r
+        for r in df.select("TIMESTAMP", *cols).collect()
+        if r["TIMESTAMP"] in kept.index
+    }
+    assert len(got) == len(kept) == 48
+    for ts, want in kept.iterrows():
+        for c in cols:
+            w = want[c]
+            assert (got[ts][c] is None) if math.isnan(w) else got[ts][c] == w, (
+                ts, c, got[ts][c], w,
+            )
 
 
 def test_parse_date_normalizes_datetime_to_date():

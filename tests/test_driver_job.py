@@ -15,6 +15,7 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.plans import (
     run_tower_job,
     run_tower_jobs,
 )
+from tools.synth import write_toa5
 
 _COLS = [
     "TIMESTAMP", "RECORD", "H", "LE", "Fc_molar", "u_star",
@@ -31,12 +32,7 @@ def _toa5(
     path: str, day: int, start_rec: int, ticks: int,
     year: int = 2022, month: int = 1,
 ) -> None:
-    lines = [
-        '"TOA5","CookEast","CR6","1","CR6.Std","CPU:flux","1","Flux"',
-        ",".join(f'"{c}"' for c in _COLS),
-        ",".join('"TS"' if c == "TIMESTAMP" else '""' for c in _COLS),
-        ",".join('""' if c == "TIMESTAMP" else '"Avg"' for c in _COLS),
-    ]
+    rows = []
     for i in range(ticks):
         ts = dt.datetime(year, month, day) + dt.timedelta(minutes=30 * (i + 1))
         vals = {c: "1.0" for c in _COLS}
@@ -49,9 +45,8 @@ def _toa5(
             CO2_sig_strgth_Min="0.9", H2O_sig_strgth_Min="0.9",
             door_is_open_Hst="0", Precipitation_Tot="0",
         )
-        lines.append(",".join(vals[c] for c in _COLS))
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        rows.append([vals[c] for c in _COLS])
+    write_toa5(path, _COLS, rows, "Flux")
 
 
 @pytest.fixture()
@@ -184,12 +179,7 @@ _MET_COLS = [
 
 
 def _toa5_met(path: str, day: int, ticks: int) -> None:
-    lines = [
-        '"TOA5","CookEast","CR6","1","CR6.Std","CPU:met","1","Met"',
-        ",".join(f'"{c}"' for c in _MET_COLS),
-        ",".join('"TS"' if c == "TIMESTAMP" else '""' for c in _MET_COLS),
-        ",".join('""' if c == "TIMESTAMP" else '"Avg"' for c in _MET_COLS),
-    ]
+    rows = []
     for i in range(ticks):
         ts = dt.datetime(2022, 2, day) + dt.timedelta(minutes=15 * (i + 1))
         # values must VARY tick to tick or the stuck-sensor (diff != 0)
@@ -203,9 +193,8 @@ def _toa5_met(path: str, day: int, ticks: int) -> None:
             Precipitation_Tot="0", rslt_wnd_spd="3.0",
             wnd_dir_compass="200.0",
         )
-        lines.append(",".join(vals[c] for c in _MET_COLS))
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        rows.append([vals[c] for c in _MET_COLS])
+    write_toa5(path, _MET_COLS, rows, "Met")
 
 
 def test_run_tower_job_met_table(spark, tmp_path):
@@ -236,12 +225,7 @@ def test_run_tower_job_v2_generation(spark, tmp_path):
     cols = [c for c, _ in FLUX_RAW_V2_COLUMNS]
     d = tmp_path / "raw"
     os.makedirs(d)
-    lines = [
-        '"TOA5","CookEast","CR6","1","CR6.Std","CPU:flux2","1","Flux"',
-        ",".join(f'"{c}"' for c in cols),
-        ",".join('"TS"' if c == "TIMESTAMP" else '""' for c in cols),
-        ",".join('""' if c == "TIMESTAMP" else '"Avg"' for c in cols),
-    ]
+    rows = []
     for i in range(48):
         ts = dt.datetime(2022, 3, 1) + dt.timedelta(minutes=30 * (i + 1))
         vals = {c: "1.0" for c in cols}
@@ -250,9 +234,8 @@ def test_run_tower_job_v2_generation(spark, tmp_path):
                     CO2_sig_strgth_Min="0.9", H2O_sig_strgth_Min="0.9",
                     P="0", TA_1_1_1=f"{6.5 + 0.1 * (i % 3):.2f}",
                     RH_1_1_1="75.0", PA="95.0")
-        lines.append(",".join(vals[c] for c in cols))
-    with open(str(d / "CookEast_Flux_2022_03_01_0000.dat"), "w") as f:
-        f.write("\n".join(lines) + "\n")
+        rows.append([vals[c] for c in cols])
+    write_toa5(str(d / "CookEast_Flux_2022_03_01_0000.dat"), cols, rows, "Flux")
 
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.qc.grade import (
         FluxQCConfig,

@@ -26,6 +26,7 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.qc.grade import 
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.schemas import (
     full_columns,
 )
+from tools.synth import write_toa5
 
 # per-column value pools chosen to hit pass / fail / null on every QC test
 _POOLS = {
@@ -52,12 +53,6 @@ def _write_fixture(path: str, n_rows: int = 48) -> pd.DataFrame:
     names = [n for n, _ in cols]
     assert all(c in names for c in _POOLS)
     rng = random.Random(20260813)
-    header = [
-        '"TOA5","CookEast","CR6","1","CR6.Std","CPU:flux","1","Flux"',
-        ",".join(f'"{n}"' for n in names),
-        ",".join('"TS"' if n == "TIMESTAMP" else '""' for n in names),
-        ",".join('""' if n == "TIMESTAMP" else '"Avg"' for n in names),
-    ]
     rows, kept = [], []
     base = dt.datetime(2022, 6, 1)
     for i in range(n_rows):
@@ -77,13 +72,12 @@ def _write_fixture(path: str, n_rows: int = 48) -> pd.DataFrame:
                 vals.append('"txt"')
             else:
                 vals.append("1.5")
-        rows.append(",".join(vals))
+        rows.append(vals)
         kept.append(
             {"TIMESTAMP": ts}
             | {c: (float("nan") if v == "NAN" else float(v)) for c, v in picks.items()}
         )
-    with open(path, "w") as f:
-        f.write("\n".join(header + rows) + "\n")
+    write_toa5(path, names, rows, "Flux")
     return pd.DataFrame(kept).set_index("TIMESTAMP")
 
 

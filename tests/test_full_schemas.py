@@ -13,6 +13,7 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.schemas import (
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.sources.toa5 import (
     read_toa5,
 )
+from tools.synth import write_toa5
 
 
 def test_full_layout_shapes():
@@ -38,12 +39,6 @@ def test_full_width_toa5_roundtrip(spark, tmp_path):
     names = [n for n, _ in cols]
     i_ustar = names.index("u_star")
     i_tair = names.index("amb_tmpr_Avg")
-    header = [
-        '"TOA5","CookEast","CR6","1","CR6.Std","CPU:flux","1","Flux"',
-        ",".join(f'"{n}"' for n in names),
-        ",".join('"TS"' if n == "TIMESTAMP" else '""' for n in names),
-        ",".join('""' if n == "TIMESTAMP" else '"Avg"' for n in names),
-    ]
     rows = []
     for i in range(3):
         ts = dt.datetime(2022, 1, 1) + dt.timedelta(minutes=30 * (i + 1))
@@ -61,10 +56,9 @@ def test_full_width_toa5_roundtrip(spark, tmp_path):
                 vals.append('"txt"')
             else:
                 vals.append("1.5")
-        rows.append(",".join(vals))
+        rows.append(vals)
     path = str(tmp_path / "CookEast_Flux_2022_01_01_0000.dat")
-    with open(path, "w") as f:
-        f.write("\n".join(header + rows) + "\n")
+    write_toa5(path, names, rows, "Flux")
 
     df = read_toa5(
         spark, path, get_full_schema("Flux", "Raw", "V40826"),

@@ -397,9 +397,11 @@ def test_unigram_seed_builds_agree(spark):
 
     from pyspark.sql import functions as F
 
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.bpe import (
+        _word_histogram,
+    )
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.unigram import (
         _seed_pieces_spark,
-        _word_hist,
         seed_pieces,
     )
 
@@ -407,7 +409,7 @@ def test_unigram_seed_builds_agree(spark):
         [(1, "abc abcd bc a"), (2, "abc zz zz q")],
         "doc_id long, text string",
     )
-    words = _word_hist(d, "text", False)
+    words = _word_histogram(d, "text", False)
     got = _seed_pieces_spark(words, 12, 4)
     wc = Counter(w for t in ("abc abcd bc a", "abc zz zz q") for w in t.split())
     want = seed_pieces(list(wc.keys()), list(wc.values()), 12, 4)

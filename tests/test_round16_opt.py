@@ -102,7 +102,6 @@ def test_bpe_apply_merges_fused_equals_sequential(spark):
     exactly like the old one-stage-per-merge chain (order matters:
     later merges see earlier fusions)."""
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.bpe import (
-        _apply_merge,
         _apply_merges,
     )
 
@@ -110,7 +109,7 @@ def test_bpe_apply_merges_fused_equals_sequential(spark):
     words = _words_df(spark)
     chained = words
     for left, right in merges:
-        chained = _apply_merge(chained, left, right)
+        chained = _apply_merges(chained, [(left, right)])
     fused = _apply_merges(words, merges)
     key = lambda r: (tuple(r["syms"]), r["n"])
     assert sorted(map(key, fused.collect())) == sorted(
@@ -121,21 +120,24 @@ def test_bpe_apply_merges_fused_equals_sequential(spark):
 
 
 def test_wordpiece_apply_merges_fused_equals_sequential(spark):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.bpe import (
+        _apply_merges,
+        _word_table,
+    )
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.wordpiece import (
-        _apply_wp_merge,
-        _apply_wp_merges,
-        _wp_word_table,
+        _fuse,
+        _wp_symbols,
     )
 
     docs = spark.createDataFrame(
         [(1, "banana bandana ananas nab banana")], "doc_id long, text string"
     )
-    words = _wp_word_table(docs, "text", lowercase=True)
+    words = _word_table(docs, "text", lowercase=True, symbols=_wp_symbols)
     merges = [("a", "##n"), ("an", "##a")]
     chained = words
     for left, right in merges:
-        chained = _apply_wp_merge(chained, left, right)
-    fused = _apply_wp_merges(words, merges)
+        chained = _apply_merges(chained, [(left, right)], _fuse)
+    fused = _apply_merges(words, merges, _fuse)
     key = lambda r: (tuple(r["syms"]), r["n"])
     assert sorted(map(key, fused.collect())) == sorted(
         map(key, chained.collect())

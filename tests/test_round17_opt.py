@@ -22,8 +22,10 @@ from pyspark.sql import Row
 
 
 def test_sampled_count_estimate_exact_on_small_frames(spark):
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.functions.sql import (
+        plan_size_bytes,
+    )
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.similarity import (
-        _plan_size_bytes,
         _sampled_count_estimate,
     )
 
@@ -32,7 +34,7 @@ def test_sampled_count_estimate_exact_on_small_frames(spark):
     )
     # the precondition this fallback exists for: RDD-backed plans carry
     # no Catalyst sizeInBytes
-    assert _plan_size_bytes(df) is None
+    assert plan_size_bytes(df) is None
     est = _sampled_count_estimate(df)
     assert est is not None
     # every partition of a small frame is sampled -> the estimate is

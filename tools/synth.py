@@ -10,6 +10,7 @@ md5/xxhash-deterministic, so a tier is reproducible bit for bit.
 - :func:`seeded_pairs` — the known (id-1, id) true pairs of both.
 - :func:`write_replica_tier` — an ``REPLICAS``x tier of the sf tables
   (key-offset fact replicas, word-shuffled documents).
+- :func:`write_toa5` — one Campbell TOA5 logger file from given rows.
 """
 
 from __future__ import annotations
@@ -205,3 +206,20 @@ def write_replica_tier(spark, sf_dir: str, out_dir: str, replicas: int) -> None:
     docs.write.mode("overwrite").parquet(out("documents"))
     for t in ("customer", "nation", "region", "supplier", "part", "embeddings"):
         rd(t).write.mode("overwrite").parquet(out(t))
+
+
+def write_toa5(path: str, names, rows, table: str = "Flux") -> None:
+    """Write a TOA5 file: the four header lines (environment, field
+    names, units, processing) for columns ``names``, then one line per
+    row of ``rows``, each a sequence of already-formatted field texts
+    (quote strings and timestamps yourself; ``NAN`` is the logger's
+    missing-value sentinel)."""
+    header = [
+        f'"TOA5","CookEast","CR6","1","CR6.Std","CPU:{table.lower()}","1","{table}"',
+        ",".join(f'"{n}"' for n in names),
+        ",".join('"TS"' if n == "TIMESTAMP" else '""' for n in names),
+        ",".join('""' if n == "TIMESTAMP" else '"Avg"' for n in names),
+    ]
+    lines = header + [",".join(str(v) for v in r) for r in rows]
+    with open(path, "w") as f:
+        f.write("\n".join(lines) + "\n")

@@ -122,26 +122,15 @@ def levenshtein(spark, docs, caps=LEV_CAPS) -> dict:
 
 def occupancy(sig, blocks) -> dict:
     """Bucket occupancy of a (slice_column, start_bit, width) layout —
-    the cheap aggregation that predicts the pigeonhole pair join.
-
-    The (blk, val) tagging repeats the one inside llm/dedup.py
-    ``_pigeonhole_pairs``: the package exposes no tagging helper to call
-    (ROADMAP.md lists moving it into one)."""
+    the cheap aggregation that predicts the pigeonhole pair join, over
+    the same (blk, val) tags (``llm.dedup.pigeonhole_tags``)."""
     from pyspark.sql import functions as F
 
-    tagged = sig.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("blk"),
-                        F.shiftright(F.col(col), s).bitwiseAND(F.lit((1 << w) - 1)).alias("val"),
-                    )
-                    for j, (col, s, w) in enumerate(blocks)
-                ]
-            )
-        ).alias("b")
-    ).select("b.blk", "b.val")
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import (
+        pigeonhole_tags,
+    )
+
+    tagged = pigeonhole_tags(sig, blocks, [])
     row = (
         tagged.groupBy("blk", "val")
         .agg(F.count(F.lit(1)).alias("bn"))

@@ -22,6 +22,7 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.plans import agg
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.functions import water_year
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.operators import resolve_window, CrossWaterYearError
 from pyspark.sql import functions as F
+from tools.synth import write_toa5
 
 COLS = ["TIMESTAMP", "RECORD", "H", "LE", "Fc_molar", "u_star",
         "amb_tmpr_Avg", "RH_Avg", "amb_press_Avg", "rslt_wnd_spd",
@@ -34,12 +35,7 @@ COLS = ["TIMESTAMP", "RECORD", "H", "LE", "Fc_molar", "u_star",
 
 def toa5_file(path, day, start_rec, ticks, spike_at=None, nan_at=None):
     """Write a TOA5 daily file: 4 header lines then 30-min rows."""
-    lines = [
-        '"TOA5","CookEast","CR6","1234","CR6.Std.07","CPU:flux.CR6","1234","Flux"',
-        ",".join(f'"{c}"' for c in COLS),
-        ",".join('"TS"' if c == "TIMESTAMP" else '""' for c in COLS),
-        ",".join('""' if c == "TIMESTAMP" else '"Avg"' for c in COLS),
-    ]
+    rows = []
     for i in range(ticks):
         ts = dt.datetime(2022, 1, day, 0, 0) + dt.timedelta(minutes=30 * (i + 1))
         tair = 5.0 + 3 * random.random() + (20.0 if i == spike_at else 0.0)
@@ -56,9 +52,8 @@ def toa5_file(path, day, start_rec, ticks, spike_at=None, nan_at=None):
             "door_is_open_Hst": "0", "H_qc_grade": "3", "LE_qc_grade": "4",
             "Fc_qc_grade": "3", "sonic_samples_Tot": "17500", "Fc_samples_Tot": "17600",
         }
-        lines.append(",".join(str(row[c]) for c in COLS))
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
+        rows.append([row[c] for c in COLS])
+    write_toa5(path, COLS, rows, "Flux")
 
 
 def main() -> None:
