@@ -91,11 +91,14 @@ def _cos_sql(
     na: str | None = None,
     nb: str | None = None,
     dim: int | None = None,
+    rounded: bool = True,
 ) -> str:
     """Round-6 cosine ``dot / (na * nb)`` of two array<double>
     expressions. Pass carried norm columns as ``na``/``nb`` where the
     caller computed them once per vector — per-pair work is then one
     dot, with the same doubles as norms computed inline (the default).
+    ``rounded=False`` gives the unrounded quotient, for callers that
+    filter or aggregate before rounding once (:data:`_COS_SLACK`).
 
     Callers scoring inside a broadcast-join projection leave ``dim``
     unset on purpose: a 64-dim cosine unrolls to ~190 cast+multiply
@@ -104,7 +107,16 @@ def _cos_sql(
     at 50k x 160 centroids (extends D-17)."""
     na = na or _norm_sql(a, dim)
     nb = nb or _norm_sql(b, dim)
-    return f"round({_dot_sql(a, b, dim)} / ({na} * {nb}), 6)"
+    cos = f"{_dot_sql(a, b, dim)} / ({na} * {nb})"
+    return f"round({cos}, 6)" if rounded else cos
+
+
+# round(x, 6) (HALF_UP on the decimal form of x) lands within 5e-7 of x,
+# so round(x, 6) >= t implies x > t - _COS_SLACK: a pre-filter of the
+# unrounded cosine at t - _COS_SLACK drops no pair the exact round-6
+# test keeps (NaN passes both, as the highest double), and only the
+# survivors pay the BigDecimal round.
+_COS_SLACK = 1e-6
 
 
 def _top_k(
@@ -794,6 +806,7 @@ def embed_neardup_pairs(
                 .agg(F.max("cosine").alias("cosine"))
                 .select("id_a", "id_b", "cosine")
             )
+        raw = _cos_sql("__va", "__vb", "__na", "__nb", dim, rounded=False)
         a = tagged.select(
             F.col("__id").alias("id_a"),
             F.col("__v").alias("__va"),
@@ -810,26 +823,29 @@ def embed_neardup_pairs(
         )
         return (
             a.join(b, ["__tbl", "__bkt"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", F.expr(_cos_sql("__va", "__vb", "__na", "__nb", dim)))
-            .filter(F.col("cosine") >= threshold)
+            .filter(
+                (F.col("id_a") < F.col("id_b"))
+                & (F.expr(raw) >= threshold - _COS_SLACK)
+            )
             .groupBy("id_a", "id_b")
-            .agg(F.max("cosine").alias("cosine"))
-            .select("id_a", "id_b", "cosine")
+            # every table's collision of a pair carries the same cosine:
+            # round the max once per pair, then the exact round-6 test
+            .agg(F.round(F.max(F.expr(raw)), 6).alias("cosine"))
+            .filter(F.col("cosine") >= threshold)
         )
     vcol = quote_ident(vec_col)
     a = repartition_pinned(df, F.col(id_col)).select(
         F.col(id_col).alias("id_a"), F.col(vcol).alias("__va")
     )
     b = df.select(F.col(id_col).alias("id_b"), F.col(vcol).alias("__vb"))
+    raw = _cos_sql(_as_double_sql("__va"), _as_double_sql("__vb"), rounded=False)
     return (
         a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine", F.expr(_cos_sql(_as_double_sql("__va"), _as_double_sql("__vb")))
+        .filter(
+            (F.col("id_a") < F.col("id_b")) & (F.expr(raw) >= threshold - _COS_SLACK)
         )
+        .select("id_a", "id_b", F.round(F.expr(raw), 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -1030,9 +1046,14 @@ def semdedup(
     pair_sim = (
         a.join(b, "centroid_id")
         .filter(F.col("__idb") < F.col("__ida"))
-        .withColumn("__cos", F.expr(_cos_sql("__va", "__vb", "__na", "__nb")))
         .groupBy(F.col("__ida").alias(id_col))
-        .agg(F.max("__cos").alias("max_sim_lower"))
+        # round-6 is non-decreasing, so the max of the unrounded cosines,
+        # rounded once, equals the max of the rounded ones
+        .agg(
+            F.round(
+                F.max(F.expr(_cos_sql("__va", "__vb", "__na", "__nb", rounded=False))), 6
+            ).alias("max_sim_lower")
+        )
     )
     return (
         cells.select(id_col, "centroid_id")

@@ -51,11 +51,13 @@ path) or the vocabulary-sized driver loop (hybrid path).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .bpe import (
-    _apply_merges,
     _best_pair,
     _check_counts,
     _merge_train,
@@ -91,26 +93,81 @@ def _wp_symbols(w: Column) -> Column:
     )
 
 
-def _top_scored_pair(
+def _counts_after_merges(
     words: DataFrame, merges: list[tuple[str, str]]
-) -> tuple[str, str, int] | None:
-    """One distributed scoring round over the word table with the
-    pending ``merges`` applied (ONE fused Python stage for the whole
-    un-checkpointed tail, r16): pair frequencies and symbol unigram
-    frequencies from the same rewritten table, score =
-    pair/(left_uni*right_uni) as DOUBLE, winner by (score desc, left
-    asc, right asc). Returns (left, right, pair_freq) or None.
+) -> tuple[DataFrame, DataFrame]:
+    """``(pairs, unigrams)`` of the word table with the pending
+    ``merges`` applied: (left, right, freq) adjacent-pair counts and
+    (s, uni) symbol counts, both word-count weighted.
 
-    The unigram side is vocabulary-sized, so both score joins are
-    broadcast — no shuffle beyond the two aggregations."""
-    words = _apply_merges(words, merges, _fuse)
-    pairs = _pair_counts(words)
-    unigrams = (
-        words.select("n", F.explode("syms").alias("s"))
-        .groupBy("s")
-        .agg(F.sum("n").alias("uni"))
+    With a pending tail, ONE Python stage rewrites each word
+    (:func:`bpe._rewrite_syms`) and emits both partial histograms,
+    unigram rows with a NULL ``right`` — as BPE's fused
+    ``_pair_counts_after_merges`` does for pairs alone. One aggregation
+    follows and both frames are filters over it; the filters test an
+    aggregate output, which Catalyst cannot push below the aggregation,
+    so every use shares one shuffle and the rewrite runs once (see
+    :func:`_scored_pairs` for the join side of that contract). With no
+    tail (the round right after a checkpoint) both counts stay
+    JVM-side."""
+    if not merges:
+        unigrams = (
+            words.select("n", F.explode("syms").alias("s"))
+            .groupBy("s")
+            .agg(F.sum("n").alias("uni"))
+        )
+        return _pair_counts(words), unigrams
+    pairs = [(left, right, _fuse(left, right)) for left, right in merges]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            acc: dict[tuple[str, str | None], int] = {}
+            for syms, n in zip(pdf["syms"], pdf["n"]):
+                syms = _rewrite_syms(syms, pairs)
+                n = int(n)
+                for s in syms:
+                    acc[(s, None)] = acc.get((s, None), 0) + n
+                for i in range(len(syms) - 1):
+                    key = (syms[i], syms[i + 1])
+                    acc[key] = acc.get(key, 0) + n
+            if acc:
+                yield pd.DataFrame(
+                    {
+                        "left": [k[0] for k in acc],
+                        "right": [k[1] for k in acc],
+                        "freq": list(acc.values()),
+                    }
+                )
+
+    counts = (
+        words.mapInPandas(run, "left string, right string, freq long")
+        .groupBy("left", "right")
+        .agg(
+            F.sum("freq").alias("freq"),
+            F.max(F.isnull("right")).alias("unigram"),
+        )
     )
-    return _best_pair(
+    return (
+        counts.filter(~F.col("unigram")).select("left", "right", "freq"),
+        counts.filter(F.col("unigram")).select(
+            F.col("left").alias("s"), F.col("freq").alias("uni")
+        ),
+    )
+
+
+def _scored_pairs(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """(left, right, freq, score) of the word table with the pending
+    ``merges`` applied, score = pair/(left_uni*right_uni) as DOUBLE.
+    The unigram side is vocabulary-sized, so both score joins are
+    broadcast — no shuffle beyond the counts' aggregation.
+
+    The right-symbol join key goes through a (no-op) ``coalesce``: from
+    a bare ``right = s`` Catalyst infers ``right IS NOT NULL`` for the
+    pair side alone and pushes it below the shared aggregation, which
+    splits the pair branch off the unigram branches and runs the Python
+    rewrite a second time."""
+    pairs, unigrams = _counts_after_merges(words, merges)
+    return (
         pairs.join(
             F.broadcast(unigrams.withColumnRenamed("uni", "l_uni")),
             pairs["left"] == F.col("s"),
@@ -118,7 +175,7 @@ def _top_scored_pair(
         .drop("s")
         .join(
             F.broadcast(unigrams.withColumnRenamed("uni", "r_uni")),
-            pairs["right"] == F.col("s"),
+            F.coalesce(pairs["right"], F.lit("")) == F.col("s"),
         )
         .drop("s")
         .select(
@@ -129,9 +186,17 @@ def _top_scored_pair(
                 F.col("freq").cast("double")
                 / (F.col("l_uni") * F.col("r_uni")).cast("double")
             ).alias("score"),
-        ),
-        "score",
+        )
     )
+
+
+def _top_scored_pair(
+    words: DataFrame, merges: list[tuple[str, str]]
+) -> tuple[str, str, int] | None:
+    """One distributed scoring round: the winner of
+    :func:`_scored_pairs` by (score desc, left asc, right asc). Returns
+    (left, right, pair_freq) or None."""
+    return _best_pair(_scored_pairs(words, merges), "score")
 
 
 def wordpiece_train(

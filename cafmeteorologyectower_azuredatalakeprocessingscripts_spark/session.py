@@ -6,6 +6,8 @@ Defaults chosen for correctness + 100 TB readiness:
 - Arrow for any pandas interchange
 - shuffle partitions sized from env (local test) — on a real cluster AQE
   coalesces the 32 local partitions or grows from the configured target
+- a generated-class cache that holds a whole pipeline's compiled classes,
+  so repeated passes do not recompile them
 """
 
 from __future__ import annotations
@@ -30,6 +32,15 @@ _DEFAULTS = {
     # explicitly at the loader (sources keep micros semantics)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # compiled generated classes kept per JVM (LRU). Spark's 100 is below
+    # one corpus_dedup pass (~200 distinct classes), so every pass
+    # recompiled ~196 of them; 1000 is over 4x the largest measured working
+    # set and stays bounded for long-lived sessions (DECISIONS.md)
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # ...and keyed by code alone: with the whole-stage id in the class
+    # name, a plan whose stages AQE numbers in another order (it numbers
+    # them as they finish) missed the cache
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -684,3 +684,33 @@ def test_simhash128_golden(spark):
         "simhash_s2:bigint,simhash_s3:bigint>"
     )
     assert [tuple(r) for r in sh.orderBy("id").collect()] == _PIN_SIMHASH128
+
+
+def test_wordpiece_scoring_round_rewrites_once(spark, make_docs):
+    """A WordPiece scoring round with a pending merge tail runs the Python
+    rewrite once: pair and unigram counts come out of one MapInPandas
+    stage, whose shuffle every use of the counts shares. Its scores equal
+    the JVM-side counts over the rewritten word table."""
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.bpe import (
+        _apply_merges,
+        _word_table,
+    )
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.wordpiece import (
+        _fuse,
+        _scored_pairs,
+        _wp_symbols,
+    )
+
+    words = _word_table(
+        make_docs(["banana bandana ananas nab banana", "a an ban nab"]),
+        "text",
+        lowercase=True,
+        symbols=_wp_symbols,
+    )
+    merges = [("a", "##n"), ("an", "##a")]
+    scored = _scored_pairs(words, merges)
+    got = sorted(tuple(r) for r in scored.collect())
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[0].count("MapInPandas") == 1, plan
+    rewritten = _apply_merges(words, merges, _fuse)
+    assert got == sorted(tuple(r) for r in _scored_pairs(rewritten, []).collect())

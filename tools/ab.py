@@ -16,7 +16,9 @@ Every sample clears the cache, builds the frame and materializes it
 through the ``noop`` sink. :func:`interleave` runs the legs round by
 round, reversing the leg order every other round so neither side always
 goes first; the record carries min, median and quartiles per leg and
-cell and, for child legs, which ``__spark_entry__`` the child actually
+cell, the generated classes each visit compiled (Spark's codegen cache
+misses: a cell that keeps compiling runs cold, whatever its plan) and,
+for child legs, which ``__spark_entry__`` the child actually
 imported. A child is a fresh JVM, so it builds each query once untimed
 before its samples.
 With ``rows`` each leg also returns every cell's rows once, and cells
@@ -98,10 +100,24 @@ def time_cell(spark, label: str, build: Callable) -> float:
     return round(sec, 3)
 
 
+def compiles(spark) -> int:
+    """Generated classes this JVM has compiled so far: the misses of
+    Spark's codegen cache (``CodegenMetrics``)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _run_cells(spark, builds: dict[str, Callable], runs: int, keep_rows: bool):
-    samples = {label: [time_cell(spark, label, b) for _ in range(runs)] for label, b in builds.items()}
+    """``(samples, compiled, rows)``: ``runs`` timings per cell, the
+    classes compiled over each cell's timed samples, and (``keep_rows``)
+    each cell's rows."""
+    samples, compiled = {}, {}
+    for label, b in builds.items():
+        before = compiles(spark)
+        samples[label] = [time_cell(spark, label, b) for _ in range(runs)]
+        compiled[label] = compiles(spark) - before
     rows = {label: b().toPandas() for label, b in builds.items()} if keep_rows else None
-    return samples, rows
+    return samples, compiled, rows
 
 
 class InProcess:
@@ -154,7 +170,7 @@ class Child:
                     # written by this harness's own child a moment ago
                     with open(os.path.join(rows_dir, f"{q}.pkl"), "rb") as f:
                         rows[q] = pickle.load(f)
-        return res["samples"], rows
+        return res["samples"], res["compiled"], rows
 
 
 def child_main(spec_json: str) -> None:
@@ -172,11 +188,12 @@ def child_main(spec_json: str) -> None:
     # untimed: each query's first build in a fresh JVM is cold
     for q, build in builds.items():
         time_cell(spark, q, build)
-    samples, rows = _run_cells(spark, builds, spec["runs"], spec["rows_dir"] is not None)
+    samples, compiled, rows = _run_cells(spark, builds, spec["runs"], spec["rows_dir"] is not None)
     for q, frame in (rows or {}).items():
         with open(os.path.join(spec["rows_dir"], f"{q}.pkl"), "wb") as f:
             pickle.dump(frame, f)
-    print(_RESULT + json.dumps({"samples": samples, "entry": os.path.abspath(entrymod.__file__)}), flush=True)
+    print(_RESULT + json.dumps({"samples": samples, "compiled": compiled,
+                                "entry": os.path.abspath(entrymod.__file__)}), flush=True)
     spark.stop()
 
 
@@ -208,28 +225,31 @@ def interleave(legs: list, rounds: int, runs: int = 1, *, each_round: Callable |
     are returned under ``each_round``. With ``rows``, every leg returns
     its rows on the first visit and shared cells are compared."""
     samples: dict[str, dict[str, list[float]]] = {leg.name: {} for leg in legs}
+    compiled: dict[str, dict[str, list[int]]] = {leg.name: {} for leg in legs}
     per_round = []
     rows_by_leg: dict[str, dict] = {}
     for r in range(rounds):
         if each_round is not None:
             per_round.append(each_round())
         for leg in legs if r % 2 == 0 else legs[::-1]:
-            got, leg_rows = leg.run(runs, keep_rows=rows and leg.name not in rows_by_leg)
+            got, got_compiled, leg_rows = leg.run(runs, keep_rows=rows and leg.name not in rows_by_leg)
             if leg_rows is not None:
                 rows_by_leg[leg.name] = leg_rows
             for label, s in got.items():
                 samples[leg.name].setdefault(label, []).extend(s)
+                compiled[leg.name].setdefault(label, []).append(got_compiled[label])
         print(json.dumps({"round": r, **{k: {q: v[-runs:] for q, v in d.items()} for k, d in samples.items()}}),
               flush=True)
     record = {
         "method": (
             f"{rounds} interleaved rounds (leg order reversed every other round), "
-            f"{runs} sample(s) per cell per visit, noop sink, caches cleared"
+            f"{runs} sample(s) per cell per visit, noop sink, caches cleared; "
+            "compiled = generated classes compiled over each visit's samples"
         ),
         "legs": {
             leg.name: {
                 **(_entry_fields(leg) if isinstance(leg, Child) else {}),
-                "cells": summarize(samples[leg.name]),
+                "cells": summarize(samples[leg.name], compiled[leg.name]),
             }
             for leg in legs
         },
@@ -254,12 +274,13 @@ def _entry_fields(leg: Child) -> dict:
     }
 
 
-def summarize(cells: dict[str, list[float]]) -> dict[str, dict]:
+def summarize(cells: dict[str, list[float]], compiled: dict[str, list[int]]) -> dict[str, dict]:
     out = {}
     for label, s in cells.items():
         q1, med, q3 = statistics.quantiles(s, n=4) if len(s) > 1 else (s[0],) * 3
         out[label] = {"min": min(s), "median": round(statistics.median(s), 3),
-                      "q1": round(q1, 3), "q3": round(q3, 3), "samples": s}
+                      "q1": round(q1, 3), "q3": round(q3, 3), "samples": s,
+                      "compiled": compiled[label]}
     return out
 
 

@@ -6,9 +6,14 @@ BASELINE_RATIO.json. Run this on the code the flag was raised against
 (the old-code control). Two controls, both against the same
 ``pricing_summary`` probe minimum, in one process at sf0.1:
 
-1. narrow interleave: ``N_ROUNDS`` rounds of [probe, q1..qn] through
-   tools/ab.py (keep n <= 4: wide interleaves measure cold start, not
-   steady state — ADJUDICATE_r15_close.json);
+1. interleave: ``N_ROUNDS`` rounds of [probe, q1..qn] through
+   tools/ab.py. The first round compiles each leg's generated classes;
+   later rounds run warm while the legs' classes fit the session's
+   generated-class cache together (``compiled_per_round`` shows it per
+   leg). With Spark's 100-entry default, 11 legs + the probe recompiled
+   in every other round — the "wide interleaves run cold" of
+   ADJUDICATE_r15_close.json; at the session default (1000) they
+   compile only in round one (ADJUDICATE_codegen_cache.json);
 2. warm block: per query, ``N_WARM`` back-to-back samples after the
    interleave, then the probe again so late drift shows.
 
@@ -93,6 +98,7 @@ def main() -> None:
     legs = {n: InProcess(n, spark, {n: lambda n=n: qs[n](spark, sf_dir)}) for n in [PROBE, *names]}
     rec = interleave(list(legs.values()), N_ROUNDS, each_round=py_probe)
     inter = {n: leg["cells"][n]["samples"] for n, leg in rec["legs"].items()}
+    compiled = {n: leg["cells"][n]["compiled"] for n, leg in rec["legs"].items()}
     warm = {}
     for n in names:
         warm[n] = legs[n].run(N_WARM)[0][n]
@@ -109,6 +115,7 @@ def main() -> None:
         ),
         "probe_min": round(probe_min, 3),
         "probe_rounds": inter[PROBE],
+        "probe_compiled_per_round": compiled[PROBE],
         "probe_after_warm": warm_probe,
         "py_probe_per_round": rec["each_round"],
         "queries": {},
@@ -123,6 +130,7 @@ def main() -> None:
         n_elevated += not ok
         out["queries"][n] = {
             "interleaved_sec": inter[n],
+            "compiled_per_round": compiled[n],
             "warm_sec": warm[n],
             "ratio_interleaved": round(ratio_i, 3),
             "ratio_warm": round(ratio_w, 3),
