@@ -835,12 +835,7 @@ def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = T(spark, sf_dir, "documents")
-    feats = extract_features(
-        # r16: size-derived codec-stage width (no-op when the sized
-        # width does not beat the input partitioning; see
-        # multimodal.sized_codec_partitions)
-        text_to_png_payload(d, "text", n_partitions="auto")
-    )
+    feats = extract_features(text_to_png_payload(d, "text"))
     return feats.select("doc_id", "width", "height", "channels", "pixel_sum")
 
 
@@ -858,9 +853,7 @@ def q_multimodal_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = T(spark, sf_dir, "documents")
-    feats = extract_features(
-        text_to_bmp_payload(d, "text", n_partitions="auto")  # r16 sized width
-    )
+    feats = extract_features(text_to_bmp_payload(d, "text"))
     return feats.select("doc_id", "width", "height", "channels", "pixel_sum")
 
 
@@ -877,9 +870,7 @@ def q_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = T(spark, sf_dir, "documents")
-    feats = extract_features(
-        text_to_tiff_payload(d, "text", n_partitions="auto")  # r16 sized width
-    )
+    feats = extract_features(text_to_tiff_payload(d, "text"))
     return feats.select("doc_id", "width", "height", "channels", "pixel_sum")
 
 
@@ -918,10 +909,7 @@ def q_multimodal_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents")
     feats = extract_audio_features(
-        text_to_wav_payload(
-            d, "text", float_every=4, g711=True, aiff=True,
-            n_partitions="auto",  # r16 sized width
-        )
+        text_to_wav_payload(d, "text", float_every=4, g711=True, aiff=True)
     )
     return feats.select(
         "doc_id", "sample_rate", "channels", "bits", "n_frames",
@@ -959,16 +947,7 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = T(spark, sf_dir, "documents")
     feats = extract_features(
-        text_to_jpeg_payload(
-            d, "text", progressive_every=5, cmyk_every=7,
-            # JPEG work is ~10x the sibling codecs per byte and the
-            # test tables are single parquet files (one task): derive
-            # the CPU-bound Arrow stage's width from input size (r16:
-            # the width sweep bottoms at ~16 tasks here, not cores —
-            # see multimodal.sized_codec_partitions). At 100 TB the
-            # scan's own row-group parallelism makes this a no-op.
-            n_partitions="auto",
-        )
+        text_to_jpeg_payload(d, "text", progressive_every=5, cmyk_every=7)
     )
     return feats.select("doc_id", "width", "height", "channels", "pixel_sum")
 
@@ -988,17 +967,7 @@ def q_multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = T(spark, sf_dir, "documents")
-    feats = extract_features(
-        text_to_gif_payload(
-            d, "text",
-            # LZW encode+decode is the priciest codec pair after JPEG
-            # and the test tables are single parquet files (one task):
-            # derive the CPU-bound Arrow stage's width from input size
-            # (r16 width sweep: ~8 tasks optimal at sf0.1, cores
-            # overshoots). No-op at 100 TB row-group widths.
-            n_partitions="auto",
-        )
-    )
+    feats = extract_features(text_to_gif_payload(d, "text"))
     return feats.select("doc_id", "width", "height", "channels", "pixel_sum")
 
 
@@ -1211,18 +1180,7 @@ def q_multimodal_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = T(spark, sf_dir, "documents")
-    frames = sample_frames(
-        text_to_gif_animation_payload(
-            d, "text",
-            # four LZW encodes + a full demux/composite decode per doc
-            # on a single-row-group scan: width derived from input
-            # size (r16 sweep: ~8 tasks optimal for the 3-stage chain;
-            # 32 tasks was SLOWER than one — per-task Arrow-boundary
-            # overhead x3 stages). No-op at 100 TB row-group widths.
-            n_partitions="auto",
-        ),
-        every_n=1,
-    )
+    frames = sample_frames(text_to_gif_animation_payload(d, "text"), every_n=1)
     return frame_features(frames)
 
 

@@ -24,8 +24,8 @@ mapInPandas stage is map-only (no shuffle), and batch size is governed by
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-from typing import Literal
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -68,7 +68,8 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("byte_len", T.LongType()),
         T.StructField("content_md5", T.StringType()),
         T.StructField("fake_embedding", T.ArrayType(T.DoubleType())),
-        # pixel-derived columns — non-null only for decodable PNGs
+        # pixel-derived columns — non-null only for payloads
+        # _decode_image_batch decodes (PNG/BMP/TIFF/JPEG/GIF/ICO)
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
         T.StructField("channels", T.IntegerType()),
@@ -111,54 +112,56 @@ def _fake_embedding(digest: bytes, dim: int = 4) -> list[float]:
     return [round(b / 255.0, 6) for b in digest[:dim]]
 
 
+class _ImageCodec(NamedTuple):
+    mime: str
+    sniff: Callable[[bytes], bool]
+    decode: Callable[[bytes], tuple]
+    error: type[Exception]
+    # re-encoder resize_images uses for this source format, and the
+    # decoded channel counts its layout carries; None/() re-encode PNG
+    encode: Callable[..., bytes] | None
+    channels: tuple[int, ...]
+
+
+# the per-payload fallbacks after the batch PNG pass, in sniff order:
+# the first format whose magic matches owns the payload, and a failed
+# decode leaves it undecoded (no later format is tried)
+_IMAGE_CODECS = (
+    _ImageCodec("image/bmp", is_bmp, decode_bmp, BmpUnsupported, encode_bmp, (1, 3, 4)),
+    _ImageCodec("image/tiff", is_tiff, decode_tiff, TiffUnsupported, encode_tiff, (1, 3, 4)),
+    _ImageCodec("image/jpeg", is_jpeg, decode_jpeg, JpegUnsupported, encode_jpeg, (1, 3)),
+    _ImageCodec("image/gif", is_gif, decode_gif, GifUnsupported, encode_gif, (1, 3)),
+    _ImageCodec("image/x-icon", is_ico, decode_ico, IcoUnsupported, None, ()),
+)
+
+
 def _decode_image_batch(payloads: list) -> tuple[list, list]:
     """Shared decode routing for the Arrow stages: whole-batch PNG
-    first (same-geometry wavefront sharing), then BMP, then baseline
-    TIFF per remaining payload (both are raw-pixel formats — one
-    reshape each, nothing to batch). Returns (decoded, mimes) aligned
-    to the input; non-image/corrupt/NULL rows decode to None. One
-    sniff order for every stage, so feature extraction and resize can
-    never diverge on which payloads decode."""
+    first (same-geometry wavefront sharing), then BMP, TIFF, JPEG, GIF
+    and ICO per remaining payload, in :data:`_IMAGE_CODECS` order.
+    Returns (decoded, mimes) aligned to the input; non-image/corrupt/
+    NULL rows decode to None. One sniff order for every stage, so
+    feature extraction and resize can never diverge on which payloads
+    decode."""
     decoded = decode_png_batch(payloads)
     mimes = ["image/png"] * len(decoded)
     for j, p in enumerate(payloads):
-        if decoded[j] is None and p is not None:
-            if is_bmp(p):
-                try:
-                    decoded[j] = decode_bmp(p)
-                    mimes[j] = "image/bmp"
-                except BmpUnsupported:
-                    pass
-            elif is_tiff(p):
-                try:
-                    decoded[j] = decode_tiff(p)
-                    mimes[j] = "image/tiff"
-                except TiffUnsupported:
-                    pass
-            elif is_jpeg(p):
-                try:
-                    decoded[j] = decode_jpeg(p)
-                    mimes[j] = "image/jpeg"
-                except JpegUnsupported:
-                    pass
-            elif is_gif(p):
-                try:
-                    decoded[j] = decode_gif(p)
-                    mimes[j] = "image/gif"
-                except GifUnsupported:
-                    pass
-            elif is_ico(p):
-                try:
-                    decoded[j] = decode_ico(p)
-                    mimes[j] = "image/x-icon"
-                except IcoUnsupported:
-                    pass
+        if decoded[j] is not None or p is None:
+            continue
+        codec = next((c for c in _IMAGE_CODECS if c.sniff(p)), None)
+        if codec is None:
+            continue
+        try:
+            decoded[j] = codec.decode(p)
+            mimes[j] = codec.mime
+        except codec.error:
+            pass
     return decoded, mimes
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
-    PNG/BMP/TIFF/JPEG/GIF payloads additionally emit pixel-derived
+    PNG/BMP/TIFF/JPEG/GIF/ICO payloads additionally emit pixel-derived
     columns (width, height, channels, exact pixel byte sum) from a
     REAL stdlib decode; other payloads carry nulls there and keep the
     digest features."""
@@ -166,9 +169,8 @@ def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             digests, dims, sums = [], [], []
-            # PNG batch first, BMP/TIFF fallback — shared routing, see
-            # _decode_image_batch; undecodable rows keep digest-only
-            # features
+            # shared routing, see _decode_image_batch; undecodable
+            # rows keep digest-only features
             decoded, _ = _decode_image_batch(list(pdf["payload"]))
             for p, dec in zip(pdf["payload"], decoded):
                 # NULL payload → NULL features (SQL semantics: the
@@ -312,7 +314,6 @@ def text_to_wav_payload(
     float_every: int | None = None,
     g711: bool = False,
     aiff: bool = False,
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """Deterministic audio synthesis for fixtures and oracle replay —
     the WAV twin of :func:`_text_to_image_payload`: an 8-bit mono PCM
@@ -340,59 +341,24 @@ def text_to_wav_payload(
     the text, so the telephony decode path is value-hash-checked.
 
     With ``aiff=True`` (r13), docs with ``doc_id % 8 == 3`` become
-    16-bit big-endian AIFF files with the SAME codepoint sample
-    values — the sums replay unchanged and only the ``bits`` column
-    (16) marks them, proving the AIFF chunk walk + 80-bit-extended
-    rate parse inside the existing green row.
+    16-bit big-endian AIFF files (``mime='audio/aiff'``) with the SAME
+    codepoint sample values — the sums replay unchanged and only the
+    ``bits`` column (16) marks them, proving the AIFF chunk walk +
+    80-bit-extended rate parse inside the existing green row."""
 
-    ``n_partitions`` sizes the CPU-bound encode stage to cores when
-    the input layout is coarser than the core count (the jpeg
-    precedent); None inherits the scan's partitioning."""
-    df = _maybe_size(df.select(id_col, src_col), n_partitions, _BPT_CHEAP)
+    def make(i, t):
+        vals = np.frombuffer(_codepoints(t, n_samples), dtype=np.uint8)
+        if float_every and int(i) % float_every == 0:
+            samples = (vals.astype(np.float64) / 32767.0).astype(np.float32)
+            return encode_wav(sample_rate, 1, 32, samples), "audio/wav"
+        if g711 and int(i) % 4 in (1, 2):
+            law = "ulaw" if int(i) % 4 == 1 else "alaw"
+            return encode_wav_g711(sample_rate, 1, law, vals), "audio/wav"
+        if aiff and int(i) % 8 == 3:
+            return encode_aiff(sample_rate, 1, 16, vals.astype(np.int16)), "audio/aiff"
+        return encode_wav(sample_rate, 1, 8, vals), "audio/wav"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_col], pdf[src_col]):
-                s = ("" if t is None else str(t))[:n_samples].ljust(n_samples)
-                vals = np.frombuffer(
-                    bytes(ord(ch) % 256 for ch in s), dtype=np.uint8
-                )
-                if float_every and int(i) % float_every == 0:
-                    payloads.append(
-                        encode_wav(
-                            sample_rate, 1, 32,
-                            (vals.astype(np.float64) / 32767.0).astype(np.float32),
-                        )
-                    )
-                    continue
-                if g711 and int(i) % 4 in (1, 2):
-                    payloads.append(
-                        encode_wav_g711(
-                            sample_rate, 1,
-                            "ulaw" if int(i) % 4 == 1 else "alaw", vals,
-                        )
-                    )
-                    continue
-                if aiff and int(i) % 8 == 3:
-                    payloads.append(
-                        encode_aiff(
-                            sample_rate, 1, 16, vals.astype(np.int16)
-                        )
-                    )
-                    continue
-                payloads.append(encode_wav(sample_rate, 1, 8, vals))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": "audio/wav", "n_bytes": len(p)} for p in payloads
-                    ],
-                }
-            )
-
-    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
+    return _synth_payloads(df, src_col, id_col, _BPT_CHEAP, make)
 
 
 BAND_ENERGY_SCHEMA = T.StructType(
@@ -582,12 +548,13 @@ def resize_images(
 ) -> DataFrame:
     """Image-resize stage: Arrow-batched, map-only, schema-preserving.
 
-    PNG/BMP/TIFF/JPEG/GIF payloads are REALLY resized: stdlib decode
-    → nearest-neighbor resample (deterministic integer mapping) →
-    re-encode IN THE SOURCE FORMAT, emitted with the matching mime
-    (fallbacks to PNG where the source layout cannot carry the decoded
-    channels: gray+alpha, and resampled true-color GIFs that exceed
-    256 distinct colors). Other payloads fall back to the
+    PNG/BMP/TIFF/JPEG/GIF/ICO payloads are REALLY resized: stdlib
+    decode → nearest-neighbor resample (deterministic integer mapping)
+    → re-encode IN THE SOURCE FORMAT, emitted with the matching mime
+    (fallbacks to PNG where :data:`_IMAGE_CODECS` has no re-encoder or
+    the source layout cannot carry the decoded channels: ICO,
+    gray+alpha, and resampled true-color GIFs that exceed 256 distinct
+    colors). Other payloads fall back to the
     deterministic stand-in (scale to ``width*height`` bytes by
     repeat/truncate, ``mime='image/raw-stub'``) so batch shapes,
     output schema, and metadata handling are exercised end-to-end for
@@ -604,17 +571,11 @@ def resize_images(
                     w0, h0, c, pix = dec
                     resampled = resize_nearest(w0, h0, c, pix, width, height)
                     # re-encode in the SOURCE format; gray+alpha has
-                    # no BMP/TIFF/JPEG layout here, PNG carries it
+                    # no BMP/TIFF/JPEG/GIF layout here, PNG carries it
+                    codec = next((k for k in _IMAGE_CODECS if k.mime == mime), None)
                     enc = encode_png
-                    if c in (1, 3, 4):
-                        if mime == "image/bmp":
-                            enc = encode_bmp
-                        elif mime == "image/tiff":
-                            enc = encode_tiff
-                        elif mime == "image/jpeg" and c in (1, 3):
-                            enc = encode_jpeg
-                        elif mime == "image/gif" and c in (1, 3):
-                            enc = encode_gif
+                    if codec is not None and c in codec.channels:
+                        enc = codec.encode
                     try:
                         resized = enc(width, height, c, resampled)
                     except GifUnsupported:
@@ -718,32 +679,52 @@ def sized_codec_partitions(df: DataFrame, bytes_per_task: int) -> int | None:
         return None
 
 
-def _maybe_size(df: DataFrame, n_partitions, bytes_per_task: int) -> DataFrame:
-    """Apply the ``n_partitions`` contract shared by the payload
-    synths: an int repartitions to exactly that width, ``"auto"``
-    derives the width from input size via
-    :func:`sized_codec_partitions`, None leaves the input alone.
+def _codepoints(text, n: int) -> bytes:
+    """The first ``n`` characters of ``text`` (NULL reads as empty),
+    space-padded, as codepoints mod 256, one byte each — the
+    pixel/sample values every payload synth encodes and every oracle
+    replays from the text."""
+    s = ("" if text is None else str(text))[:n].ljust(n)
+    return bytes(ord(ch) % 256 for ch in s)
 
-    The sentinel is validated explicitly (ADVICE r16): any string
-    other than ``"auto"`` raises here — passed through, PySpark would
-    interpret it as a column name and either fail at plan time with a
-    confusing AnalysisException or silently hash-partition by a real
-    column of that name."""
-    if isinstance(n_partitions, str):
-        if n_partitions != "auto":
-            raise ValueError(
-                "n_partitions must be an int, None, or the string "
-                f"'auto'; got {n_partitions!r}"
+
+def _synth_payloads(
+    df: DataFrame,
+    src_col: str,
+    id_col: str,
+    bytes_per_task: int,
+    make: Callable[..., tuple[bytes, str]],
+) -> DataFrame:
+    """The Arrow stage every payload synth runs: ``make(doc_id, text)
+    -> (payload, mime)`` once per row, emitted as ``(doc_id, payload,
+    meta{mime, n_bytes})``. The explicit (id, text) projection matters:
+    mapInPandas ships every input column to the Python worker, so
+    selecting first is what lets the parquet scan prune to 2 columns.
+    The projection is repartitioned to :func:`sized_codec_partitions`
+    BEFORE the encode stage when that returns a width: when the input's
+    file layout is coarser than the codec cost warrants (one parquet
+    row group = one task), the CPU-bound Python stage otherwise runs
+    serially on one core; the exchange moves only (id, text)."""
+    df = df.select(id_col, src_col)
+    width = sized_codec_partitions(df, bytes_per_task)
+    if width is not None:
+        df = df.repartition(width)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads, metas = [], []
+            for i, t in zip(pdf[id_col], pdf[src_col]):
+                payload, mime = make(i, t)
+                payloads.append(payload)
+                metas.append({"mime": mime, "n_bytes": len(payload)})
+            yield pd.DataFrame(
+                {"doc_id": pdf[id_col], "payload": payloads, "meta": metas}
             )
-        n_partitions = sized_codec_partitions(df, bytes_per_task)
-    if n_partitions:
-        return df.repartition(n_partitions)
-    return df
+
+    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
 
 
-def _text_to_image_payload(
-    df, src_col, width, height, id_col, encoder, mime, n_partitions=None
-):
+def _text_to_image_payload(df, src_col, width, height, id_col, encoder, mime):
     """Deterministic image synthesis for fixtures and oracle replay: a
     ``width x height`` GRAYSCALE image whose pixels are the codepoints
     (mod 256) of the first ``width*height`` characters of ``src_col``,
@@ -751,38 +732,13 @@ def _text_to_image_payload(
     recompute without a codec. The PIXELS are identical across codecs,
     so all three driver queries (PNG/BMP/TIFF) share one oracle SQL and
     a green row proves the format-specific container inverts exactly.
-    Arrow-batched, map-only. The explicit projection below matters:
-    mapInPandas ships every input column to the Python worker, so
-    selecting (id, text) first is what lets the parquet scan prune to
-    2 columns. ``n_partitions`` repartitions the 2-column projection
-    BEFORE the encode stage (the jpeg precedent, r16): when the input's
-    file layout is coarser than the core count (one parquet row group =
-    one task), the CPU-bound Python stage otherwise runs serially on
-    one core; the exchange moves only (id, text). Leave None to inherit
-    the scan's partitioning (the 100 TB case, where row groups already
-    out-number cores)."""
+    Arrow-batched (see :func:`_synth_payloads`)."""
     n = width * height
-    df = _maybe_size(df.select(id_col, src_col), n_partitions, _BPT_CHEAP)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf[src_col]:
-                s = ("" if t is None else str(t))[:n].ljust(n)
-                payloads.append(
-                    encoder(width, height, 1, bytes(ord(ch) % 256 for ch in s))
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": mime, "n_bytes": len(p)} for p in payloads
-                    ],
-                }
-            )
+    def make(_i, t):
+        return encoder(width, height, 1, _codepoints(t, n)), mime
 
-    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
+    return _synth_payloads(df, src_col, id_col, _BPT_CHEAP, make)
 
 
 def text_to_png_payload(
@@ -791,13 +747,11 @@ def text_to_png_payload(
     width: int = 8,
     height: int = 8,
     id_col: str = "doc_id",
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """Codepoints-mod-256 grayscale PNG per document (see
     :func:`_text_to_image_payload`)."""
     return _text_to_image_payload(
-        df, src_col, width, height, id_col, encode_png, "image/png",
-        n_partitions=n_partitions,
+        df, src_col, width, height, id_col, encode_png, "image/png"
     )
 
 
@@ -807,14 +761,12 @@ def text_to_bmp_payload(
     width: int = 8,
     height: int = 8,
     id_col: str = "doc_id",
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """BMP twin of :func:`text_to_png_payload`: 8-bit BI_RGB with a
     grayscale identity palette — exercises bottom-up row order, palette
     handling, and row padding end-to-end."""
     return _text_to_image_payload(
-        df, src_col, width, height, id_col, encode_bmp, "image/bmp",
-        n_partitions=n_partitions,
+        df, src_col, width, height, id_col, encode_bmp, "image/bmp"
     )
 
 
@@ -824,13 +776,11 @@ def text_to_tiff_payload(
     width: int = 8,
     height: int = 8,
     id_col: str = "doc_id",
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """TIFF twin of :func:`text_to_png_payload`: baseline uncompressed
     gray — exercises the IFD walk and strip assembly end-to-end."""
     return _text_to_image_payload(
-        df, src_col, width, height, id_col, encode_tiff, "image/tiff",
-        n_partitions=n_partitions,
+        df, src_col, width, height, id_col, encode_tiff, "image/tiff"
     )
 
 
@@ -841,7 +791,6 @@ def text_to_gif_payload(
     height: int = 8,
     id_col: str = "doc_id",
     interlace_every: int | None = 3,
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """GIF twin of :func:`text_to_png_payload`: the same
     codepoints-mod-256 grayscale image, packaged as a single-frame GIF
@@ -849,38 +798,17 @@ def text_to_gif_payload(
     pixel-sum oracle replays unchanged and a green row proves the LZW
     stream, sub-block walk and palette machinery invert exactly. Every
     ``interlace_every``-th doc is written INTERLACED (the 4-pass row
-    order), folding that path into the same query. ``n_partitions``
-    sizes the CPU-bound LZW stage to cores when the input layout is
-    coarser than the core count — the jpeg precedent (LZW encode+decode
-    is the most expensive codec pair after JPEG); None inherits the
-    scan's partitioning (the 100 TB case)."""
+    order), folding that path into the same query. LZW encode+decode
+    is the most expensive codec pair after JPEG, hence its own
+    bytes-per-task class."""
     n = width * height
-    df = _maybe_size(df.select(id_col, src_col), n_partitions, _BPT_GIF)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_col], pdf[src_col]):
-                s = ("" if t is None else str(t))[:n].ljust(n)
-                px = bytes(ord(ch) % 256 for ch in s)
-                payloads.append(
-                    encode_gif(
-                        width, height, 1, px,
-                        interlace=bool(interlace_every)
-                        and int(i) % interlace_every == 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": "image/gif", "n_bytes": len(p)} for p in payloads
-                    ],
-                }
-            )
+    def make(i, t):
+        interlace = bool(interlace_every) and int(i) % interlace_every == 0
+        px = _codepoints(t, n)
+        return encode_gif(width, height, 1, px, interlace=interlace), "image/gif"
 
-    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
+    return _synth_payloads(df, src_col, id_col, _BPT_GIF, make)
 
 
 def text_to_jpeg_payload(
@@ -892,7 +820,6 @@ def text_to_jpeg_payload(
     color_every: int | None = 3,
     progressive_every: int | None = None,
     cmyk_every: int | None = None,
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """JPEG twin of :func:`text_to_png_payload`, built around the one
     thing a LOSSY codec can replay exactly: a DC-only image. Each
@@ -919,70 +846,43 @@ def text_to_jpeg_payload(
     coefficients, so the features replay from the text UNCHANGED and
     the green row proves the progressive scan machinery end-to-end
     with no registry growth (the WAV ``float_every`` pattern).
-    Arrow-batched; projects (id, text) first so the scan prunes.
-    ``n_partitions`` repartitions BEFORE the encode stage: JPEG work
-    is ~10x the other codecs per byte, so when the input's file
-    layout is coarser than the core count (one parquet file = one
-    task), sizing the CPU-bound stage to cores is the correct Spark
-    pattern — the exchange moves only (id, text) and buys full-width
-    parallelism for the expensive map. Leave None to inherit the
-    scan's partitioning (the 100 TB case, where row-groups already
-    out-number cores)."""
+    Arrow-batched (see :func:`_synth_payloads`); JPEG work is ~10x the
+    other codecs per byte, hence the narrowest bytes-per-task class."""
     n = blocks_x * blocks_y
     width, height = 8 * blocks_x, 8 * blocks_y
-    df = _maybe_size(df.select(id_col, src_col), n_partitions, _BPT_JPEG)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf[id_col], pdf[src_col]):
-                s = ("" if t is None else str(t))[:n].ljust(n)
-                vals = np.array(
-                    [ord(ch) % 256 for ch in s], dtype=np.uint8
-                ).reshape(blocks_y, blocks_x)
-                gray = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                enc = (
-                    encode_jpeg_progressive
-                    if progressive_every and int(i) % progressive_every == 0
-                    else encode_jpeg
-                )
-                if cmyk_every and int(i) % cmyk_every == 0:
-                    # Adobe CMYK (r13): each component plane constant =
-                    # one codepoint in STORED (inverted) space; the
-                    # decoder's composite RGB = (c*k + 127) // 255
-                    # replays exactly from the text for DC-only blocks
-                    flat = vals.reshape(-1)[:4]
-                    cmyk = np.empty((height, width, 4), dtype=np.uint8)
-                    for ci in range(4):
-                        cmyk[:, :, ci] = flat[ci]
-                    payloads.append(
-                        encode_jpeg(width, height, 4, cmyk.tobytes())
-                    )
-                elif color_every and int(i) % color_every == 0:
-                    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                    payloads.append(
-                        enc(width, height, 3, rgb.tobytes(), subsampling="420")
-                    )
-                else:
-                    payloads.append(enc(width, height, 1, gray.tobytes()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": "image/jpeg", "n_bytes": len(p)} for p in payloads
-                    ],
-                }
-            )
+    def make(i, t):
+        vals = np.frombuffer(_codepoints(t, n), dtype=np.uint8)
+        vals = vals.reshape(blocks_y, blocks_x)
+        gray = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        enc = (
+            encode_jpeg_progressive
+            if progressive_every and int(i) % progressive_every == 0
+            else encode_jpeg
+        )
+        if cmyk_every and int(i) % cmyk_every == 0:
+            # Adobe CMYK (r13): each component plane constant = one
+            # codepoint in STORED (inverted) space; the decoder's
+            # composite RGB = (c*k + 127) // 255 replays exactly from
+            # the text for DC-only blocks
+            flat = vals.reshape(-1)[:4]
+            cmyk = np.empty((height, width, 4), dtype=np.uint8)
+            for ci in range(4):
+                cmyk[:, :, ci] = flat[ci]
+            return encode_jpeg(width, height, 4, cmyk.tobytes()), "image/jpeg"
+        if color_every and int(i) % color_every == 0:
+            rgb = np.repeat(gray[:, :, None], 3, axis=2)
+            payload = enc(width, height, 3, rgb.tobytes(), subsampling="420")
+            return payload, "image/jpeg"
+        return enc(width, height, 1, gray.tobytes()), "image/jpeg"
 
-    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
+    return _synth_payloads(df, src_col, id_col, _BPT_JPEG, make)
 
 
 def text_to_gif_animation_payload(
     df: DataFrame,
     src_col: str = "text",
     id_col: str = "doc_id",
-    n_partitions: int | Literal["auto"] | None = None,
 ) -> DataFrame:
     """Animated-GIF twin (VERDICT r12 #1): each document becomes a
     deterministic FOUR-frame 8x8 GIF89a animation whose frame pixels
@@ -1001,48 +901,27 @@ def text_to_gif_animation_payload(
     Each composited canvas sum is a closed-form expression over the
     codepoints, so the DuckDB oracle replays all four frames from the
     text — transparency and both non-trivial disposal methods are
-    value-hash-checked, not just pytest-covered.
-
-    ``n_partitions`` sizes the CPU-bound four-frame LZW encode stage
-    to cores when the input layout is coarser than the core count (the
-    jpeg precedent); None inherits the scan's partitioning (the 100 TB
-    case)."""
+    value-hash-checked, not just pytest-covered."""
     from .gif import encode_gif_animation
 
-    df = _maybe_size(df.select(id_col, src_col), n_partitions, _BPT_GIF)
+    def make(_i, t):
+        cp = np.frombuffer(_codepoints(t, 88), dtype=np.uint8)
+        payload = encode_gif_animation(
+            8,
+            8,
+            [
+                cp[:64].reshape(8, 8),
+                cp[64:80].reshape(4, 4),
+                cp[80:84].reshape(2, 2),
+                cp[84:88].reshape(2, 2),
+            ],
+            disposals=[0, 2, 3, 0],
+            transparents=[None, 0, None, None],
+            offsets=[(0, 0), (2, 2), (0, 0), (6, 0)],
+        )
+        return payload, "image/gif"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf[src_col]:
-                s = ("" if t is None else str(t))[:88].ljust(88)
-                cp = np.array([ord(ch) % 256 for ch in s], dtype=np.uint8)
-                payloads.append(
-                    encode_gif_animation(
-                        8,
-                        8,
-                        [
-                            cp[:64].reshape(8, 8),
-                            cp[64:80].reshape(4, 4),
-                            cp[80:84].reshape(2, 2),
-                            cp[84:88].reshape(2, 2),
-                        ],
-                        disposals=[0, 2, 3, 0],
-                        transparents=[None, 0, None, None],
-                        offsets=[(0, 0), (2, 2), (0, 0), (6, 0)],
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": payloads,
-                    "meta": [
-                        {"mime": "image/gif", "n_bytes": len(p)} for p in payloads
-                    ],
-                }
-            )
-
-    return df.mapInPandas(run, _TEXT_IMAGE_SCHEMA)
+    return _synth_payloads(df, src_col, id_col, _BPT_GIF, make)
 
 
 FRAME_SCHEMA = T.StructType(

@@ -857,10 +857,6 @@ def embed_neardup_pairs(
 #  - or Catalyst's sizeInBytes estimate x k > 4 GB of assignment rows
 _EXPR_ASSIGN_WARN_K = 128
 _EXPR_ASSIGN_WARN_BYTES_K = 4_000_000_000
-# embed_neardup_pairs eager-count guard (VERDICT r9 #5): stay silent
-# only when Catalyst proves the input below this — test frames are KBs,
-# any real corpus slice is GBs, so 64 MB cleanly separates the two
-_EAGER_COUNT_WARN_BYTES = 64_000_000
 
 
 _SAMPLE_PARTS = 4  # partitions counted by _sampled_count_estimate

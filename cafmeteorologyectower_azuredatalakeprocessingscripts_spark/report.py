@@ -8,9 +8,8 @@ per station (S9), last-10-day clip (A3+P3), column pruning to the
 grouped variables — all of which Catalyst pushes into the parquet scan.
 
 ``report_frames`` does the Spark-side work and hands tiny pandas frames
-to the renderer; ``render_pdf`` uses matplotlib when installed and
-otherwise falls back to ``render_pdf_vector``, a stdlib-only raw-PDF
-line-chart writer, so a real multi-page PDF always comes out;
+to the renderer; ``render_pdf`` is a stdlib-only raw-PDF line-chart
+writer, so a real multi-page PDF comes out without plotting libraries;
 ``render_csv`` is the plot-free tabular alternative.
 """
 
@@ -211,14 +210,14 @@ def _page_content(label, vs, frames, w=612.0, h=792.0) -> str:
     return "\n".join(ops)
 
 
-def render_pdf_vector(frames, out_path: str, groups=None) -> str:
+def render_pdf(frames, out_path: str, groups=None) -> str:
     """Dependency-free multi-page PDF: one page per variable group, one
     framed subplot per variable, one colored polyline per station, with
     min/max tick labels and a station legend — the reference report's
     structure (src/TowerReportPlots.py:87-124) drawn with raw PDF path
     operators (m/l/S) and Helvetica text, stdlib only. Not matplotlib:
     no ticks between min/max, no date axis labels — the honest minimal
-    chart, not a stub."""
+    chart, not a stub. Raises ``ValueError`` when no group has data."""
     groups = dict(groups or VARIABLE_GROUPS)
     pages = [
         (label, vs)
@@ -277,40 +276,4 @@ def render_pdf_vector(frames, out_path: str, groups=None) -> str:
     )
     with open(out_path, "wb") as f:
         f.write(bytes(out))
-    return out_path
-
-
-def render_pdf(frames, out_path: str, groups=None) -> str:
-    """Multi-page PDF, one page per group / subplot per variable / line
-    per station (src/TowerReportPlots.py:87-124). Uses matplotlib when
-    installed; otherwise the stdlib vector renderer
-    (:func:`render_pdf_vector`)."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-        from matplotlib.backends.backend_pdf import PdfPages
-    except ImportError:
-        return render_pdf_vector(frames, out_path, groups)
-
-    groups = dict(groups or VARIABLE_GROUPS)
-    with PdfPages(out_path) as pdf_pages:  # pragma: no cover - env-dependent
-        for label, vs in groups.items():
-            fig = plt.figure(figsize=(8, 8))
-            fig.suptitle(label, fontsize=14, fontweight="bold")
-            plotted_any = False
-            for idx, var in enumerate(vs, 1):
-                ax = plt.subplot(len(vs), 1, idx)
-                for station, pdf in frames.items():
-                    if var in pdf.columns and pdf[var].notna().any():
-                        ax.plot(pdf.index, pdf[var].astype(float), label=station)
-                        plotted_any = True
-                ax.set_ylabel(var, fontsize=12)
-                if plotted_any:
-                    ax.legend(fontsize=8)
-            if plotted_any:
-                fig.tight_layout(rect=[0, 0.03, 1, 0.95])
-                pdf_pages.savefig(fig)
-            plt.close(fig)
     return out_path

@@ -306,7 +306,7 @@ def test_render_pdf_stdlib_vector(tmp_path):
 
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.report import (
         VARIABLE_GROUPS,
-        render_pdf_vector,
+        render_pdf,
     )
 
     idx = pd.date_range(dt.datetime(2022, 1, 1), periods=48, freq="30min")
@@ -319,9 +319,8 @@ def test_render_pdf_stdlib_vector(tmp_path):
         "BoydNorth": pd.DataFrame({"H": [10.0] * 48}, index=idx),
     }
     out = str(tmp_path / "report.pdf")
-    # the vector backend directly: render_pdf dispatches to matplotlib
-    # when installed, whose compressed streams these byte checks can't see
-    assert render_pdf_vector(frames, out) == out
+    # uncompressed content streams: the byte checks below read them
+    assert render_pdf(frames, out) == out
     raw = open(out, "rb").read()
     assert raw.startswith(b"%PDF-1.4") and raw.rstrip().endswith(b"%%EOF")
     # groups with data: Heat+Energy (H, LE) and Temperature (TA_1_1_1)
@@ -344,11 +343,11 @@ def test_render_pdf_vector_rejects_empty_and_xlsx_errors_name_problem(tmp_path):
     import pandas as pd
 
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.report import (
-        render_pdf_vector,
+        render_pdf,
     )
 
     with pytest.raises(ValueError, match="plottable"):
-        render_pdf_vector(
+        render_pdf(
             {"CookEast": pd.DataFrame({"NOT_A_GROUP_VAR": [1.0]})},
             str(tmp_path / "empty.pdf"),
         )
@@ -406,7 +405,7 @@ def test_pdf_vector_non_ascii_degrades_to_latin1(tmp_path):
     import pandas as pd
 
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.report import (
-        render_pdf_vector,
+        render_pdf,
     )
 
     idx = pd.date_range(dt.datetime(2022, 1, 1), periods=4, freq="30min")
@@ -415,7 +414,7 @@ def test_pdf_vector_non_ascii_degrades_to_latin1(tmp_path):
         "站北": pd.DataFrame({"H": [5.0] * 4}, index=idx),
     }
     out = str(tmp_path / "latin1.pdf")
-    render_pdf_vector(frames, out)
+    render_pdf(frames, out)
     raw = open(out, "rb").read()
     assert b"(Caf\xe9)" in raw          # latin-1 single byte
     assert b"Caf\xc3\xa9" not in raw     # no UTF-8 double byte

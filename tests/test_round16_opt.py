@@ -59,8 +59,9 @@ def test_sized_codec_partitions_grows_with_input(spark):
 
 
 def test_payload_synth_auto_width_rows_identical(spark):
-    """n_partitions='auto' must not change a single payload byte —
-    only the stage width."""
+    """The sized stage width must not change a single payload byte:
+    a one-partition input and an eight-partition input of the same
+    docs emit the same payloads."""
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.multimodal import (
         text_to_gif_payload,
     )
@@ -69,15 +70,14 @@ def test_payload_synth_auto_width_rows_identical(spark):
         [(i, f"doc {i} " + "abcdefgh" * 12) for i in range(50)],
         "doc_id long, text string",
     )
-    plain = {
-        r["doc_id"]: bytes(r["payload"])
-        for r in text_to_gif_payload(df, "text").collect()
-    }
-    auto = {
-        r["doc_id"]: bytes(r["payload"])
-        for r in text_to_gif_payload(df, "text", n_partitions="auto").collect()
-    }
-    assert plain == auto
+
+    def payloads(src):
+        return {
+            r["doc_id"]: bytes(r["payload"])
+            for r in text_to_gif_payload(src, "text").collect()
+        }
+
+    assert payloads(df.coalesce(1)) == payloads(df.repartition(8))
 
 
 # --------------- change B: fused merge tails (bpe.py / wordpiece.py)

@@ -5,9 +5,8 @@ round's changes:
   an EAGER full df.count() when Catalyst stats are unavailable — it
   estimates from a bounded sampled-partition job (no warning, no full
   pass).
-- ADVICE r16: _maybe_size validates the n_partitions sentinel (a typo'd
-  string raises instead of becoming a column name), and
-  sized_codec_partitions degrades to None on any internal-API failure.
+- ADVICE r16: sized_codec_partitions degrades to None on any
+  internal-API failure.
 """
 
 from __future__ import annotations
@@ -300,23 +299,6 @@ def test_jpeg_roundtrip_unchanged_after_codec_micro_opts():
 
 
 # ------------------------------- ADVICE r16: codec width sizing guards
-
-
-def test_maybe_size_rejects_typod_sentinel(spark):
-    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.multimodal import (
-        _BPT_CHEAP,
-        _maybe_size,
-    )
-
-    df = spark.range(4).selectExpr("id as doc_id", "string(id) as text")
-    with pytest.raises(ValueError, match="auto"):
-        _maybe_size(df, "Auto", _BPT_CHEAP)
-    with pytest.raises(ValueError, match="auto"):
-        _maybe_size(df, "text", _BPT_CHEAP)  # a REAL column name: must not hash-partition by it
-    # the supported spellings still work
-    assert _maybe_size(df, None, _BPT_CHEAP) is df
-    assert _maybe_size(df, 2, _BPT_CHEAP).rdd.getNumPartitions() == 2
-    _maybe_size(df, "auto", _BPT_CHEAP)  # sentinel path constructs fine
 
 
 def test_sized_codec_partitions_degrades_to_none_on_planning_failure(
