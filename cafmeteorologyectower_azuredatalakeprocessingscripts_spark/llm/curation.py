@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import shingles
+from .dedup import _ngram_arr, shingles
 from .text import _c, norm_text, token_count
 from ..operators.skew import repartition_pinned
 
@@ -232,14 +232,7 @@ def top_ngram_share(
     document count, not gram count. Documents with fewer than ``n``
     tokens have no n-grams and report 0.
     """
-    toks = F.split(norm_text(text_col), " ")
-    arr = toks
-    for k in range(1, n):
-        arr = F.zip_with(
-            arr,
-            F.slice(toks, k + 1, F.size(toks)),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        )
+    arr = _ngram_arr(F.split(norm_text(text_col), " "), n)
     grams = (
         repartition_pinned(df, F.col(id_col))
         .select(F.col(id_col), F.explode(arr).alias("g"))

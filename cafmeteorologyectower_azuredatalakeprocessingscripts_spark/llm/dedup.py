@@ -56,8 +56,9 @@ def _ngram_arr(toks: Column, n: int) -> Column:
     ``slice`` + ``array_join``). zip pads the shorter side with null and
     null concat -> null, so the trailing (n-1) incomplete grams come out
     null — CALLERS MUST FILTER/IGNORE NULLS. Shared by shingles(),
-    cross_doc_span_fraction() and remove_duplicate_spans() so the gram
-    identity can never diverge between detection and removal."""
+    cross_doc_span_fraction(), remove_duplicate_spans() and
+    curation.top_ngram_share() so the gram identity can never diverge
+    between detection and removal."""
     arr = toks
     for k in range(1, n):
         arr = F.zip_with(
@@ -227,27 +228,13 @@ def cross_doc_span_fraction(
     )
 
 
-def remove_duplicate_spans(
-    df: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-    keep_first: bool = False,
+def _span_removal(
+    df: DataFrame, n: int, text_col: str, id_col: str, min_docs: int,
+    modes: tuple[str, ...],
 ) -> DataFrame:
-    """Exact-substring dedup, the REMOVAL op (Lee et al. 2022 ExactSubstr
-    — :func:`cross_doc_span_fraction` is the matching detection signal):
-    (id, text_clean, n_tokens, n_removed) where every token covered by
-    an n-token span occurring in at least ``min_docs`` distinct
-    documents is dropped and the survivors are rejoined in order.
-    Output text is the NORMALIZED form (whitespace-collapsed,
-    lower-cased — span identity is defined on normalized tokens, so the
-    cleaned text is too; the reference implementation operates on the
-    tokenized corpus for the same reason).
-
-    ``keep_first=True`` keeps one canonical occurrence: the document
-    with the smallest id among a span's carriers keeps its tokens (the
-    paper's leave-one variant); other documents still lose theirs.
+    """(id, dedup_mode, text_clean, n_tokens, n_removed), one row per
+    document per entry of ``modes`` (in that order): the one builder of
+    :func:`remove_duplicate_spans` and :func:`remove_duplicate_spans_modes`.
 
     Scale shape (never an all-pairs): one doc-keyed repartition feeding
     the token and span explodes; corpus-wide span document-frequency is
@@ -255,9 +242,10 @@ def remove_duplicate_spans(
     span slots, 8-byte keys); dup slots come back by one sp_h-keyed
     join; covered positions fan out dup_slots x n — bounded by the
     corpus's DUPLICATED mass only, the quantity the op exists to
-    remove — and collapse under the doc partitioning. Reconstruction
-    is one doc-keyed aggregation: order rides a (pos, token) struct
-    sort inside the group, no global sort.
+    remove — and collapse under the doc partitioning to one coverage
+    flag per (doc, pos). One doc-keyed aggregation rebuilds every
+    mode's text (order rides a (pos, token) struct sort inside the
+    group, no global sort); one inline explode emits several modes.
     """
     toks = F.split(norm_text(text_col), " ")
     arr = _ngram_arr(toks, n)
@@ -282,48 +270,87 @@ def remove_duplicate_spans(
         .select("sp_h", "__first")
     )
     slots = spans.join(dup, "sp_h")
-    if keep_first:
+    if "all" not in modes:
+        # first-carrier slots cover nothing in keep_first: drop them
+        # before the x n fan-out (__cov_kf is then 1 or NULL)
         slots = slots.filter(F.col(id_col) != F.col("__first"))
     covered = (
         slots.select(
             F.col(id_col),
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + (n - 1))).alias(
-                "pos"
-            ),
+            F.explode(F.sequence("pos", F.col("pos") + (n - 1))).alias("pos"),
+            (F.col(id_col) != F.col("__first")).cast("int").alias("__kf"),
         )
         .groupBy(id_col, "pos")
-        .agg(F.lit(1).alias("__cov"))
+        .agg(F.max("__kf").alias("__cov_kf"))
     )
+    # __cov_kf per token: NULL = no duplicated span covers it; 0 = only
+    # spans whose smallest-id carrier is this document do
+    cov = F.col("__cov_kf")
+    kept = {"all": cov.isNull(), "keep_first": cov.isNull() | (cov == 0)}
     rebuilt = (
         tok.join(covered, [id_col, "pos"], "left")
         .groupBy(id_col)
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("__cov").isNull(),
-                                F.struct(F.col("pos"), F.col("tok")),
+            F.count(F.lit(1)).alias("n_tokens"),
+            *[
+                F.array_join(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(
+                                F.when(kept[m], F.struct("pos", "tok"))
                             )
-                        )
+                        ),
+                        lambda x: x["tok"],
                     ),
-                    lambda x: x["tok"],
-                ),
-                " ",
-            ).alias("text_clean"),
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum(
-                F.when(F.col("__cov").isNotNull(), 1).otherwise(0)
-            ).cast("bigint").alias("n_removed"),
+                    " ",
+                ).alias(f"__text_{m}")
+                for m in modes
+            ],
+            *[F.count_if(~kept[m]).alias(f"__rm_{m}") for m in modes],
         )
     )
-    return df.select(id_col).join(rebuilt, id_col, "left").select(
-        id_col,
-        F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-        F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias("n_tokens"),
-        F.coalesce("n_removed", F.lit(0)).cast("bigint").alias("n_removed"),
-    )
+    cols = [
+        [
+            F.lit(m).alias("dedup_mode"),
+            F.coalesce(f"__text_{m}", F.lit("")).alias("text_clean"),
+            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
+            F.coalesce(f"__rm_{m}", F.lit(0)).alias("n_removed"),
+        ]
+        for m in modes
+    ]
+    if len(cols) > 1:  # one output row per (doc, mode)
+        cols = [[F.inline(F.array(*[F.struct(*c) for c in cols]))]]
+    wide = df.select(id_col).join(rebuilt, id_col, "left")
+    return wide.select(F.col(id_col), *cols[0])
+
+
+def remove_duplicate_spans(
+    df: DataFrame,
+    n: int = 13,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    min_docs: int = 2,
+    keep_first: bool = False,
+) -> DataFrame:
+    """Exact-substring dedup, the REMOVAL op (Lee et al. 2022 ExactSubstr
+    — :func:`cross_doc_span_fraction` is the matching detection signal):
+    (id, text_clean, n_tokens, n_removed) where every token covered by
+    an n-token span occurring in at least ``min_docs`` distinct
+    documents is dropped and the survivors are rejoined in order.
+    Output text is the NORMALIZED form (whitespace-collapsed,
+    lower-cased — span identity is defined on normalized tokens, so the
+    cleaned text is too; the reference implementation operates on the
+    tokenized corpus for the same reason).
+
+    ``keep_first=True`` keeps one canonical occurrence: the document
+    with the smallest id among a span's carriers keeps its tokens (the
+    paper's leave-one variant); other documents still lose theirs.
+    Scale shape: :func:`_span_removal`.
+    """
+    mode = "keep_first" if keep_first else "all"
+    return _span_removal(
+        df, n, text_col, id_col, min_docs, (mode,)
+    ).drop("dedup_mode")
 
 
 def remove_duplicate_spans_modes(
@@ -336,124 +363,14 @@ def remove_duplicate_spans_modes(
     """Both :func:`remove_duplicate_spans` modes in ONE corpus pass —
     (id, dedup_mode 'all'|'keep_first', text_clean, n_tokens,
     n_removed), two rows per document, row-identical to unioning the
-    single-mode calls (pinned by test).
-
-    The modes differ only in which covering slots count (keep_first
-    exempts the span's smallest-id carrier), so the span
-    document-frequency aggregation, the covered-position fan-out, and
-    the doc-keyed rebuild — every expensive stage — are shared: the
-    coverage aggregation carries two flags (any-slot, any-non-first
-    slot), the rebuild computes both cleaned texts in the same
-    ``collect_list`` pass, and a 2-element inline explode emits the
-    mode rows. Measured vs the naive union of two single-mode plans:
-    the union re-ran the whole pipeline per mode (22 scans / 28 live
-    exchanges at sf0.01 — ReuseExchange recovered only 5), this form
-    halves it. Running one mode? Use :func:`remove_duplicate_spans`.
+    single-mode calls (pinned by test). The span document-frequency
+    aggregation, the coverage fan-out and the doc-keyed rebuild are
+    built once for both modes: the naive union of two single-mode plans
+    re-ran the whole pipeline per mode (22 scans / 28 live exchanges at
+    sf0.01; ReuseExchange recovered only 5).
     """
-    toks = F.split(norm_text(text_col), " ")
-    arr = _ngram_arr(toks, n)
-    base = repartition_pinned(
-        df.filter(F.col(id_col).isNotNull()), F.col(id_col)
-    )
-    tok = base.select(
-        F.col(id_col), F.posexplode(toks).alias("pos", "tok")
-    ).filter(F.col("tok") != "")
-    spans = (
-        base.select(F.col(id_col), F.posexplode(arr).alias("pos", "__sp"))
-        .filter(F.col("__sp").isNotNull())
-        .select(id_col, "pos", md5_int(F.col("__sp")).alias("sp_h"))
-    )
-    dup = (
-        spans.groupBy("sp_h")
-        .agg(
-            F.count_distinct(F.col(id_col)).alias("__df"),
-            F.min(id_col).alias("__first"),
-        )
-        .filter(F.col("__df") >= min_docs)
-        .select("sp_h", "__first")
-    )
-    covered = (
-        spans.join(dup, "sp_h")
-        .select(
-            F.col(id_col),
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + (n - 1))).alias(
-                "pos"
-            ),
-            (F.col(id_col) != F.col("__first")).cast("int").alias("__kf"),
-        )
-        .groupBy(id_col, "pos")
-        .agg(F.max("__kf").alias("__cov_kf"))
-        # every surviving row is covered in 'all' mode; covered in
-        # 'keep_first' mode iff some covering slot is a non-first
-        # carrier (__cov_kf = 1)
-    )
-    j = tok.join(covered, [id_col, "pos"], "left")
-    kept_kf = F.col("__cov_kf").isNull() | (F.col("__cov_kf") == 0)
-    rebuilt = j.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("__cov_kf").isNull(),
-                            F.struct(F.col("pos"), F.col("tok")),
-                        )
-                    )
-                ),
-                lambda x: x["tok"],
-            ),
-            " ",
-        ).alias("__text_all"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(kept_kf, F.struct(F.col("pos"), F.col("tok")))
-                    )
-                ),
-                lambda x: x["tok"],
-            ),
-            " ",
-        ).alias("__text_kf"),
-        F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-        F.sum(F.when(F.col("__cov_kf").isNotNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("__rm_all"),
-        F.sum(F.when(kept_kf, 0).otherwise(1)).cast("bigint").alias("__rm_kf"),
-    )
-    wide = df.select(id_col).join(rebuilt, id_col, "left")
-    return wide.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("all").alias("dedup_mode"),
-                    F.coalesce("__text_all", F.lit("")).alias("text_clean"),
-                    F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias(
-                        "n_tokens"
-                    ),
-                    F.coalesce("__rm_all", F.lit(0)).cast("bigint").alias(
-                        "n_removed"
-                    ),
-                ),
-                F.struct(
-                    F.lit("keep_first").alias("dedup_mode"),
-                    F.coalesce("__text_kf", F.lit("")).alias("text_clean"),
-                    F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias(
-                        "n_tokens"
-                    ),
-                    F.coalesce("__rm_kf", F.lit(0)).cast("bigint").alias(
-                        "n_removed"
-                    ),
-                ),
-            )
-        ).alias("__m"),
-    ).select(
-        id_col,
-        F.col("__m.dedup_mode").alias("dedup_mode"),
-        F.col("__m.text_clean").alias("text_clean"),
-        F.col("__m.n_tokens").alias("n_tokens"),
-        F.col("__m.n_removed").alias("n_removed"),
+    return _span_removal(
+        df, n, text_col, id_col, min_docs, ("all", "keep_first")
     )
 
 

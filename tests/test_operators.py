@@ -141,6 +141,48 @@ def test_latest_per_group(spark):
     assert got == {"a": "a_20220301", "b": "b_20220201"}
 
 
+def test_file_name_dates_and_aggregate_csv(spark, tmp_path):
+    """File-name dates (S4/S9) and the single-file CSV sink (S5): an
+    aggregate name built for a date parses back to that date through
+    the Spark expression and the compat helper, a raw daily name yields
+    its embedded date, and the export is one time-ordered CSV with a
+    header."""
+    import glob
+
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.compat import (
+        get_datetime_from_filename,
+    )
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.sources.files import (
+        file_date_from_daily_name,
+        file_date_from_stem,
+    )
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.sources.sinks import (
+        build_aggregate_filename,
+        write_aggregate_csv,
+    )
+
+    d = dt.date(2023, 11, 7)
+    agg = build_aggregate_filename("CookEast", "Flux", 2024, "Ver00", on_date=d)
+    assert get_datetime_from_filename(agg) == TS(2023, 11, 7)
+    names = spark.createDataFrame(
+        [(f"/agg/{agg}", "/raw/CookEast_Flux_2024_03_15_0000.dat")], "agg string, raw string"
+    )
+    got = names.select(
+        file_date_from_stem("agg").alias("stem"), file_date_from_daily_name("raw").alias("daily")
+    ).first()
+    assert got.stem == d
+    assert got.daily == dt.date(2024, 3, 15)
+
+    rows = [Row(TIMESTAMP=TS(2024, 1, 1, h), v=h) for h in (3, 0, 2, 1)]
+    out = str(tmp_path / "agg_csv")
+    write_aggregate_csv(spark.createDataFrame(rows), out)
+    (part,) = glob.glob(f"{out}/part-*.csv")
+    with open(part) as f:
+        lines = f.read().splitlines()
+    assert lines[0] == "TIMESTAMP,v"
+    assert [ln.rsplit(",", 1)[1] for ln in lines[1:]] == ["0", "1", "2", "3"]
+
+
 def test_read_toa5_allow_missing_returns_empty_typed(spark, tmp_path):
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.schemas import get_schema
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.sources.toa5 import read_toa5
