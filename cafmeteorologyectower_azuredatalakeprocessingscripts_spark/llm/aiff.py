@@ -35,6 +35,8 @@ import struct
 
 import numpy as np
 
+from ._codec import pcm_pack, pcm_unpack, walk_chunks, write_form
+
 
 class AiffUnsupported(ValueError):
     """Payload is not an AIFF this codec handles (bad magic,
@@ -55,8 +57,7 @@ def _read_extended(b: bytes) -> int:
     parse is exact for them)."""
     if len(b) != 10:
         raise AiffUnsupported("bad extended float")
-    (se,) = struct.unpack(">H", b[:2])
-    (mant,) = struct.unpack(">Q", b[2:])
+    se, mant = struct.unpack(">HQ", b)
     sign = -1 if se & 0x8000 else 1
     exp = se & 0x7FFF
     if exp == 0 and mant == 0:
@@ -92,77 +93,41 @@ def decode_aiff(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     if not is_aiff(data):
         raise AiffUnsupported("bad signature")
     is_aifc = data[8:12] == b"AIFC"
-    comm = None
-    little = False
-    ssnd = None
-    pos = 12
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack_from(">I", data, pos + 4)
-        body_off = pos + 8
-        if body_off + size > len(data):
-            if comm is not None and ssnd is not None:
-                break  # malformed trailing chunk: audio already in hand
-            raise AiffUnsupported(
-                f"chunk {cid!r} claims {size} bytes past payload end"
-            )
-        if cid == b"COMM":
-            if size < 18:
-                raise AiffUnsupported(f"COMM chunk too small ({size})")
-            channels, n_frames, bits = struct.unpack_from(">HIH", data, body_off)
-            rate = _read_extended(data[body_off + 8 : body_off + 18])
-            if is_aifc:
-                if size < 22:
-                    raise AiffUnsupported("AIFC COMM missing compression id")
-                ctype = data[body_off + 18 : body_off + 22]
-                if ctype == b"sowt":
-                    little = True
-                elif ctype != b"NONE":
-                    raise AiffUnsupported(
-                        f"AIFC compression {ctype!r} (only NONE/sowt)"
-                    )
-            comm = (channels, n_frames, bits, rate)
-        elif cid == b"SSND":
-            if size < 8:
-                raise AiffUnsupported("SSND chunk too small")
-            off_, _block = struct.unpack_from(">II", data, body_off)
-            if 8 + off_ > size:
-                raise AiffUnsupported("SSND offset overruns chunk")
-            ssnd = (body_off + 8 + off_, size - 8 - off_)
-        pos = body_off + size + (size & 1)  # odd sizes carry a pad byte
-
-    if comm is None:
-        raise AiffUnsupported("missing COMM chunk")
-    if ssnd is None:
-        raise AiffUnsupported("missing SSND chunk")
-    channels, n_frames, bits, rate = comm
+    chunks = walk_chunks(data, ">", (b"COMM", b"SSND"), AiffUnsupported)
+    body_off, size = chunks[b"COMM"]
+    if size < 18:
+        raise AiffUnsupported(f"COMM chunk too small ({size})")
+    channels, n_frames, bits = struct.unpack_from(">HIH", data, body_off)
+    rate = _read_extended(data[body_off + 8 : body_off + 18])
+    bo = ">"
+    if is_aifc:
+        if size < 22:
+            raise AiffUnsupported("AIFC COMM missing compression id")
+        ctype = data[body_off + 18 : body_off + 22]
+        if ctype == b"sowt":
+            bo = "<"
+        elif ctype != b"NONE":
+            raise AiffUnsupported(f"AIFC compression {ctype!r} (only NONE/sowt)")
+    body_off, size = chunks[b"SSND"]
+    if size < 8:
+        raise AiffUnsupported("SSND chunk too small")
+    off_, _block = struct.unpack_from(">II", data, body_off)
+    if 8 + off_ > size:
+        raise AiffUnsupported("SSND offset overruns chunk")
+    off, avail = body_off + 8 + off_, size - 8 - off_
     if channels < 1:
         raise AiffUnsupported("zero channels")
     if rate <= 0:
         raise AiffUnsupported(f"sample rate {rate}")
     if bits not in (8, 16, 24, 32):
         raise AiffUnsupported(f"bits per sample {bits} (only 8/16/24/32)")
-    off, avail = ssnd
     need = n_frames * channels * (bits // 8)
     if need > avail:
         raise AiffUnsupported(
             f"SSND carries {avail} bytes < {need} declared by COMM"
         )
-    n_vals = n_frames * channels
-    if bits == 24:
-        raw = np.frombuffer(
-            data, dtype=np.uint8, count=n_vals * 3, offset=off
-        ).reshape(-1, 3).astype(np.int32)
-        if little:
-            vals = raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)
-        else:
-            vals = raw[:, 2] | (raw[:, 1] << 8) | (raw[:, 0] << 16)
-        vals -= (vals & 0x800000) << 1
-        return rate, channels, bits, vals.reshape(n_frames, channels)
-    dt = {8: "i1", 16: "i2", 32: "i4"}[bits]
-    bo = "<" if little else ">"
-    raw = np.frombuffer(data, dtype=np.dtype(bo + dt), count=n_vals, offset=off)
-    return rate, channels, bits, raw.astype(np.int32).reshape(n_frames, channels)
+    vals = pcm_unpack(data, off, n_frames * channels, bits, bo, False)
+    return rate, channels, bits, vals.reshape(n_frames, channels)
 
 
 def encode_aiff(
@@ -180,36 +145,16 @@ def encode_aiff(
     if bits not in (8, 16, 24, 32):
         raise AiffUnsupported(f"bits per sample {bits} (only 8/16/24/32)")
     arr = np.asarray(samples).reshape(-1, channels)
-    lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
-    if arr.size and (int(arr.min()) < lo or int(arr.max()) > hi):
-        raise AiffUnsupported(f"sample out of range for {bits}-bit AIFF")
     n_frames = arr.shape[0]
-    if bits == 24:
-        u = arr.astype(np.int32).view(np.uint32).reshape(-1, 1)
-        order = [(u & 0xFF), (u >> 8) & 0xFF, (u >> 16) & 0xFF]
-        if not sowt:
-            order = order[::-1]
-        body = np.concatenate(order, axis=1).astype(np.uint8).tobytes()
-    else:
-        bo = "<" if sowt else ">"
-        dt = {8: "i1", 16: "i2", 32: "i4"}[bits]
-        body = arr.astype(np.dtype(bo + dt)).tobytes()
+    body = pcm_pack(arr, bits, "<" if sowt else ">", False, AiffUnsupported)
     comm = struct.pack(">HIH", channels, n_frames, bits) + _write_extended(
         sample_rate
     )
     if sowt:
         comm += b"sowt" + bytes([4]) + b"not\x00"  # pascal-string name
     ssnd = struct.pack(">II", 0, 0) + body
-    chunks = b"COMM" + struct.pack(">I", len(comm)) + comm
-    if len(comm) & 1:
-        chunks += b"\x00"
-    chunks += b"SSND" + struct.pack(">I", len(ssnd)) + ssnd
-    if len(ssnd) & 1:
-        chunks += b"\x00"
     form_type = b"AIFC" if sowt else b"AIFF"
-    return (
-        b"FORM" + struct.pack(">I", 4 + len(chunks)) + form_type + chunks
-    )
+    return write_form(b"FORM", form_type, ((b"COMM", comm), (b"SSND", ssnd)), ">")
 
 
 __all__ = [

@@ -27,11 +27,12 @@ Decode output matches :mod:`.png`: ``(width, height, channels,
 pixel_bytes)`` with pixels row-major top-down and channels
 interleaved — so ``extract_features`` treats both formats identically.
 
-Amplification note: BI_RGB has no compression, so the decoded size is
-bounded by the payload size itself (the row-stride check below refuses
-any header that claims more pixels than the payload carries) — a
-hostile BMP cannot zip-bomb a worker the way a hostile PNG could
-before the bounded-inflate guard.
+Amplification note: the decoded size is checked against the output
+cap every image codec shares (``_codec.MAX_OUTPUT_BYTES``) before
+anything is allocated — an RLE8 payload of a few hundred bytes can
+declare any geometry. BI_RGB has no compression, and the row-stride
+check below also refuses any header that claims more pixels than the
+payload carries.
 
 This runs INSIDE Arrow-batched ``mapInPandas`` workers; nothing here
 touches the driver.
@@ -42,6 +43,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from ._codec import check_cap, is_gray_identity
 
 
 class BmpUnsupported(ValueError):
@@ -87,6 +90,9 @@ def decode_bmp(payload: bytes) -> tuple[int, int, int, bytes]:
         raise BmpUnsupported(f"bad dimensions {width}x{height}")
     if pix_off < 14 + dib:
         raise BmpUnsupported("pixel data out of bounds")
+    # an 8-bit palette expands to RGB unless it is the gray identity
+    n_out = 4 if bpp == 32 else 3
+    check_cap(width * height * n_out, f"{width}x{height}x{n_out}", BmpUnsupported)
 
     if compression == 1:
         if top_down:
@@ -149,13 +155,7 @@ def _expand_bmp_palette(data, dib, pix_off, colors_used, idx, width, height):
     ).reshape(n_pal, 4)  # BGRX entries
     if int(idx.max(initial=0)) >= n_pal:
         raise BmpUnsupported("palette index out of range")
-    if n_pal == 256 and bool(
-        (pal[:, 0] == pal[:, 1]).all()
-        and (pal[:, 1] == pal[:, 2]).all()
-        and (pal[:, 0] == np.arange(256, dtype=np.uint8)).all()
-    ):
-        # grayscale identity palette → 1-channel gray (matches the
-        # PNG gray layout, so pixel oracles replay from content)
+    if n_pal == 256 and is_gray_identity(pal):
         return width, height, 1, np.ascontiguousarray(idx).tobytes()
     bgr = pal[idx.reshape(-1)][:, :3]  # (H*W, BGR)
     return width, height, 3, bgr[:, ::-1].tobytes()

@@ -4,9 +4,10 @@ PNG/BMP/TIFF/JPEG images and WAV audio).
 
 GIF is palette + LZW: a logical-screen header, optional global/local
 color tables, extension blocks, then image data as variable-width
-(3-12 bit) LZW codes in length-prefixed sub-blocks. The decode is a
-block walk + a sequential LZW loop (inherently per-code, like the PNG
-Paeth rows and BMP RLE runs) + one numpy palette gather.
+(3-12 bit) LZW codes in length-prefixed sub-blocks. The decode is one
+block walk (:func:`_walk`, shared by both decoders) + the sequential
+LZW loop TIFF also uses (inherently per-code, like the PNG Paeth rows
+and BMP RLE runs) + one numpy palette gather.
 
 Scope (everything else raises ``GifUnsupported`` and callers fall back
 to the digest stub, exactly like the other codecs):
@@ -28,11 +29,12 @@ onto the logical-screen canvas at its declared offset, background
 filled with the background-color index.
 
 Amplification guards: LZW can expand enormously, so output is
-allocated AT the declared frame geometry (bounded by
-``_MAX_OUTPUT_BYTES`` like JPEG) and the LZW loop STOPS the moment
-the pixel budget is filled — a hostile stream cannot make a worker
-allocate or write beyond the header's own width x height, and every
-sub-block length is validated against the bytes actually present.
+allocated AT the declared frame geometry (bounded by the output cap
+every image codec shares, ``_codec.MAX_OUTPUT_BYTES``) and the LZW
+loop STOPS the moment the pixel budget is filled — a hostile stream
+cannot make a worker allocate or write beyond the header's own width
+x height, and every sub-block length is validated against the bytes
+actually present.
 
 This runs INSIDE Arrow-batched ``mapInPandas`` workers; nothing here
 touches the driver.
@@ -40,31 +42,17 @@ touches the driver.
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import numpy as np
 
-_MAX_OUTPUT_BYTES = 1 << 26  # same constant guard as the JPEG codec
+from ._codec import check_cap, is_gray_identity, lzw_decode, lzw_encode
 
 
 class GifUnsupported(ValueError):
     """Payload is not a GIF this codec handles (bad magic, corrupt
     block structure, or malformed LZW stream)."""
-
-
-# LZW root tables, hoisted to module scope (r14, VERDICT r13 #4): the
-# per-call/per-clear rebuild of the 2^min_code root entries was ~40% of
-# the whole encode+decode profile at the twin queries' 8x8 frame size
-# (the dictionaries dwarf the 64-pixel payloads). Decoders copy with
-# list(base) / encoders with dict(base) — the shared roots are never
-# mutated.
-_LZW_DEC_BASE = {
-    mc: [bytes([i]) for i in range(1 << mc)] + [b"", b""]
-    for mc in range(2, 9)
-}
-_LZW_ENC_BASE = {
-    mc: {bytes([i]): i for i in range(1 << mc)} for mc in range(2, 9)
-}
 
 
 def is_gif(payload: bytes) -> bool:
@@ -81,107 +69,42 @@ def _color_table(data: bytes, pos: int, flags: int) -> tuple[np.ndarray | None, 
     return tab, pos + 3 * n
 
 
-def _skip_subblocks(data: bytes, pos: int) -> int:
+def _subblocks(data: bytes, pos: int) -> tuple[bytes, int]:
+    """Gather one chain of length-prefixed sub-blocks (extension body
+    or image data), each length validated against the bytes present →
+    ``(joined bytes, position after the terminator)``."""
+    chunks = []
     while True:
         if pos >= len(data):
             raise GifUnsupported("sub-blocks overrun payload")
         ln = data[pos]
         pos += 1
         if ln == 0:
-            return pos
+            return b"".join(chunks), pos
         if pos + ln > len(data):
             raise GifUnsupported("sub-block overruns payload")
-        pos += ln
-
-
-def _lzw_decode(data: bytes, pos: int, min_code: int, n_pixels: int) -> tuple[np.ndarray, int]:
-    """Variable-width LZW over length-prefixed sub-blocks. Output is
-    capped at ``n_pixels`` — decoding stops the moment the frame is
-    full, so stream contents can never drive allocation."""
-    # GIF-legal range is 2..8 (roots are palette indices, max 256);
-    # 9-11 would pass a width check but make bytes([i]) blow up at
-    # i=256 with a bare ValueError that escapes the GifUnsupported
-    # fallback routing in multimodal.py.
-    if not 2 <= min_code <= 8:
-        raise GifUnsupported(f"LZW minimum code size {min_code}")
-    # concatenate sub-blocks (validated), remember stream end
-    chunks = []
-    while True:
-        if pos >= len(data):
-            raise GifUnsupported("image data overruns payload")
-        ln = data[pos]
-        pos += 1
-        if ln == 0:
-            break
-        if pos + ln > len(data):
-            raise GifUnsupported("image sub-block overruns payload")
         chunks.append(data[pos : pos + ln])
         pos += ln
-    stream = b"".join(chunks)
-
-    clear = 1 << min_code
-    eoi = clear + 1
-    # dictionary: index -> bytes; roots are single indices
-    base = _LZW_DEC_BASE[min_code]
-    table = list(base)
-    width = min_code + 1
-    out = bytearray()
-    acc = nb = 0
-    bit_pos = 0
-    n_bytes = len(stream)
-    prev: bytes | None = None
-    while len(out) < n_pixels:
-        while nb < width:
-            if bit_pos >= n_bytes:
-                raise GifUnsupported("LZW stream truncated")
-            acc |= stream[bit_pos] << nb  # GIF packs LSB-first
-            bit_pos += 1
-            nb += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nb -= width
-        if code == clear:
-            table = list(base)
-            width = min_code + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise GifUnsupported("LZW code before any root")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # the KwKwK case
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise GifUnsupported("LZW code beyond dictionary")
-        out += entry
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    return np.frombuffer(bytes(out[:n_pixels]), dtype=np.uint8), pos
 
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
-def _deinterlace(idx: np.ndarray, w: int, h: int) -> np.ndarray:
-    rows = idx.reshape(h, w)
-    order = [r for start, step in _INTERLACE_PASSES for r in range(start, h, step)]
-    out = np.empty_like(rows)
-    out[np.array(order)] = rows
-    return out.reshape(-1)
+def _interlace_order(h: int) -> np.ndarray:
+    """Stored row i of an interlaced image is display row order[i]."""
+    return np.array(
+        [r for start, step in _INTERLACE_PASSES for r in range(start, h, step)]
+    )
 
 
-def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Decode the first frame of a GIF payload -> ``(width, height,
-    channels, pixel_bytes)`` composited on the logical-screen canvas;
-    channels 1 (grayscale-identity palette), 3 (RGB) or 4 (RGBA when a
-    transparent index is declared)."""
+def _walk(payload: bytes):
+    """The one GIF block walk. Yields the logical screen ``(width,
+    height, background index, global color table)`` first, then per
+    image ``(left, top, indices (fh, fw), palette, transparent,
+    disposal)`` with the graphic-control extension that preceded it
+    (a later image without one gets ``None`` / 0). Ends at the trailer
+    or at payload end; LZW runs only when the caller asks for the next
+    image, so the caller's output cap is checked first."""
     data = bytes(payload)
     if not is_gif(data):
         raise GifUnsupported("bad signature")
@@ -190,19 +113,15 @@ def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
     cw, ch_, flags, bg, _ar = struct.unpack_from("<HHBBB", data, 6)
     if cw == 0 or ch_ == 0:
         raise GifUnsupported("zero canvas dimension")
-    if cw * ch_ * 4 > _MAX_OUTPUT_BYTES:
-        raise GifUnsupported(
-            f"{cw}x{ch_} canvas exceeds the {_MAX_OUTPUT_BYTES}-byte output cap"
-        )
     gct, pos = _color_table(data, 13, flags)
+    yield cw, ch_, bg, gct
     transparent = None
-    while True:
-        if pos >= len(data):
-            raise GifUnsupported("no image frame before payload end")
+    disposal = 0
+    while pos < len(data):
         block = data[pos]
         pos += 1
         if block == 0x3B:  # trailer
-            raise GifUnsupported("no image frame in file")
+            return
         if block == 0x21:  # extension
             if pos >= len(data):
                 raise GifUnsupported("extension overruns payload")
@@ -210,13 +129,12 @@ def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
             pos += 1
             if label == 0xF9 and pos + 6 <= len(data) and data[pos] == 4:
                 gflags, _delay, tindex = struct.unpack_from("<BHB", data, pos + 1)
-                if gflags & 0x01:
-                    transparent = tindex
-            pos = _skip_subblocks(data, pos)
+                transparent = tindex if gflags & 0x01 else None
+                disposal = (gflags >> 2) & 0x07
+            _, pos = _subblocks(data, pos)
             continue
         if block != 0x2C:
             raise GifUnsupported(f"unknown block 0x{block:02x}")
-        # image descriptor
         if pos + 9 > len(data):
             raise GifUnsupported("image descriptor truncated")
         left, top, fw, fh, iflags = struct.unpack_from("<HHHHB", data, pos)
@@ -230,28 +148,46 @@ def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
         if pos >= len(data):
             raise GifUnsupported("missing LZW data")
         min_code = data[pos]
-        pos += 1
-        idx, pos = _lzw_decode(data, pos, min_code, fw * fh)
-        if idx.size < fw * fh:
+        # GIF-legal range is 2..8 (roots are palette indices, max 256),
+        # the range the shared root tables hold; any other value must
+        # raise GifUnsupported, not a bare error that escapes the
+        # fallback routing in multimodal.py.
+        if not 2 <= min_code <= 8:
+            raise GifUnsupported(f"LZW minimum code size {min_code}")
+        stream, pos = _subblocks(data, pos + 1)
+        px = lzw_decode(stream, min_code, fw * fh, False, 0, GifUnsupported)
+        if len(px) < fw * fh:
             raise GifUnsupported("LZW stream shorter than frame")
+        idx = np.frombuffer(px, dtype=np.uint8).reshape(fh, fw)
         if (idx >= len(palette)).any():
             raise GifUnsupported("pixel index beyond color table")
         if iflags & 0x40:
-            idx = _deinterlace(idx, fw, fh)
-        break
+            rows = np.empty_like(idx)
+            rows[_interlace_order(fh)] = idx
+            idx = rows
+        yield left, top, idx, palette, transparent, disposal
+        transparent = None
+        disposal = 0
+
+
+def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
+    """Decode the first frame of a GIF payload -> ``(width, height,
+    channels, pixel_bytes)`` composited on the logical-screen canvas;
+    channels 1 (grayscale-identity palette), 3 (RGB) or 4 (RGBA when a
+    transparent index is declared)."""
+    walk = _walk(payload)
+    cw, ch_, bg, _gct = next(walk)
+    check_cap(cw * ch_ * 4, f"{cw}x{ch_} canvas", GifUnsupported)
+    frame = next(walk, None)
+    if frame is None:
+        raise GifUnsupported("no image frame in file")
+    left, top, idx, palette, transparent, _disposal = frame
+    fh, fw = idx.shape
 
     # composite the frame on the canvas; background = bg index color
-    canvas_idx = np.full((ch_, cw), bg if palette is not None and bg < len(palette) else 0, dtype=np.uint8)
-    canvas_idx[top : top + fh, left : left + fw] = idx.reshape(fh, fw)
-    n = len(palette)
-    gray_identity = (
-        transparent is None
-        and n <= 256
-        and (palette[:, 0] == palette[:, 1]).all()
-        and (palette[:, 1] == palette[:, 2]).all()
-        and (palette[:, 0] == np.arange(n)).all()
-    )
-    if gray_identity:
+    canvas_idx = np.full((ch_, cw), bg if bg < len(palette) else 0, dtype=np.uint8)
+    canvas_idx[top : top + fh, left : left + fw] = idx
+    if transparent is None and is_gray_identity(palette):
         return cw, ch_, 1, canvas_idx.tobytes()
     if transparent is not None:
         rgba = np.empty((ch_, cw, 4), dtype=np.uint8)
@@ -261,53 +197,11 @@ def decode_gif(payload: bytes) -> tuple[int, int, int, bytes]:
     return cw, ch_, 3, palette[canvas_idx].tobytes()
 
 
-def _lzw_encode(indices: np.ndarray, min_code: int) -> bytes:
-    """Real variable-width LZW (dictionary growth, width bumps, clear
-    on overflow) — the encoder exists for fixtures, and exercising the
-    decoder's dictionary machinery is the point."""
-    clear = 1 << min_code
-    eoi = clear + 1
-    out = bytearray()
-    acc = nb = 0
-
-    def put(code: int, width: int) -> None:
-        nonlocal acc, nb
-        acc |= code << nb
-        nb += width
-        while nb >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nb -= 8
-
-    table: dict[bytes, int] = dict(_LZW_ENC_BASE[min_code])
-    next_code = eoi + 1
-    width = min_code + 1
-    put(clear, width)
-    prev = b""
-    for v in indices.tolist():
-        cur = prev + bytes([v])
-        if cur in table:
-            prev = cur
-            continue
-        put(table[prev], width)
-        if next_code < 4096:
-            table[cur] = next_code
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            next_code += 1
-        else:  # dictionary full: clear and restart
-            put(clear, width)
-            table = dict(_LZW_ENC_BASE[min_code])
-            next_code = eoi + 1
-            width = min_code + 1
-        prev = bytes([v])
-    if prev:
-        put(table[prev], width)
-    put(eoi, width)
-    if nb:
-        out.append(acc & 0xFF)
-    # length-prefixed sub-blocks
-    blocks = bytearray()
+def _image_data(indices: np.ndarray) -> bytes:
+    """LZW minimum code size 8 + the shared coder's output in
+    length-prefixed sub-blocks."""
+    out = lzw_encode(indices.tobytes(), 8, False, 0)
+    blocks = bytearray([8])
     for i in range(0, len(out), 255):
         chunk = out[i : i + 255]
         blocks.append(len(chunk))
@@ -347,11 +241,7 @@ def encode_gif(
     else:
         raise GifUnsupported(f"{channels} channels")
     if interlace:
-        rows = idx.reshape(height, width)
-        order = [
-            r for start, step in _INTERLACE_PASSES for r in range(start, height, step)
-        ]
-        idx = rows[np.array(order)].reshape(-1)
+        idx = idx.reshape(height, width)[_interlace_order(height)]
 
     out = bytearray(b"GIF89a" if transparent is not None else b"GIF87a")
     out += struct.pack("<HHBBB", width, height, 0x80 | 0x07, 0, 0)
@@ -361,8 +251,7 @@ def encode_gif(
     out += bytes([0x2C]) + struct.pack(
         "<HHHHB", 0, 0, width, height, 0x40 if interlace else 0
     )
-    out += bytes([8])  # LZW minimum code size
-    out += _lzw_encode(idx, 8)
+    out += _image_data(idx)
     out += bytes([0x3B])
     return bytes(out)
 
@@ -380,18 +269,13 @@ def decode_gif_frames(
     RECT to background) and 3 (restore to previous canvas). Output is
     bounded by ``max_frames`` x canvas under the shared constant cap —
     never by stream content."""
-    data = bytes(payload)
-    if not is_gif(data):
-        raise GifUnsupported("bad signature")
-    if len(data) < 13:
-        raise GifUnsupported("truncated header")
-    cw, ch_, flags, bg, _ar = struct.unpack_from("<HHBBB", data, 6)
-    if cw == 0 or ch_ == 0:
-        raise GifUnsupported("zero canvas dimension")
-    if cw * ch_ * 3 * max(1, max_frames) > _MAX_OUTPUT_BYTES:
-        raise GifUnsupported("canvas x max_frames exceeds the output cap")
-    gct, pos = _color_table(data, 13, flags)
-
+    walk = _walk(payload)
+    cw, ch_, bg, gct = next(walk)
+    check_cap(
+        cw * ch_ * 3 * max(1, max_frames),
+        f"{cw}x{ch_} canvas x {max_frames} frames",
+        GifUnsupported,
+    )
     if gct is not None and bg < len(gct):
         bg_rgb = gct[bg]
     else:
@@ -399,50 +283,10 @@ def decode_gif_frames(
     canvas = np.empty((ch_, cw, 3), dtype=np.uint8)
     canvas[:] = bg_rgb
     frames: list[bytes] = []
-    transparent = None
-    disposal = 0
-    while len(frames) < max_frames:
-        if pos >= len(data):
-            break  # tolerated missing trailer after >=1 frame
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:
-            if pos >= len(data):
-                raise GifUnsupported("extension overruns payload")
-            label = data[pos]
-            pos += 1
-            if label == 0xF9 and pos + 6 <= len(data) and data[pos] == 4:
-                gflags, _delay, tindex = struct.unpack_from("<BHB", data, pos + 1)
-                transparent = tindex if gflags & 0x01 else None
-                disposal = (gflags >> 2) & 0x07
-            pos = _skip_subblocks(data, pos)
-            continue
-        if block != 0x2C:
-            raise GifUnsupported(f"unknown block 0x{block:02x}")
-        if pos + 9 > len(data):
-            raise GifUnsupported("image descriptor truncated")
-        left, top, fw, fh, iflags = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        if fw == 0 or fh == 0 or left + fw > cw or top + fh > ch_:
-            raise GifUnsupported("frame exceeds canvas")
-        lct, pos = _color_table(data, pos, iflags)
-        palette = lct if lct is not None else gct
-        if palette is None:
-            raise GifUnsupported("no color table")
-        if pos >= len(data):
-            raise GifUnsupported("missing LZW data")
-        min_code = data[pos]
-        pos += 1
-        idx, pos = _lzw_decode(data, pos, min_code, fw * fh)
-        if idx.size < fw * fh:
-            raise GifUnsupported("LZW stream shorter than frame")
-        if (idx >= len(palette)).any():
-            raise GifUnsupported("pixel index beyond color table")
-        if iflags & 0x40:
-            idx = _deinterlace(idx, fw, fh)
-        idx = idx.reshape(fh, fw)
+    for left, top, idx, palette, transparent, disposal in itertools.islice(
+        walk, max(max_frames, 0)
+    ):
+        fh, fw = idx.shape
         prev = canvas.copy() if disposal == 3 else None
         region = canvas[top : top + fh, left : left + fw]
         if transparent is not None:
@@ -453,10 +297,8 @@ def decode_gif_frames(
         frames.append(canvas.tobytes())
         if disposal == 2:
             canvas[top : top + fh, left : left + fw] = bg_rgb
-        elif disposal == 3 and prev is not None:
+        elif disposal == 3:
             canvas = prev
-        transparent = None
-        disposal = 0
     if not frames:
         raise GifUnsupported("no image frame in file")
     return cw, ch_, frames
@@ -488,7 +330,6 @@ def encode_gif_animation(
         gflags = (disp & 0x07) << 2 | (0x01 if trans is not None else 0)
         out += bytes([0x21, 0xF9, 4, gflags, 0, 0, trans or 0, 0])
         out += bytes([0x2C]) + struct.pack("<HHHHB", left, top, fw, fh, 0)
-        out += bytes([8])
-        out += _lzw_encode(arr.reshape(-1), 8)
+        out += _image_data(arr)
     out += bytes([0x3B])
     return bytes(out)

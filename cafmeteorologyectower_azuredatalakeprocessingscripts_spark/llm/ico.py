@@ -115,43 +115,32 @@ def decode_ico(payload: bytes) -> tuple[int, int, int, bytes]:
     raise first_err
 
 
+def _single_entry(width: int, height: int, bpp: int, body: bytes) -> bytes:
+    if not (1 <= width <= 256 and 1 <= height <= 256):
+        raise IcoUnsupported(f"ICO dimensions cap at 256, got {width}x{height}")
+    entry = struct.pack(
+        "<BBBBHHII", width % 256, height % 256, 0, 0, 1, bpp, len(body), 22
+    )
+    return b"\x00\x00\x01\x00\x01\x00" + entry + bytes(body)
+
+
 def encode_ico(
     width: int, height: int, channels: int, pixels: bytes
 ) -> bytes:
     """Encode pixels as a single-entry ICO wrapping the BMP DIB
     layout (height doubled, zeroed AND mask appended) — the fixture
     path; ICO dimensions cap at 256."""
-    if not (1 <= width <= 256 and 1 <= height <= 256):
-        raise IcoUnsupported(f"ICO dimensions cap at 256, got {width}x{height}")
-    bmp = encode_bmp(width, height, channels, pixels)
-    body = bytearray(bmp[14:])
+    body = bytearray(encode_bmp(width, height, channels, pixels)[14:])
     struct.pack_into("<i", body, 8, height * 2)
     mask_stride = ((width + 31) // 32) * 4
     body += b"\x00" * (mask_stride * height)
-    entry = struct.pack(
-        "<BBBBHHII",
-        width % 256,
-        height % 256,
-        0,
-        0,
-        1,
-        {1: 8, 3: 24, 4: 32}[channels],
-        len(body),
-        22,
-    )
-    return b"\x00\x00\x01\x00\x01\x00" + entry + bytes(body)
+    return _single_entry(width, height, {1: 8, 3: 24, 4: 32}[channels], body)
 
 
 def encode_ico_png(png_payload: bytes, width: int, height: int) -> bytes:
     """Wrap an existing PNG stream as a single-entry ICO (the layout
     modern favicons use for large sizes)."""
-    if not (1 <= width <= 256 and 1 <= height <= 256):
-        raise IcoUnsupported(f"ICO dimensions cap at 256, got {width}x{height}")
-    entry = struct.pack(
-        "<BBBBHHII", width % 256, height % 256, 0, 0, 1, 32,
-        len(png_payload), 22,
-    )
-    return b"\x00\x00\x01\x00\x01\x00" + entry + bytes(png_payload)
+    return _single_entry(width, height, 32, png_payload)
 
 
 __all__ = [

@@ -41,10 +41,10 @@ Decode output matches :mod:`.png` / :mod:`.bmp` / :mod:`.tiff`:
 channels interleaved — one contract for every codec behind
 ``extract_features``.
 
-Amplification note: JPEG is the one format here where a tiny payload
-can legitimately declare huge dimensions, so allocation is bounded by
-a CONSTANT, not the header: ``_MAX_OUTPUT_BYTES`` caps
-width*height*components before any plane is allocated, and the
+Amplification note: a tiny JPEG can legitimately declare huge
+dimensions, so allocation is bounded by a CONSTANT, not the header:
+the output cap every image codec shares (``_codec.MAX_OUTPUT_BYTES``)
+bounds width*height*components before any plane is allocated, and the
 entropy decoder stops at the declared MCU count (output is bounded by
 the same geometry either way). The Huffman LUT cache is likewise
 capped so hostile payloads cannot grow it without bound.
@@ -59,6 +59,8 @@ import struct
 
 import numpy as np
 
+from ._codec import check_cap
+
 
 class JpegUnsupported(ValueError):
     """Payload is not a JPEG this codec handles (bad magic,
@@ -70,9 +72,6 @@ def is_jpeg(payload: bytes) -> bool:
     return payload is not None and bytes(payload[:3]) == b"\xff\xd8\xff"
 
 
-# Output allocation is bounded by this CONSTANT (64 MB of samples) —
-# never by header-declared dimensions alone (see module docstring).
-_MAX_OUTPUT_BYTES = 1 << 26
 # entropy segments up to this many (padded) bytes build the decode word
 # list as Python ints (fastest scalar loop); larger segments keep the
 # int64 ndarray — 8 bytes/word instead of ~28-byte boxed ints, bounding
@@ -747,10 +746,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                 comps.append([cid, hv >> 4, hv & 0x0F, tq])
             if w == 0 or h == 0:
                 raise JpegUnsupported("zero dimension")
-            if w * h * ncomp > _MAX_OUTPUT_BYTES:
-                raise JpegUnsupported(
-                    f"{w}x{h}x{ncomp} exceeds the {_MAX_OUTPUT_BYTES}-byte output cap"
-                )
+            check_cap(w * h * ncomp, f"{w}x{h}x{ncomp}", JpegUnsupported)
             if ncomp == 1:
                 comps[0][1] = comps[0][2] = 1
             hmax = max(c[1] for c in comps)
@@ -773,7 +769,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                 bw, bh = (cw + 7) // 8, (ch + 7) // 8
                 grids.append((bwp, bhp, bw, bh))
                 # int32 (blocks, 64) grid: 4 bytes/coefficient, so the
-                # worst-case allocation tracks _MAX_OUTPUT_BYTES instead
+                # worst-case allocation tracks the output cap instead
                 # of the ~10x cost of Python list-of-list cells
                 coef.append(np.zeros((bwp * bhp, 64), dtype=np.int32))
             frame = (w, h, comps, hmax, vmax)

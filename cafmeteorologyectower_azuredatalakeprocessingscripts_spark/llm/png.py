@@ -46,6 +46,8 @@ import zlib
 
 import numpy as np
 
+from ._codec import check_cap
+
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
@@ -130,56 +132,19 @@ def _parse_png(data: bytes):
         palette = np.concatenate([palette, alpha[:, None]], axis=1)
     if width == 0 or height == 0:
         raise PngUnsupported("zero-dimension image")
-    stride = width * channels
-    if depth == 16:
-        # 16-bit samples (r13 — scientific/scanner corpora): filters
-        # act on BYTES with distance channels*2 (spec), so the whole
-        # 8-bit machinery applies with a doubled "channel" count; the
-        # 8-bit output takes each sample's HIGH byte (the spec's own
-        # 16->8 reduction). Adam7 passes inherit the same doubling.
-        ch2 = channels * 2
-        stride2 = width * ch2
-        if interlace:
-            expected = sum(
-                hp * (1 + wp * ch2)
-                for wp, hp in _adam7_pass_dims(width, height)
-                if wp and hp
-            )
-        else:
-            expected = (stride2 + 1) * height
-        try:
-            dec = zlib.decompressobj()
-            raw = dec.decompress(bytes(idat), expected + 1)
-        except zlib.error as e:
-            raise PngUnsupported(f"zlib: {e}") from e
-        if len(raw) != expected or not dec.eof or dec.unconsumed_tail:
-            raise PngUnsupported("pixel data size mismatch")
-        if interlace:
-            wide = _deinterlace_adam7(raw, width, height, ch2)
-        else:
-            arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride2 + 1)
-            ftypes = arr[:, 0]
-            if int(ftypes.max()) > 4:
-                raise PngUnsupported(f"filter {int(ftypes.max())}")
-            wide = _unfilter_rows(arr[:, 1:], ftypes, width, ch2)
-        lines = np.ascontiguousarray(
-            wide.reshape(height, stride, 2)[:, :, 0]
-        )
-        return width, height, channels, color, palette, lines, np.zeros(
-            height, dtype=np.uint8
-        )
-    if depth != 8:
+    # decoded bytes (palette entries expanded, 16-bit samples as
+    # inflated) are bounded by the shared constant cap, not the header
+    out_ch = palette.shape[1] if color == 3 and palette is not None else channels
+    check_cap(
+        width * height * out_ch * (2 if depth == 16 else 1),
+        f"{width}x{height}x{out_ch} at {depth}-bit",
+        PngUnsupported,
+    )
+    if depth < 8:
         if interlace:
             raise PngUnsupported("interlaced sub-8-bit")
         row_bytes = (width * depth + 7) // 8  # sub-8 is single-channel
-        expected = (row_bytes + 1) * height
-        try:
-            dec = zlib.decompressobj()
-            raw = dec.decompress(bytes(idat), expected + 1)
-        except zlib.error as e:
-            raise PngUnsupported(f"zlib: {e}") from e
-        if len(raw) != expected or not dec.eof or dec.unconsumed_tail:
-            raise PngUnsupported("pixel data size mismatch")
+        raw = _inflate(idat, (row_bytes + 1) * height)
         arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, row_bytes + 1)
         ftypes = arr[:, 0]
         if int(ftypes.max()) > 4:
@@ -199,43 +164,49 @@ def _parse_png(data: bytes):
         return width, height, 1, color, palette, np.ascontiguousarray(vals), np.zeros(
             height, dtype=np.uint8
         )
-    if interlace:
-        # a pass with EITHER dimension zero has no scanlines at all
-        # (spec: empty passes are wholly omitted, filter bytes included)
-        expected = sum(
-            hp * (1 + wp * channels)
-            for wp, hp in _adam7_pass_dims(width, height)
-            if wp and hp
-        )
-    else:
-        expected = (stride + 1) * height
-    # bounded inflate: a crafted IDAT can expand without limit, and this
-    # runs inside Arrow workers — cap at the geometry the header
-    # declares instead of trusting the stream (zip-bomb guard)
-    try:
-        dec = zlib.decompressobj()
-        raw = dec.decompress(bytes(idat), expected + 1)
-    except zlib.error as e:  # corrupt stream
-        raise PngUnsupported(f"zlib: {e}") from e
-    # eof=False means a truncated stream whose adler trailer was never
-    # verified — the old whole-buffer decompress rejected those too
-    if len(raw) != expected or not dec.eof or dec.unconsumed_tail:
-        raise PngUnsupported("pixel data size mismatch")
+    # 16-bit samples (r13 — scientific/scanner corpora): filters act on
+    # BYTES with distance channels*2 (spec), so the whole 8-bit
+    # machinery applies with a doubled "channel" count; the 8-bit
+    # output takes each sample's HIGH byte (the spec's own 16->8
+    # reduction). Adam7 passes inherit the same doubling.
+    unit = channels * depth // 8
     if interlace:
         # de-interlace HERE: each pass unfilters independently (its
         # rows only reference rows of the same pass) and scatters into
         # place; downstream sees already-unfiltered lines with ftypes 0
         # — decode_png / decode_png_batch / palette expansion are
         # untouched, and the batch grouper sees a fast-filter image
-        lines = _deinterlace_adam7(raw, width, height, channels)
-        return width, height, channels, color, palette, lines, np.zeros(
-            height, dtype=np.uint8
-        )
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, stride + 1)
-    ftypes = arr[:, 0]
-    if int(ftypes.max()) > 4:
-        raise PngUnsupported(f"filter {int(ftypes.max())}")
-    return width, height, channels, color, palette, arr[:, 1:], ftypes
+        raw = _inflate(idat, _adam7_size(width, height, unit))
+        lines = _deinterlace_adam7(raw, width, height, unit)
+        ftypes = np.zeros(height, dtype=np.uint8)
+    else:
+        raw = _inflate(idat, (width * unit + 1) * height)
+        arr = np.frombuffer(raw, dtype=np.uint8).reshape(height, width * unit + 1)
+        lines, ftypes = arr[:, 1:], arr[:, 0]
+        if int(ftypes.max()) > 4:
+            raise PngUnsupported(f"filter {int(ftypes.max())}")
+        if depth == 16:
+            lines = _unfilter_rows(lines, ftypes, width, unit)
+            ftypes = np.zeros(height, dtype=np.uint8)
+    if depth == 16:
+        lines = np.ascontiguousarray(lines.reshape(height, width * channels, 2)[:, :, 0])
+    return width, height, channels, color, palette, lines, ftypes
+
+
+def _inflate(idat: bytes, expected: int) -> bytes:
+    """Bounded inflate: a crafted IDAT can expand without limit, and
+    this runs inside Arrow workers — cap at the geometry the header
+    declares instead of trusting the stream (zip-bomb guard). The
+    stream must also END there: eof=False means a truncated stream
+    whose adler trailer was never verified."""
+    try:
+        dec = zlib.decompressobj()
+        raw = dec.decompress(bytes(idat), expected + 1)
+    except zlib.error as e:  # corrupt stream
+        raise PngUnsupported(f"zlib: {e}") from e
+    if len(raw) != expected or not dec.eof or dec.unconsumed_tail:
+        raise PngUnsupported("pixel data size mismatch")
+    return raw
 
 
 # Adam7 pass grid: (x0, y0, dx, dy) per pass
@@ -252,6 +223,13 @@ def _adam7_pass_dims(width: int, height: int):
         (max(0, (width - x0 + dx - 1) // dx), max(0, (height - y0 + dy - 1) // dy))
         for x0, y0, dx, dy in _ADAM7
     ]
+
+
+def _adam7_size(width: int, height: int, unit: int) -> int:
+    """Inflated byte count of an Adam7 image with ``unit`` bytes per
+    pixel: a pass with EITHER dimension zero has no scanlines at all
+    (spec: empty passes are wholly omitted, filter bytes included)."""
+    return sum(hp * (1 + wp * unit) for wp, hp in _adam7_pass_dims(width, height) if wp and hp)
 
 
 def _deinterlace_adam7(raw: bytes, width: int, height: int, channels: int):

@@ -1,13 +1,13 @@
-"""Uncompressed-TIFF codec (stdlib struct + numpy) for the multimodal
+"""Baseline-TIFF codec (stdlib struct + numpy) for the multimodal
 stages — the third REAL image format after PNG and BMP (VERDICT r9 #8
 named both candidates; both now decode for real).
 
 Baseline TIFF with Compression=1 is, like BMP, raw bytes behind a
-header — here an IFD (tag directory) pointing at pixel strips. The
-decode is an IFD walk + one numpy concatenate/reshape; no inflate, no
-filters, no sequential dependency, so every supported TIFF decodes at
-memcpy speed in either byte order ('II' little- and 'MM' big-endian
-files both occur in the wild).
+header — here an IFD (tag directory) pointing at pixel strips or
+tiles. The decode is an IFD walk + one numpy copy per chunk; no
+inflate, no filters, no sequential dependency, so every uncompressed
+TIFF decodes at memcpy speed in either byte order ('II' little- and
+'MM' big-endian files both occur in the wild).
 
 Scope (everything else raises ``TiffUnsupported`` and callers fall
 back to the digest stub, exactly like ``PngUnsupported`` /
@@ -16,27 +16,29 @@ back to the digest stub, exactly like ``PngUnsupported`` /
 - baseline IFD0 only (multi-page files decode their first page —
   the baseline-reader behavior the spec prescribes);
 - 8 bits per sample, Compression=1 (none), 5 (LZW — MSB-first with
-  the EarlyChange width bump, per-code loop, optional horizontal
-  Predictor inverted by one vectorized cumsum) or 32773 (PackBits —
-  per-run loop); all compressed output is bounded to the strip's
-  declared geometry; PlanarConfiguration=1 (chunky) or absent;
+  libtiff's early-change width bump, the per-code loop GIF also uses,
+  optional horizontal Predictor inverted by one vectorized cumsum) or
+  32773 (PackBits — per-run loop); PlanarConfiguration=1 (chunky) or
+  absent;
 - PhotometricInterpretation 0 (WhiteIsZero — inverted to gray), 1
   (BlackIsZero — gray), 2 (RGB; SamplesPerPixel 3, or 4 = RGBA with
   an alpha extra sample);
 - strip layout (StripOffsets/StripByteCounts, any RowsPerStrip) OR
-  tiled layout (r13 — TileWidth/TileLength multiples of 16, edge
-  tiles padded per the spec and cropped on assembly; the padded
-  tile grid is bounded by the shared 64MB constant).
+  tiled layout (TileWidth/TileLength multiples of 16, edge tiles
+  padded per the spec and cropped on assembly). Both go through one
+  chunk loop: a strip is a full-width tile whose last one is stored
+  short.
 
 Decode output matches :mod:`.png` / :mod:`.bmp`: ``(width, height,
 channels, pixel_bytes)`` row-major top-down, channels interleaved —
 one contract for every codec behind ``extract_features``.
 
-Amplification note: uncompressed strips are validated byte-for-byte
-against the declared geometry; PackBits output is allocated AT the
-strip's declared geometry and every run is capped before writing — a
-hostile header or stream cannot make a worker allocate or write more
-than the IFD's own width x height x spp.
+Amplification note: the decoded chunk grid is checked against the
+output cap every image codec shares (``_codec.MAX_OUTPUT_BYTES``)
+before anything is allocated; uncompressed chunks are validated
+byte-for-byte against their declared geometry, and LZW and PackBits
+output stops at it — a hostile header or stream cannot make a worker
+allocate or write more than the IFD's own width x height x spp.
 
 This runs INSIDE Arrow-batched ``mapInPandas`` workers; nothing here
 touches the driver.
@@ -47,6 +49,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from ._codec import check_cap, lzw_decode, lzw_encode
 
 
 class TiffUnsupported(ValueError):
@@ -88,7 +92,7 @@ def _read_entries(data: bytes, bo: str, ifd_off: int) -> dict[int, list[int]]:
 
 
 def decode_tiff(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Decode a baseline uncompressed TIFF (first IFD) →
+    """Decode a baseline TIFF (first IFD) →
     ``(width, height, channels, pixels)`` row-major top-down."""
     data = bytes(payload)
     if not is_tiff(data):
@@ -136,108 +140,75 @@ def decode_tiff(payload: bytes) -> tuple[int, int, int, bytes]:
     else:
         raise TiffUnsupported(f"photometric={photometric}")
 
+    # one chunk loop for both layouts: strips are full-width tiles
+    # (tw = width, th = RowsPerStrip) whose last one is stored SHORT,
+    # while real tiles are stored PADDED to full size (tw/th multiples
+    # of 16) and cropped here on assembly
     if tiled:
-        # tiled layout (r13 — the GeoTIFF/scanner shape): full-size
-        # tw x th tiles in row-major tile order, edge tiles PADDED to
-        # full size by the writer and cropped here on assembly; the
-        # per-tile decompressors and predictor reuse the strip
-        # machinery with width=tw
+        kind = "tile"
         tw, th = one(322), one(323)
-        toffs, tcnts = e.get(324), e.get(325)
+        offsets, counts = e.get(324), e.get(325)
         if tw <= 0 or th <= 0 or tw % 16 or th % 16:
             raise TiffUnsupported(f"bad tile geometry {tw}x{th}")
-        across = (width + tw - 1) // tw
-        down = (height + th - 1) // th
-        if (
-            not toffs
-            or not tcnts
-            or len(toffs) != len(tcnts)
-            or len(toffs) != across * down
-        ):
-            raise TiffUnsupported("missing/mismatched tile tables")
-        # padded tile grid is what gets decoded — bound it by the
-        # shared 64MB constant, not the header's say-so
-        if across * down * tw * th * spp > (1 << 26):
-            raise TiffUnsupported("tile grid exceeds the output cap")
-        expected = tw * th * spp
-        out = np.zeros((height, width, spp), dtype=np.uint8)
-        for ti, (off, cnt) in enumerate(zip(toffs, tcnts)):
-            if off + cnt > len(data):
-                raise TiffUnsupported("tile out of bounds")
-            if compression == 32773:
-                tile = _unpackbits(data, off, cnt, expected)
-            elif compression == 5:
-                tile = _unlzw(data, off, cnt, expected)
-            else:
-                if cnt != expected:
-                    raise TiffUnsupported(
-                        f"tile {ti} byte count {cnt} != {expected} expected"
-                    )
-                tile = np.frombuffer(data, dtype=np.uint8, count=cnt, offset=off)
-            tile = tile.reshape(th, tw, spp)
-            if predictor == 2:
-                tile = (
-                    np.cumsum(tile, axis=1, dtype=np.int64) % 256
-                ).astype(np.uint8)
-            y0 = (ti // across) * th
-            x0 = (ti % across) * tw
-            ys, xs = min(th, height - y0), min(tw, width - x0)
-            out[y0 : y0 + ys, x0 : x0 + xs] = tile[:ys, :xs]
-        px = out.reshape(-1)
-        if photometric == 0:  # WhiteIsZero → invert to plain gray
-            px = (255 - px).astype(np.uint8)
-        return width, height, spp, px.tobytes()
-
-    offsets = e.get(273)
-    counts = e.get(279)
+    else:
+        # RowsPerStrip defaults to 2^32-1 = "all rows in one strip"
+        kind = "strip"
+        tw, th = width, min(one(278, 2**32 - 1), height)
+        offsets, counts = e.get(273), e.get(279)
+        if th <= 0:
+            raise TiffUnsupported(f"bad RowsPerStrip {th}")
+    across = (width + tw - 1) // tw
+    down = (height + th - 1) // th
     if not offsets or not counts or len(offsets) != len(counts):
-        raise TiffUnsupported("missing/mismatched strip tables")
-    # ADVICE r10: validate EVERY strip's byte count against its
-    # rows-in-strip * width * spp — raw concatenation of a
-    # spec-violating oversized early strip (padded StripByteCounts)
-    # would silently shift every later pixel instead of raising.
-    # RowsPerStrip defaults to 2^32-1 = "all rows in one strip".
-    rps = min(one(278, 2**32 - 1), height)
-    if rps <= 0:
-        raise TiffUnsupported(f"bad RowsPerStrip {rps}")
-    n_strips = (height + rps - 1) // rps
-    if len(offsets) != n_strips:
+        raise TiffUnsupported(f"missing/mismatched {kind} tables")
+    if len(offsets) != across * down:
         raise TiffUnsupported(
-            f"{len(offsets)} strips != {n_strips} expected from RowsPerStrip"
+            f"{len(offsets)} {kind}s != {across * down} expected from the geometry"
         )
-    parts = []
+    # what gets decoded is bounded by the shared constant cap, not by
+    # the header's say-so: the padded tile grid, or the image for strips
+    rows = down * th if tiled else height
+    check_cap(rows * across * tw * spp, f"{kind} grid", TiffUnsupported)
+    out = np.zeros((height, width, spp), dtype=np.uint8)
     for i, (off, cnt) in enumerate(zip(offsets, counts)):
-        expected = min(rps, height - i * rps) * width * spp
+        y0, x0 = (i // across) * th, (i % across) * tw
+        # ADVICE r10: every chunk's byte count must equal its own
+        # geometry; a padded (spec-violating) strip is refused, not
+        # trimmed
+        ch_rows = th if tiled else min(th, height - y0)
+        expected = ch_rows * tw * spp
         if off + cnt > len(data):
-            raise TiffUnsupported("strip out of bounds")
+            raise TiffUnsupported(f"{kind} out of bounds")
         if compression == 32773:
-            parts.append(_unpackbits(data, off, cnt, expected))
-            continue
-        if compression == 5:
-            parts.append(_unlzw(data, off, cnt, expected))
-            continue
-        if cnt != expected:
-            raise TiffUnsupported(
-                f"strip {i} byte count {cnt} != {expected} expected"
-            )
-        parts.append(np.frombuffer(data, dtype=np.uint8, count=cnt, offset=off))
-    px = np.concatenate(parts)
-    if predictor == 2:
-        # horizontal differencing: each sample stores the delta to its
-        # left neighbour (same channel); rows are independent, so one
-        # vectorized cumsum mod 256 over the whole image inverts it
-        px = (
-            np.cumsum(px.reshape(height, width, spp), axis=1, dtype=np.int64)
-            % 256
-        ).astype(np.uint8).reshape(-1)
+            chunk = _unpackbits(data, off, cnt, expected)
+        elif compression == 5:
+            px = lzw_decode(data[off:off + cnt], 8, expected, True, 1, TiffUnsupported)
+            if len(px) != expected:
+                raise TiffUnsupported(f"LZW {kind} shorter than declared geometry")
+            chunk = np.frombuffer(px, dtype=np.uint8)
+        else:
+            if cnt != expected:
+                raise TiffUnsupported(
+                    f"{kind} {i} byte count {cnt} != {expected} expected"
+                )
+            chunk = np.frombuffer(data, dtype=np.uint8, count=cnt, offset=off)
+        chunk = chunk.reshape(ch_rows, tw, spp)
+        if predictor == 2:
+            # horizontal differencing: each sample stores the delta to
+            # its left neighbour (same channel); one vectorized cumsum
+            # mod 256 per chunk inverts it
+            chunk = (np.cumsum(chunk, axis=1, dtype=np.int64) % 256).astype(np.uint8)
+        ys, xs = min(th, height - y0), min(tw, width - x0)
+        out[y0 : y0 + ys, x0 : x0 + xs] = chunk[:ys, :xs]
+    px = out.reshape(-1)
     if photometric == 0:  # WhiteIsZero → invert to plain gray
         px = (255 - px).astype(np.uint8)
     return width, height, spp, px.tobytes()
 
 
 def _unpackbits(data: bytes, off: int, cnt: int, expected: int) -> np.ndarray:
-    """PackBits decompression of one strip → exactly ``expected``
-    bytes. Per-RUN loop (the RLE8-BMP precedent): position strictly
+    """PackBits decompression of one strip or tile → exactly
+    ``expected`` bytes. Per-RUN loop (the RLE8-BMP precedent): position strictly
     advances, every write is capped by ``expected`` BEFORE it happens,
     so a hostile stream can neither loop nor amplify past the strip's
     declared geometry."""
@@ -278,11 +249,11 @@ def encode_tiff(
     """Encode row-major top-down pixels (gray / RGB / RGBA) as a
     minimal little-endian baseline TIFF: one strip, BlackIsZero or
     RGB. ``compression`` 1 (none, the byte-identical default) or 5
-    (LZW); ``predictor`` 2 applies horizontal differencing before
-    compression (the pairing real LZW writers use). ``tile=(tw, th)``
-    (r13) writes a TILED layout instead of strips — full-size tiles in
-    row-major tile order, edge tiles zero-padded per the spec
-    (tw/th must be multiples of 16)."""
+    (LZW, libtiff's early-change variant); ``predictor`` 2 applies
+    horizontal differencing before compression (the pairing real LZW
+    writers use). ``tile=(tw, th)`` (r13) writes a TILED layout
+    instead — full-size tiles in row-major tile order, edge tiles
+    zero-padded per the spec (tw/th must be multiples of 16)."""
     if channels not in (1, 3, 4):
         raise TiffUnsupported(f"channels={channels}")
     if compression not in (1, 5) or predictor not in (1, 2):
@@ -294,36 +265,30 @@ def encode_tiff(
     photometric = 1 if channels == 1 else 2
 
     def _finish(chunk: np.ndarray) -> bytes:
-        """Per-chunk predictor + compression (a chunk = the one strip,
-        or one full-size tile of width tw)."""
+        """Per-chunk predictor + compression."""
         if predictor == 2:
             diff = chunk.astype(np.int16)
             diff[:, 1:, :] -= chunk[:, :-1, :].astype(np.int16)
             chunk = (diff % 256).astype(np.uint8)
         body = chunk.tobytes()
-        return _lzw_compress(body) if compression == 5 else body
+        return lzw_encode(body, 8, True, 1) if compression == 5 else body
 
     arr = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(
         height, width, channels
     )
-    if tile is not None:
-        tw, th = tile
-        if tw <= 0 or th <= 0 or tw % 16 or th % 16:
-            raise TiffUnsupported(f"tile dims must be multiples of 16, got {tw}x{th}")
-        across = (width + tw - 1) // tw
-        down = (height + th - 1) // th
-        chunks = []
-        for ty in range(down):
-            for tx in range(across):
-                t = np.zeros((th, tw, channels), dtype=np.uint8)
-                ys = min(th, height - ty * th)
-                xs = min(tw, width - tx * tw)
-                t[:ys, :xs] = arr[
-                    ty * th : ty * th + ys, tx * tw : tx * tw + xs
-                ]
-                chunks.append(_finish(t))
-    else:
-        chunks = [_finish(arr)]
+    # the decoder's chunk grid: one full-image strip, or full-size
+    # tiles in row-major tile order with the edge ones zero-padded
+    if width <= 0 or height <= 0:
+        raise TiffUnsupported(f"bad dimensions {width}x{height}")
+    tw, th = tile if tile is not None else (width, height)
+    if tile is not None and (tw <= 0 or th <= 0 or tw % 16 or th % 16):
+        raise TiffUnsupported(f"tile dims must be multiples of 16, got {tw}x{th}")
+    chunks = []
+    for y0 in range(0, height, th):
+        for x0 in range(0, width, tw):
+            t = np.zeros((th, tw, channels), dtype=np.uint8)
+            t[: height - y0, : width - x0] = arr[y0 : y0 + th, x0 : x0 + tw]
+            chunks.append(_finish(t))
 
     # layout: header(8) | chunk bodies | out-of-line arrays | IFD
     data_off = 8
@@ -331,23 +296,21 @@ def encode_tiff(
     for c in chunks:
         offs.append(pos)
         pos += len(c)
-    bps_inline = channels <= 2
     extra = bytearray()
     extra_off = pos
 
-    def _oolarray(vals: list[int], fmt: str, unit: int) -> int:
-        nonlocal extra
+    def _oolarray(vals: list[int], fmt: str) -> int:
         at = extra_off + len(extra)
-        extra += struct.pack(f"<{len(vals)}{fmt}", *vals)
+        extra.extend(struct.pack(f"<{len(vals)}{fmt}", *vals))
         return at
 
-    bps_val = 8 if bps_inline else _oolarray([8] * channels, "H", 2)
+    bps_val = 8 if channels <= 2 else _oolarray([8] * channels, "H")
     n = len(chunks)
     if n == 1:
         off_val, cnt_val = offs[0], len(chunks[0])
     else:
-        off_val = _oolarray(offs, "I", 4)
-        cnt_val = _oolarray([len(c) for c in chunks], "I", 4)
+        off_val = _oolarray(offs, "I")
+        cnt_val = _oolarray([len(c) for c in chunks], "I")
     tags = [
         (256, 4, 1, width),           # ImageWidth
         (257, 4, 1, height),          # ImageLength
@@ -385,107 +348,4 @@ def encode_tiff(
         else:
             out += struct.pack("<HHII", tag, ftype, count, value)
     out += struct.pack("<I", 0)  # no next IFD
-    return bytes(out)
-
-
-def _unlzw(data: bytes, off: int, cnt: int, expected: int) -> np.ndarray:
-    """TIFF-variant LZW decompression of one strip → exactly
-    ``expected`` bytes. Differences from GIF's LZW: codes are packed
-    MSB-first, the root alphabet is all 256 bytes (Clear=256, EOI=257)
-    with 9-bit initial codes, and the code width bumps ONE CODE EARLY
-    (the "EarlyChange" TIFF spec behavior every writer uses). Output
-    is allocated at the strip's declared geometry and every append is
-    capped — a hostile stream cannot expand past it."""
-    clear, eoi = 256, 257
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table = list(base)
-    width = 9
-    out = bytearray()
-    acc = nb = 0
-    pos, end = off, off + cnt
-    prev = None
-    while len(out) < expected:
-        while nb < width:
-            if pos >= end:
-                raise TiffUnsupported("LZW strip truncated")
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nb += 8
-        nb -= width
-        code = (acc >> nb) & ((1 << width) - 1)
-        if code == clear:
-            table = list(base)
-            width = 9
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= 256:
-                raise TiffUnsupported("LZW code before any root")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # KwKwK
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise TiffUnsupported("LZW code beyond dictionary")
-        room = expected - len(out)
-        out += entry[:room]
-        prev = entry
-        # EarlyChange: the encoder bumps when ITS next_code reaches
-        # 2^w - 1; the decoder's insert count lags the encoder's by
-        # exactly one at read time, so its threshold sits one lower
-        if len(table) == (1 << width) - 2 and width < 12:
-            width += 1
-    if len(out) != expected:
-        raise TiffUnsupported("LZW strip shorter than declared geometry")
-    return np.frombuffer(bytes(out), dtype=np.uint8)
-
-
-def _lzw_compress(raw: bytes) -> bytes:
-    """TIFF-variant LZW compressor (MSB-first, EarlyChange) for
-    fixtures — exercising the decoder's dictionary machinery is the
-    point, like the GIF twin."""
-    clear, eoi = 256, 257
-    out = bytearray()
-    acc = nb = 0
-
-    def put(code: int, width: int) -> None:
-        nonlocal acc, nb
-        acc = (acc << width) | code
-        nb += width
-        while nb >= 8:
-            out.append((acc >> (nb - 8)) & 0xFF)
-            nb -= 8
-            acc &= (1 << nb) - 1
-
-    table = {bytes([i]): i for i in range(256)}
-    next_code = eoi + 1
-    width = 9
-    put(clear, width)
-    prev = b""
-    for v in raw:
-        cur = prev + bytes([v])
-        if cur in table:
-            prev = cur
-            continue
-        put(table[prev], width)
-        table[cur] = next_code
-        next_code += 1
-        if next_code == (1 << width) - 1 and width < 12:
-            width += 1
-        if next_code == 4094:  # table nearly full: clear and restart
-            put(clear, width)
-            table = {bytes([i]): i for i in range(256)}
-            next_code = eoi + 1
-            width = 9
-        prev = bytes([v])
-    if prev:
-        put(table[prev], width)
-    put(eoi, width)
-    if nb:
-        out.append((acc << (8 - nb)) & 0xFF)
     return bytes(out)

@@ -55,6 +55,8 @@ import struct
 
 import numpy as np
 
+from ._codec import pcm_pack, pcm_unpack, walk_chunks, write_form
+
 
 class WavUnsupported(ValueError):
     """Payload is not a WAV this codec handles (bad magic, non-PCM
@@ -69,7 +71,6 @@ def is_wav(payload: bytes) -> bool:
     )
 
 
-_DTYPES = {8: np.uint8, 16: np.dtype("<i2"), 32: np.dtype("<i4")}
 _FLOAT_DTYPES = {32: np.dtype("<f4"), 64: np.dtype("<f8")}
 _BITS_OK = (8, 16, 24, 32)
 _FLOAT_BITS_OK = (32, 64)
@@ -118,50 +119,26 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     if len(data) < 12:
         raise WavUnsupported("truncated header")
 
-    fmt = None
-    data_span = None
-    pos = 12
-    # RIFF chunk walk: id(4) + size(4) + body, bodies padded to even
-    while pos + 8 <= len(data):
-        cid = data[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", data, pos + 4)
-        body_off = pos + 8
-        if body_off + size > len(data):
-            if fmt is not None and data_span is not None:
-                # fmt + data already in hand: a malformed TRAILING
-                # chunk (truncated LIST/INFO tail, garbage padding) is
-                # a common real-world corruption that does not touch
-                # the audio — stop walking instead of refusing the
-                # whole file (ADVICE r11)
-                break
-            raise WavUnsupported(f"chunk {cid!r} claims {size} bytes past payload end")
-        if cid == b"fmt ":
-            if size < 16:
-                raise WavUnsupported(f"fmt chunk too small ({size})")
-            fmt = struct.unpack_from("<HHIIHH", data, body_off)
-            if fmt[0] == 0xFFFE:
-                # WAVE_FORMAT_EXTENSIBLE: accept iff the SubFormat GUID
-                # is PCM or IEEE-float (base fields 16 + cbSize 2 +
-                # wValidBits 2 + dwChannelMask 4 = GUID at +24)
-                if size < 40:
-                    raise WavUnsupported(f"EXTENSIBLE fmt chunk too small ({size})")
-                guid = data[body_off + 24:body_off + 40]
-                if guid == _PCM_GUID:
-                    fmt = (1,) + fmt[1:]
-                elif guid == _FLOAT_GUID:
-                    fmt = (3,) + fmt[1:]
-                else:
-                    raise WavUnsupported(
-                        "EXTENSIBLE subformat is neither PCM nor IEEE float"
-                    )
-        elif cid == b"data":
-            data_span = (body_off, size)
-        pos = body_off + size + (size & 1)  # odd sizes carry a pad byte
-
-    if fmt is None:
-        raise WavUnsupported("missing fmt chunk")
-    if data_span is None:
-        raise WavUnsupported("missing data chunk")
+    chunks = walk_chunks(data, "<", (b"fmt ", b"data"), WavUnsupported)
+    body_off, size = chunks[b"fmt "]
+    if size < 16:
+        raise WavUnsupported(f"fmt chunk too small ({size})")
+    fmt = struct.unpack_from("<HHIIHH", data, body_off)
+    if fmt[0] == 0xFFFE:
+        # WAVE_FORMAT_EXTENSIBLE: accept iff the SubFormat GUID is PCM
+        # or IEEE-float (base fields 16 + cbSize 2 + wValidBits 2 +
+        # dwChannelMask 4 = GUID at +24)
+        if size < 40:
+            raise WavUnsupported(f"EXTENSIBLE fmt chunk too small ({size})")
+        guid = data[body_off + 24:body_off + 40]
+        if guid == _PCM_GUID:
+            fmt = (1,) + fmt[1:]
+        elif guid == _FLOAT_GUID:
+            fmt = (3,) + fmt[1:]
+        else:
+            raise WavUnsupported(
+                "EXTENSIBLE subformat is neither PCM nor IEEE float"
+            )
     audio_format, channels, sample_rate, _byte_rate, block_align, bits = fmt
     if audio_format not in (1, 3, 6, 7):
         raise WavUnsupported(
@@ -184,7 +161,7 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, np.ndarray]:
             f"block align {block_align} != channels*bits/8 ({channels * bits // 8})"
         )
 
-    off, size = data_span
+    off, size = chunks[b"data"]
     if size % block_align != 0:
         raise WavUnsupported(f"data size {size} not a whole number of frames")
     n_frames = size // block_align
@@ -200,17 +177,17 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, np.ndarray]:
             data, dtype=_FLOAT_DTYPES[bits], count=n_frames * channels, offset=off
         )
         return sample_rate, channels, bits, raw.reshape(n_frames, channels)
-    if bits == 24:
-        # packed 3-byte little-endian: widen to int32 and sign-extend
-        # from bit 23 — vectorized, no per-sample Python
-        raw = np.frombuffer(
-            data, dtype=np.uint8, count=n_frames * channels * 3, offset=off
-        ).reshape(-1, 3).astype(np.int32)
-        vals = raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)
-        vals -= (vals & 0x800000) << 1
-        return sample_rate, channels, bits, vals.reshape(n_frames, channels)
-    raw = np.frombuffer(data, dtype=_DTYPES[bits], count=n_frames * channels, offset=off)
-    return sample_rate, channels, bits, raw.astype(np.int32).reshape(n_frames, channels)
+    vals = pcm_unpack(data, off, n_frames * channels, bits, "<", True)
+    return sample_rate, channels, bits, vals.reshape(n_frames, channels)
+
+
+def _riff(tag: int, channels: int, sample_rate: int, bits: int, body: bytes) -> bytes:
+    """A canonical RIFF/WAVE: one 16-byte ``fmt `` + one ``data`` chunk."""
+    block_align = channels * bits // 8
+    fmt = struct.pack(
+        "<HHIIHH", tag, channels, sample_rate, sample_rate * block_align, block_align, bits
+    )
+    return write_form(b"RIFF", b"WAVE", ((b"fmt ", fmt), (b"data", body)), "<")
 
 
 def encode_wav_g711(
@@ -227,15 +204,7 @@ def encode_wav_g711(
     body = bytes(np.asarray(codes, dtype=np.uint8).reshape(-1).tobytes())
     if len(body) % channels:
         raise WavUnsupported("codes not a whole number of frames")
-    fmt = struct.pack(
-        "<HHIIHH", 6 if law == "alaw" else 7, channels, sample_rate,
-        sample_rate * channels, channels, 8,
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(body)) + body + (
-        b"\x00" if len(body) & 1 else b""
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    return _riff(6 if law == "alaw" else 7, channels, sample_rate, 8, body)
 
 
 def encode_wav(
@@ -254,31 +223,8 @@ def encode_wav(
     if arr.dtype.kind == "f":
         if bits not in _FLOAT_BITS_OK:
             raise WavUnsupported(f"bits per sample {bits} (float: only 32/64)")
-        body = arr.astype(_FLOAT_DTYPES[bits]).tobytes()
-        block_align = channels * bits // 8
-        fmt = struct.pack(
-            "<HHIIHH", 3, channels, sample_rate,
-            sample_rate * block_align, block_align, bits,
-        )
-        chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        chunks += b"data" + struct.pack("<I", len(body)) + body
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+        return _riff(3, channels, sample_rate, bits, arr.astype(_FLOAT_DTYPES[bits]).tobytes())
     if bits not in _BITS_OK:
         raise WavUnsupported(f"bits per sample {bits} (only 8/16/24/32)")
-    lo, hi = (0, 255) if bits == 8 else (-(2 ** (bits - 1)), 2 ** (bits - 1) - 1)
-    if arr.size and (int(arr.min()) < lo or int(arr.max()) > hi):
-        raise WavUnsupported(f"sample out of range for {bits}-bit PCM")
-    if bits == 24:
-        u = arr.astype(np.int32).view(np.uint32).reshape(-1, 1)
-        body = np.concatenate(
-            [(u & 0xFF), (u >> 8) & 0xFF, (u >> 16) & 0xFF], axis=1
-        ).astype(np.uint8).tobytes()
-    else:
-        body = arr.astype(_DTYPES[bits]).tobytes()
-    block_align = channels * bits // 8
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, bits
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    body = pcm_pack(arr, bits, "<", True, WavUnsupported)
+    return _riff(1, channels, sample_rate, bits, body)

@@ -79,8 +79,7 @@ def read_toa5(
     except AnalysisException as e:
         # only the missing-path case maps to "empty frame" — schema or
         # other analysis errors must still fail loudly
-        cls = e.getErrorClass() if hasattr(e, "getErrorClass") else None
-        if not allow_missing or cls != "PATH_NOT_FOUND":
+        if not allow_missing or e.getCondition() != "PATH_NOT_FOUND":
             raise
         return spark.createDataFrame([], schema)
     return df.filter(F.col(ts_col).isNotNull())

@@ -804,23 +804,26 @@ def test_tiff_lzw_and_predictor_roundtrip_exact():
 
 
 def test_tiff_lzw_width_growth_clears_and_hostile_streams():
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm._codec import (
+        lzw_decode,
+        lzw_encode,
+    )
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.tiff import (
         TiffUnsupported,
-        _lzw_compress,
-        _unlzw,
         decode_tiff,
         encode_tiff,
     )
 
     rng = np.random.default_rng(3)
     # 300k incompressible bytes force all code widths + multiple clears
+    # (TIFF's variant: MSB-first, early change)
     raw = bytes(rng.integers(0, 256, 300_000, dtype=np.uint8))
-    comp = _lzw_compress(raw)
-    assert _unlzw(comp, 0, len(comp), len(raw)).tobytes() == raw
+    comp = lzw_encode(raw, 8, True, 1)
+    assert lzw_decode(comp, 8, len(raw), True, 1, TiffUnsupported) == raw
     # constant runs drive the KwKwK case
     runs = bytes([7]) * 5000
-    comp2 = _lzw_compress(runs)
-    assert _unlzw(comp2, 0, len(comp2), len(runs)).tobytes() == runs
+    comp2 = lzw_encode(runs, 8, True, 1)
+    assert lzw_decode(comp2, 8, len(runs), True, 1, TiffUnsupported) == runs
     # hostile: corrupt LZW strips raise TiffUnsupported only, and the
     # output stays bounded at the declared geometry
     rnd = random.Random(9)

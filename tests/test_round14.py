@@ -251,18 +251,19 @@ def test_gif_lzw_base_tables_are_never_mutated():
     and pin the base objects' contents."""
     import numpy as np
 
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm import _codec as C
     from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm import gif as G
 
-    snap_dec = {mc: list(t) for mc, t in G._LZW_DEC_BASE.items()}
-    snap_enc = {mc: dict(t) for mc, t in G._LZW_ENC_BASE.items()}
+    snap_dec = {mc: list(t) for mc, t in C._LZW_DEC_BASE.items()}
+    snap_enc = {mc: dict(t) for mc, t in C._LZW_ENC_BASE.items()}
     rng = np.random.default_rng(7)
     frame = rng.integers(0, 256, size=(32, 32), dtype=np.uint8)
     p = G.encode_gif(32, 32, 1, frame.tobytes())
     first = G.decode_gif(p)
     second = G.decode_gif(p)
     assert first == second
-    assert {mc: list(t) for mc, t in G._LZW_DEC_BASE.items()} == snap_dec
-    assert {mc: dict(t) for mc, t in G._LZW_ENC_BASE.items()} == snap_enc
+    assert {mc: list(t) for mc, t in C._LZW_DEC_BASE.items()} == snap_dec
+    assert {mc: dict(t) for mc, t in C._LZW_ENC_BASE.items()} == snap_enc
 
 
 # ------------------------------------- VERDICT r13 #7: arrow bucket tiling
