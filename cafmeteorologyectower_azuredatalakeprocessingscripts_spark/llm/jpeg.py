@@ -25,8 +25,8 @@ back to the digest stub, exactly like the other five codecs):
 - 1 (grayscale), 3 (YCbCr) or 4 (Adobe CMYK/YCCK via APP14,
   inverted storage — r13) components; luma sampling factors 1x1,
   2x1, 1x2 or 2x2 with 1x1 chroma (4:4:4, 4:2:2, 4:4:0, 4:2:0 — what
-  real encoders emit); restart markers (DRI/RSTn) supported in both
-  modes;
+  real encoders emit); restart markers (DRI/RSTn) in every scan
+  layout of both modes;
 - 8-bit DQT tables; DHT tables are validated as canonical prefix
   codes before a LUT is built.
 
@@ -35,6 +35,13 @@ exist for fixtures and proof: both transmit the SAME quantized
 coefficients, so progressive-vs-baseline decode equality is asserted
 pixel-exact in tests — an entropy-layer bug in either mode breaks the
 equivalence, independent of the DC-only oracle path.
+
+One scan layout serves every scan both ways: :func:`_frame_geometry`
+sizes the block grids, :func:`_scan_layout` says which blocks form
+scan unit m (an MCU when interleaved, one block of the component's
+true grid when not), and restart intervals count those units. The
+encoders write every scan through :func:`_entropy_scan`, which numbers
+RST markers from RST0 in each scan, as T.81 and libjpeg expect.
 
 Decode output matches :mod:`.png` / :mod:`.bmp` / :mod:`.tiff`:
 ``(width, height, channels, pixel_bytes)`` row-major top-down,
@@ -193,13 +200,11 @@ _EXT65 = tuple(
 )
 
 
-def _build_lut(bits: bytes, vals: bytes, is_dc: bool) -> tuple[list, list, list]:
-    key = bytes([is_dc]) + bytes(bits) + bytes(vals)
-    hit = _LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sym = [-1] * 65536
-    length = [0] * 65536
+def _canonical_codes(bits: bytes, vals: bytes) -> list[tuple[int, int, int]]:
+    """The canonical Huffman code of a DHT (T.81 Annex C): one
+    ``(value, code, length)`` per entry, shortest codes first; raises
+    when the code lengths overflow a prefix code."""
+    codes = []
     code = 0
     k = 0
     for ln in range(1, 17):
@@ -207,18 +212,98 @@ def _build_lut(bits: bytes, vals: bytes, is_dc: bool) -> tuple[list, list, list]
         if code + n > (1 << ln):
             raise JpegUnsupported("DHT is not a valid prefix code")
         for _ in range(n):
-            base = code << (16 - ln)
-            span = 1 << (16 - ln)
-            sym[base : base + span] = [vals[k]] * span
-            length[base : base + span] = [ln] * span
+            codes.append((vals[k], code, ln))
             code += 1
             k += 1
         code <<= 1
+    return codes
+
+
+# the sequential loop's scatter targets: zigzag position k's block-flat
+# index << 17, extended past 63 with a sentinel index — a run overrunning
+# the block packs an out-of-grid target and the scatter's bounds check at
+# scan end raises, cheaper than a per-coefficient k>63 compare
+_ZIG17 = tuple(z << 17 for z in _ZIGZAG + (1 << 30,) * 16)
+_POW2 = tuple(1 << s for s in range(33))
+
+
+def _build_lut(bits: bytes, vals: bytes, is_dc: bool) -> tuple[list, list, list]:
+    key = bytes([is_dc]) + bytes(bits) + bytes(vals)
+    hit = _LUT_CACHE.get(key)
+    if hit is not None:
+        return hit
+    sym = [-1] * 65536
+    length = [0] * 65536
+    for v, code, ln in _canonical_codes(bits, vals):
+        base = code << (16 - ln)
+        span = 1 << (16 - ln)
+        sym[base : base + span] = [v] * span
+        length[base : base + span] = [ln] * span
     entry = (sym, length, _fast_pack(sym, length, is_dc))
     if len(_LUT_CACHE) >= _LUT_CACHE_MAX:
         _LUT_CACHE.pop(next(iter(_LUT_CACHE)))
     _LUT_CACHE[key] = entry
     return entry
+
+
+# ------------------------------------------------------ scan layout
+
+
+def _frame_geometry(width: int, height: int, samp: list) -> tuple:
+    """Block grids of a frame whose components have sampling factors
+    ``samp`` = [(h, v)] -> ``(mcux, mcuy, grids)``, MCU columns and
+    rows plus per component ``(bwp, bhp, bw, bh, cw, ch)``: the block
+    grid padded to whole MCUs (how coefficients are stored), the
+    component's true block grid (what a non-interleaved scan codes,
+    T.81 A.2.2) and its size in samples."""
+    hmax = max(h for h, _v in samp)
+    vmax = max(v for _h, v in samp)
+    mcux = (width + 8 * hmax - 1) // (8 * hmax)
+    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
+    grids = []
+    for hi, vi in samp:
+        cw = (width * hi + hmax - 1) // hmax
+        ch = (height * vi + vmax - 1) // vmax
+        grids.append((mcux * hi, mcuy * vi, (cw + 7) // 8, (ch + 7) // 8, cw, ch))
+    return mcux, mcuy, grids
+
+
+def _scan_layout(cis: list, samp: list, geom: tuple) -> tuple[list, int, int]:
+    """Which blocks form each coding unit of a scan over components
+    ``cis`` -> ``(slots, n_units, mdiv)``. Unit m codes one block per
+    slot ``(ci, A, B, C)``, in slot order: block
+    ``(m // mdiv) * A + (m % mdiv) * B + C`` of component ci's padded
+    grid. An interleaved scan's unit is an MCU (each component's h x v
+    blocks, T.81 A.2.3); a single-component scan's unit is one block
+    of the component's true grid (A.2.2). Restart intervals count
+    these units."""
+    mcux, mcuy, grids = geom
+    if len(cis) > 1:
+        slots = []
+        for ci in cis:
+            hi, vi = samp[ci]
+            bwp = grids[ci][0]
+            for dy in range(vi):
+                for dx in range(hi):
+                    slots.append((ci, vi * bwp, hi, dy * bwp + dx))
+        return slots, mcux * mcuy, mcux
+    (ci,) = cis
+    bwp, _bhp, bw, bh = grids[ci][:4]
+    return [(ci, bwp, 1, 0)], bw * bh, bw
+
+
+def _scan_units(layout: tuple):
+    """Yield each unit of a scan layout as its ``((ci, block index),
+    ...)`` in coding order — the walk every scan but the sequential
+    decoder's inlined hot loop takes. A row of units at a time: one
+    list per slot, zipped into units (a third of the cost of one list
+    per unit, for the one-slot units of AC scans)."""
+    slots, n_units, mdiv = layout
+    cols = range(mdiv)
+    for my in range(n_units // mdiv):
+        yield from zip(
+            *[[(ci, my * a + c + mx * b) for mx in cols] for ci, a, b, c in slots]
+        )
 
 
 # ---------------------------------------------------------- decoder
@@ -305,10 +390,10 @@ class _BitReader:
         return self.bpos * 8 - self.nb <= self.n * 8
 
 
-def _decode_scan_sequential(segs, comps, coef, order, geom, dri):
-    """Sequential (SOF0/SOF1) scan: the baseline hot loop. Interleaved
-    (ns > 1) iterates MCUs; single-component scans iterate the
-    component's TRUE block grid (T.81: non-interleaved MCU = 1 block).
+def _decode_scan_sequential(segs, nc, coef, order, layout, dri):
+    """Sequential (SOF0/SOF1) scan: the baseline hot loop over the
+    units of ``layout`` (:func:`_scan_layout`), with the block index
+    inlined in the same affine form.
 
     Hot-path choices (r13, ~2.5x over the r12 accumulator loop): NO
     bit accumulator at all — the loop keeps one small-int ``bitpos``
@@ -323,43 +408,20 @@ def _decode_scan_sequential(segs, comps, coef, order, geom, dri):
     ``coef[ci]`` with one vectorized assignment per scan — the loop
     never touches numpy scalars, and grid memory is 4
     bytes/coefficient instead of a Python list cell."""
-    mcux, mcuy, grids = geom
-    nc = len(comps)
-    # zig extended past 63 with a sentinel block-flat index: a run
-    # overrunning the block packs an out-of-grid target and the
-    # scatter's bounds check at scan end raises — cheaper than a
-    # per-coefficient k>63 compare in the hot loop
-    zig = _ZIGZAG + (1 << 30,) * 16
-    zig17 = tuple(z << 17 for z in zig)
-    pow2 = tuple(1 << s for s in range(33))
-    half = tuple(1 << (s - 1) if s else 0 for s in range(17))
+    zig17 = _ZIG17
+    pow2 = _POW2
     # per-component packed scatter buffers: (flat_index << 17) | val17
     out = [[] for _ in range(nc)]
-    interleaved = len(order) > 1
-    # slot = (ci, A, B, C, pk, dfast, afast, asym, alen) with the
-    # block's raster index as the affine my*A + mx*B + C, divmod
-    # hoisted out of the slot loop
-    if interleaved:
-        slots = []
-        for ci, dtab, atab in order:
-            hi, vi = comps[ci][1], comps[ci][2]
-            bwp = grids[ci][0]
-            for dy in range(vi):
-                for dx in range(hi):
-                    slots.append(
-                        (ci, vi * bwp, hi, dy * bwp + dx, out[ci].append,
-                         dtab[2], atab[2], atab[0], atab[1])
-                    )
-        n_units = mcux * mcuy
-        mdiv = mcux
-    else:
-        ci, dtab, atab = order[0]
-        bwp, _bhp, bw, bh = grids[ci]
-        slots = [
-            (ci, bwp, 1, 0, out[ci].append, dtab[2], atab[2], atab[0], atab[1])
-        ]
-        n_units = bw * bh
-        mdiv = bw
+    # slot = (ci, A, B, C, pk, dfast, afast, asym, alen): the layout's
+    # affine slot plus its scatter and tables, divmod hoisted out of
+    # the slot loop
+    tabs = {ci: (dtab, atab) for ci, dtab, atab in order}
+    unit_slots, n_units, mdiv = layout
+    slots = [
+        (ci, a, b, c, out[ci].append, tabs[ci][0][2], tabs[ci][1][2],
+         tabs[ci][1][0], tabs[ci][1][1])
+        for ci, a, b, c in unit_slots
+    ]
     pred = [0] * nc
     ext65 = _EXT65
     seg_i = -1
@@ -492,42 +554,14 @@ def _decode_scan_sequential(segs, comps, coef, order, geom, dri):
                 raise JpegUnsupported("AC coefficient overruns block") from None
 
 
-def _decode_scan_progressive(segs, comps, coef, order, geom, dri, ss, se, ah, al):
+def _decode_scan_progressive(segs, nc, coef, order, layout, dri, ss, se, ah, al):
     """One progressive (SOF2) scan — the four T.81 modes: DC first
     (diffs at reduced precision, << Al), DC refinement (one raw bit
     per block), AC first (band Ss..Se run-length with EOB-run codes),
     AC refinement (correction bits on known coefficients + newly
     significant +/-2^Al). Spec constraints enforced by the caller: AC
     scans are single-component; Ah == 0 or Ah == Al + 1."""
-    mcux, mcuy, grids = geom
-    nc = len(comps)
     zig = _ZIGZAG
-    interleaved = len(order) > 1
-    if ss == 0:
-        units = []
-        if interleaved:
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                for ci, _dt, _at in order:
-                    bwp, hi, vi = grids[ci][0], comps[ci][1], comps[ci][2]
-                    for dy in range(vi):
-                        for dx in range(hi):
-                            units.append((ci, (my * vi + dy) * bwp + mx * hi + dx))
-        else:
-            ci = order[0][0]
-            bwp, bw, bh = grids[ci][0], grids[ci][2], grids[ci][3]
-            units = [
-                (ci, (m // bw) * bwp + m % bw) for m in range(bw * bh)
-            ]
-        n_units = mcux * mcuy if interleaved else len(units)
-        per_mcu = len(units) // n_units if n_units else 1
-    else:
-        ci = order[0][0]
-        bwp, bw, bh = grids[ci][0], grids[ci][2], grids[ci][3]
-        units = [(ci, (m // bw) * bwp + m % bw) for m in range(bw * bh)]
-        n_units = len(units)
-        per_mcu = 1
-
     tabs = {ci: (dtab, atab) for ci, dtab, atab in order}
     pred = [0] * nc
     eobrun = 0
@@ -535,7 +569,7 @@ def _decode_scan_progressive(segs, comps, coef, order, geom, dri, ss, se, ah, al
     seg_i = -1
     p1 = 1 << al
     m1 = -p1
-    for m in range(n_units):
+    for m, unit in enumerate(_scan_units(layout)):
         if dri and m % dri == 0 or m == 0:
             if m and not br.consumed_ok():
                 raise JpegUnsupported("entropy segment truncated")
@@ -546,8 +580,7 @@ def _decode_scan_progressive(segs, comps, coef, order, geom, dri, ss, se, ah, al
             if m:
                 pred = [0] * nc
                 eobrun = 0
-        for u in range(per_mcu):
-            ci, idx = units[m * per_mcu + u]
+        for ci, idx in unit:
             blk = coef[ci][idx]
             if ss == 0:
                 if ah == 0:  # DC first
@@ -758,22 +791,16 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                     raise JpegUnsupported(
                         "mixed sampling factors beyond luma-subsampled chroma"
                     )
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            grids = []
-            coef = []
-            for cid, hi, vi, tq in comps:
-                bwp, bhp = mcux * hi, mcuy * vi
-                cw = (w * hi + hmax - 1) // hmax
-                ch = (h * vi + vmax - 1) // vmax
-                bw, bh = (cw + 7) // 8, (ch + 7) // 8
-                grids.append((bwp, bhp, bw, bh))
-                # int32 (blocks, 64) grid: 4 bytes/coefficient, so the
-                # worst-case allocation tracks the output cap instead
-                # of the ~10x cost of Python list-of-list cells
-                coef.append(np.zeros((bwp * bhp, 64), dtype=np.int32))
-            frame = (w, h, comps, hmax, vmax)
-            geom = (mcux, mcuy, grids)
+            samp = [(hi, vi) for _cid, hi, vi, _tq in comps]
+            geom = _frame_geometry(w, h, samp)
+            # int32 (blocks, 64) grid per component: 4 bytes/coefficient,
+            # so the worst-case allocation tracks the output cap instead
+            # of the ~10x cost of Python list-of-list cells
+            coef = [
+                np.zeros((bwp * bhp, 64), dtype=np.int32)
+                for bwp, bhp, *_rest in geom[2]
+            ]
+            frame = (w, h, comps, samp, hmax, vmax)
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise JpegUnsupported("lossless/hierarchical/arithmetic JPEG")
         elif marker == 0xDD:  # DRI
@@ -783,7 +810,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise JpegUnsupported("SOS before SOF")
-            w, h, comps, hmax, vmax = frame
+            comps, samp = frame[2], frame[3]
             ns = body[0] if body else -1
             if ns < 1 or ns > len(comps) or len(body) != 1 + 2 * ns + 3:
                 raise JpegUnsupported("SOS truncated")
@@ -803,6 +830,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                 raise JpegUnsupported("interleaved MCU exceeds 10 blocks")
             ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0x0F
+            layout = _scan_layout([o[0] for o in order], samp, geom)
             if not progressive:
                 if (ss, se, ah, al) != (0, 63, 0, 0):
                     raise JpegUnsupported("non-sequential scan parameters")
@@ -814,7 +842,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                         raise JpegUnsupported("missing quantization table")
                     resolved.append((ci, hdc[td], hac[ta]))
                 segs, pos = _scan_segments(data, pos)
-                _decode_scan_sequential(segs, comps, coef, resolved, geom, dri)
+                _decode_scan_sequential(segs, len(comps), coef, resolved, layout, dri)
             else:
                 if al > 13 or (ah and ah != al + 1):
                     raise JpegUnsupported("successive-approximation parameters")
@@ -844,7 +872,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                     resolved.append((ci, dtab, atab))
                 segs, pos = _scan_segments(data, pos)
                 _decode_scan_progressive(
-                    segs, comps, coef, resolved, geom, dri, ss, se, ah, al
+                    segs, len(comps), coef, resolved, layout, dri, ss, se, ah, al
                 )
             saw_scan = True
         elif marker == 0xEE and body[:5] == b"Adobe" and len(body) >= 12:
@@ -856,12 +884,11 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
 
     if frame is None or not saw_scan:
         raise JpegUnsupported("no decoded scan")
-    w, h, comps, hmax, vmax = frame
-    mcux, mcuy, grids = geom
+    w, h, comps, samp, hmax, vmax = frame
     nc = len(comps)
     planes = []
     for ci, (cid, hi, vi, tq) in enumerate(comps):
-        bwp, bhp = grids[ci][0], grids[ci][1]
+        bwp, bhp, _bw, _bh, cw, ch = geom[2][ci]
         # float64 multiply: no int32 wrap even for hostile coefficients
         deq = coef[ci].astype(np.float64) * qtabs[tq][None, :]
         spatial = _idct_blocks(deq.reshape(-1, 8, 8))
@@ -871,8 +898,6 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
             .transpose(0, 2, 1, 3)
             .reshape(bhp * 8, bwp * 8)
         )
-        cw = (w * hi + hmax - 1) // hmax
-        ch = (h * vi + vmax - 1) // vmax
         plane = plane[:ch, :cw]
         if (hi, vi) != (hmax, vmax):  # replicate chroma up to full res
             plane = np.repeat(plane, hmax // hi, axis=1)[:, :w]
@@ -895,30 +920,26 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                 "4-component JPEG without an Adobe APP14 CMYK/YCCK transform"
             )
         if adobe_transform == 2:
-            y = planes[0].astype(np.float64)
-            cb = planes[1].astype(np.float64) - 128.0
-            cr = planes[2].astype(np.float64) - 128.0
-            cmy_inv = np.stack(
-                [
-                    np.clip(np.round(y + 1.402 * cr), 0, 255),
-                    np.clip(np.round(y - 0.344136 * cb - 0.714136 * cr), 0, 255),
-                    np.clip(np.round(y + 1.772 * cb), 0, 255),
-                ],
-                axis=-1,
-            ).astype(np.uint16)
+            cmy_inv = _ycc_to_rgb(planes, np.uint16)
         else:
             cmy_inv = np.stack(planes[:3], axis=-1).astype(np.uint16)
         k_inv = planes[3].astype(np.uint16)[:, :, None]
         rgb = ((cmy_inv * k_inv + 127) // 255).astype(np.uint8)
         return w, h, 3, rgb.tobytes()
+    return w, h, 3, _ycc_to_rgb(planes, np.uint8).tobytes()
+
+
+def _ycc_to_rgb(planes: list, dtype) -> np.ndarray:
+    """BT.601 YCbCr planes (the first three of ``planes``) -> (h, w, 3)
+    RGB of ``dtype``, rounded and clipped to 0..255."""
     y = planes[0].astype(np.float64)
     cb = planes[1].astype(np.float64) - 128.0
     cr = planes[2].astype(np.float64) - 128.0
-    rgb = np.empty((h, w, 3), dtype=np.uint8)
+    rgb = np.empty(y.shape + (3,), dtype=dtype)
     rgb[:, :, 0] = np.clip(np.round(y + 1.402 * cr), 0, 255)
     rgb[:, :, 1] = np.clip(np.round(y - 0.344136 * cb - 0.714136 * cr), 0, 255)
     rgb[:, :, 2] = np.clip(np.round(y + 1.772 * cb), 0, 255)
-    return w, h, 3, rgb.tobytes()
+    return rgb
 
 
 # ---------------------------------------------------------- encoder
@@ -980,15 +1001,7 @@ def _enc_codes(bits: bytes, vals: bytes) -> dict[int, tuple[int, int]]:
     cached = _ENC_CODES_CACHE.get((bits, vals))
     if cached is not None:
         return cached
-    codes = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            codes[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
+    codes = {v: (code, ln) for v, code, ln in _canonical_codes(bits, vals)}
     _ENC_CODES_CACHE[(bits, vals)] = codes
     return codes
 
@@ -1024,50 +1037,69 @@ def _category(v: int) -> int:
     return int(v).bit_length() if v >= 0 else int(-v).bit_length()
 
 
-def _encode_blocks(
-    bw: _BitWriter,
-    blocks_zz: np.ndarray,
-    order: list,
-    pred: list,
-    dc_codes: list,
-    ac_codes: list,
-) -> None:
-    """Emit one MCU's blocks (already zigzagged, quantized int) in
-    `order` = [(comp_index, block_row_index)]."""
-    for ci, bi in order:
-        # one tolist() per block: the tail scan + AC loop below index
-        # the 64 coefficients scalar-by-scalar, and list indexing is
-        # ~2x numpy scalar indexing (r17; values exact — int64 -> int)
-        blk = blocks_zz[ci][bi].tolist()
-        dc = int(blk[0])
-        diff = dc - pred[ci]
-        pred[ci] = dc
-        s = _category(diff)
-        code, ln = dc_codes[ci][s]
+def _put_dc(bw: _BitWriter, codes: dict, diff: int) -> None:
+    """One DC difference: its size category's code, then its value
+    bits (T.81 F.1.2.1)."""
+    s = _category(diff)
+    code, ln = codes[s]
+    bw.put(code, ln)
+    if s:
+        bw.put(diff if diff >= 0 else diff - 1 + (1 << s), s)
+
+
+def _put_ac(bw: _BitWriter, codes: dict, vals: list) -> bool:
+    """Run-length code a band of AC coefficients (T.81 F.1.2.2): each
+    nonzero value as a ZRL per 16 preceding zeros, its (run, size)
+    code and its value bits. Zeros after the last nonzero value are
+    left to the caller's EOB; returns whether there are any."""
+    run = 0
+    for v in vals:
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            code, ln = codes[0xF0]
+            bw.put(code, ln)  # ZRL
+            run -= 16
+        s = _category(v)
+        code, ln = codes[(run << 4) | s]
         bw.put(code, ln)
-        if s:
-            bw.put(diff if diff >= 0 else diff - 1 + (1 << s), s)
+        bw.put(v if v >= 0 else v - 1 + (1 << s), s)
         run = 0
-        last = 63
-        while last > 0 and blk[last] == 0:
-            last -= 1
-        for k in range(1, last + 1):
-            v = int(blk[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_codes[ci][0xF0]
-                bw.put(code, ln)  # ZRL
-                run -= 16
-            s = _category(v)
-            code, ln = ac_codes[ci][(run << 4) | s]
-            bw.put(code, ln)
-            bw.put(v if v >= 0 else v - 1 + (1 << s), s)
-            run = 0
-        if last < 63:
-            code, ln = ac_codes[ci][0x00]
-            bw.put(code, ln)  # EOB
+    return run > 0
+
+
+def _entropy_scan(layout: tuple, restart_interval: int, block, end) -> bytearray:
+    """Entropy-code one scan -> its entropy-coded bytes. ``block(bw,
+    ci, idx)`` writes each block of each unit of ``layout``
+    (:func:`_scan_layout`) in order. Every ``restart_interval`` units
+    (0: never) ``end(bw)`` closes the interval (pending EOB run,
+    predictor reset), the writer pads to a byte and an RSTn marker
+    follows, numbered from RST0 modulo 8 in every scan (T.81 E.1.4,
+    F.1.1.5). ``end`` closes the scan's last interval too."""
+    bw = _BitWriter()
+    for m, unit in enumerate(_scan_units(layout)):
+        if restart_interval and m and m % restart_interval == 0:
+            end(bw)
+            bw.flush()
+            bw.out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
+        for ci, idx in unit:
+            block(bw, ci, idx)
+    end(bw)
+    bw.flush()
+    return bw.out
+
+
+def _scan_header(cis: list, ss: int, se: int, ah: int, al: int, ac_table=None) -> bytes:
+    """SOS over components ``cis``: luma uses DC/AC tables 0, every
+    other component tables 1, unless ``ac_table`` names one AC table
+    for all."""
+    body = bytes([len(cis)])
+    for ci in cis:
+        t = 0 if ci == 0 else 1
+        body += bytes([ci + 1, (t << 4) | (t if ac_table is None else ac_table)])
+    body += bytes([ss, se, (ah << 4) | al])
+    return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
 
 
 def _plane_to_blocks(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -1101,8 +1133,9 @@ def _prepare_encode(
 ):
     """Shared encoder front half: RGB->YCbCr, chroma box-mean
     downsample, MCU-grid edge padding, FDCT + quantize + zigzag.
-    Returns (blocks_zz per comp in raster padded layout, samp, grids,
-    mcux, mcuy, qs) with ``qs`` the per-component quantization tables
+    Returns (blocks_zz per comp in raster padded layout, samp, geom,
+    qs) with ``geom`` from :func:`_frame_geometry` and ``qs`` the
+    per-component quantization tables
     — [luma] or [luma, chroma, chroma] (real encoders ship separate
     luma/chroma tables; ``qtable_chroma=None`` reuses the luma table
     and keeps the single-DQT stream byte-identical to pre-r12)."""
@@ -1150,11 +1183,9 @@ def _prepare_encode(
         samp = [luma_samp[subsampling], (1, 1), (1, 1)]
     hmax = max(s[0] for s in samp)
     vmax = max(s[1] for s in samp)
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
+    geom = _frame_geometry(width, height, samp)
     qs = [q] + [qc] * (channels - 1)
     blocks_zz = []
-    grids = []
     for ci, ((hi, vi), plane) in enumerate(zip(samp, planes)):
         if (hi, vi) != (hmax, vmax):  # box-mean downsample chroma
             p = _pad_plane(plane, vmax // vi, hmax // hi).astype(np.float64)
@@ -1162,10 +1193,10 @@ def _prepare_encode(
             p = p.reshape(p.shape[0] // fy, fy, p.shape[1] // fx, fx).mean(axis=(1, 3))
             plane = np.clip(np.round(p), 0, 255).astype(np.uint8)
         # pad to this component's full MCU grid (edge replication)
-        plane = _pad_plane(plane, 8 * vi * mcuy, 8 * hi * mcux)
+        bwp, bhp = geom[2][ci][:2]
+        plane = _pad_plane(plane, 8 * bhp, 8 * bwp)
         blocks_zz.append(_plane_to_blocks(plane, qs[ci]))
-        grids.append((mcux * hi, mcuy * vi, hi, vi))
-    return blocks_zz, samp, grids, mcux, mcuy, qs
+    return blocks_zz, samp, geom, qs
 
 
 def _emit_headers(width, height, nc, samp, qs, sof_marker):
@@ -1235,15 +1266,18 @@ def encode_jpeg(
     (default all-ones — near-lossless, and EXACTLY lossless for
     blocks that are constant, which is what the oracle fixtures use);
     ``restart_interval`` > 0 emits DRI + RSTn markers every that many
-    MCUs. ``non_interleaved=True`` (3-channel only) writes ONE SCAN
-    PER COMPONENT over its true block grid — the other legal
-    sequential layout (T.81 non-interleaved scans, MCU = 1 block),
-    emitted by some scanners; exists to exercise that decoder branch
-    with an exact equivalence against the interleaved form."""
-    blocks_zz, samp, grids, mcux, mcuy, qs = _prepare_encode(
+    units of each scan (see :func:`_entropy_scan`).
+    ``non_interleaved=True`` (3-channel only) writes ONE SCAN PER
+    COMPONENT over its true block grid — the other legal sequential
+    layout (T.81 non-interleaved scans, MCU = 1 block), emitted by some
+    scanners; exists to exercise that decoder branch with an exact
+    equivalence against the interleaved form."""
+    blocks_zz, samp, geom, qs = _prepare_encode(
         width, height, channels, pixels, subsampling, qtable, qtable_chroma
     )
     nc = channels
+    if non_interleaved and nc == 1:
+        raise JpegUnsupported("non_interleaved requires 3 channels")
     out = _emit_headers(width, height, nc, samp, qs, sof_marker=0xC0)
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
@@ -1254,61 +1288,26 @@ def encode_jpeg(
     ac_c = _enc_codes(_AC_CHROMA_BITS, _AC_CHROMA_VALS)
     dc_codes = [dc_l] + [dc_c] * (nc - 1)
     ac_codes = [ac_l] + [ac_c] * (nc - 1)
-
-    if non_interleaved:
-        if nc == 1:
-            raise JpegUnsupported("non_interleaved requires 3 channels")
-        if restart_interval:
-            raise JpegUnsupported("non_interleaved does not emit restarts")
-        hmax = max(s[0] for s in samp)
-        vmax = max(s[1] for s in samp)
-        for ci in range(nc):
-            sos = bytes([1, ci + 1, 0x00 if ci == 0 else 0x11, 0, 63, 0])
-            out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-            hi, vi = samp[ci]
-            bpl = grids[ci][0]
-            cw = (width * hi + hmax - 1) // hmax
-            ch = (height * vi + vmax - 1) // vmax
-            bw_t, bh_t = (cw + 7) // 8, (ch + 7) // 8
-            bwr = _BitWriter()
-            pred = [0] * nc
-            for m in range(bw_t * bh_t):
-                idx = (m // bw_t) * bpl + m % bw_t
-                _encode_blocks(bwr, blocks_zz, [(ci, idx)], pred, dc_codes, ac_codes)
-            bwr.flush()
-            out += bwr.out
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    sos = bytes([nc])
-    for ci in range(nc):
-        td_ta = 0x00 if ci == 0 else 0x11
-        sos += bytes([ci + 1, td_ta])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    bw = _BitWriter()
     pred = [0] * nc
-    n_mcu = mcux * mcuy
-    rst = 0
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            out += bw.out
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + rst % 8])
-            rst += 1
-            pred = [0] * nc
-        my, mx = divmod(m, mcux)
-        order = []
-        for ci in range(nc):
-            bpl, _rows, hi, vi = grids[ci]
-            for dy in range(vi):
-                for dx in range(hi):
-                    order.append((ci, (my * vi + dy) * bpl + mx * hi + dx))
-        _encode_blocks(bw, blocks_zz, order, pred, dc_codes, ac_codes)
-    bw.flush()
-    out += bw.out
+
+    def block(bw, ci, idx):
+        # one tolist() per block: the AC walk indexes the 64
+        # coefficients scalar-by-scalar, and list indexing is ~2x numpy
+        # scalar indexing (r17; values exact — int64 -> int)
+        blk = blocks_zz[ci][idx].tolist()
+        _put_dc(bw, dc_codes[ci], blk[0] - pred[ci])
+        pred[ci] = blk[0]
+        if _put_ac(bw, ac_codes[ci], blk[1:]):
+            code, ln = ac_codes[ci][0x00]
+            bw.put(code, ln)  # EOB
+
+    def end(bw):
+        pred[:] = [0] * nc
+
+    scans = [[ci] for ci in range(nc)] if non_interleaved else [list(range(nc))]
+    for cis in scans:
+        out += _scan_header(cis, 0, 63, 0, 0)
+        out += _entropy_scan(_scan_layout(cis, samp, geom), restart_interval, block, end)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1358,8 +1357,9 @@ def encode_jpeg_progressive(
     approximation so every decoder mode is exercised: DC first at
     Al=1, AC first (bands 1-5 and 6-63) at Al=1, then DC/AC refinement
     scans at Al=0. ``restart_interval`` > 0 emits DRI + RSTn in every
-    scan (units: MCUs for the DC scan, blocks for AC scans)."""
-    blocks_zz, samp, grids, mcux, mcuy, qs = _prepare_encode(
+    scan (units: MCUs for the DC scans, blocks for AC scans), numbered
+    from RST0 in each."""
+    blocks_zz, samp, geom, qs = _prepare_encode(
         width, height, channels, pixels, subsampling, qtable, qtable_chroma
     )
     nc = channels
@@ -1382,113 +1382,60 @@ def encode_jpeg_progressive(
     dc_l = _enc_codes(_DC_LUMA_BITS, _DC_LUMA_VALS)
     dc_c = _enc_codes(_DC_CHROMA_BITS, _DC_CHROMA_VALS)
     dc_codes = [dc_l] + [dc_c] * (nc - 1)
-    ac_prog = _enc_codes(_AC_PROG_BITS, _AC_PROG_VALS)
-    ac_codes = [ac_prog] * nc
+    ac = _enc_codes(_AC_PROG_BITS, _AC_PROG_VALS)
 
-    rst_state = [0]
+    # one (block, end) coder pair per scan mode, for _entropy_scan
 
-    def sos_header(comp_ids, ss, se, ah, al):
-        body = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            # DC scans read Td (Annex K 0/1); AC scans read Ta = 2 (the
-            # generic progressive table emitted above)
-            body += bytes([ci + 1, ((0 if ci == 0 else 1) << 4) | 2])
-        body += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
-
-    def emit_rst(buf, bw):
-        bw.flush()
-        buf += bw.out
-        buf += bytes([0xFF, 0xD0 + rst_state[0] % 8])
-        rst_state[0] += 1
-        return _BitWriter()
-
-    def dc_scan(al, refine):
-        buf = bytearray(sos_header(list(range(nc)), 0, 0, al + 1 if refine else 0, al))
-        bw = _BitWriter()
+    def dc_first(al):
         pred = [0] * nc
-        for m in range(mcux * mcuy):
-            if restart_interval and m and m % restart_interval == 0:
-                bw = emit_rst(buf, bw)
-                pred = [0] * nc
-            my, mx = divmod(m, mcux)
-            for ci in range(nc):
-                bpl, _r, hi, vi = grids[ci]
-                for dy in range(vi):
-                    for dx in range(hi):
-                        dc = int(blocks_zz[ci][(my * vi + dy) * bpl + mx * hi + dx][0])
-                        if refine:
-                            bw.put((dc >> al) & 1, 1)
-                            continue
-                        v = dc >> al  # arithmetic shift: T.81 DC point transform
-                        diff = v - pred[ci]
-                        pred[ci] = v
-                        s = _category(diff)
-                        code, ln = dc_codes[ci][s]
-                        bw.put(code, ln)
-                        if s:
-                            bw.put(diff if diff >= 0 else diff - 1 + (1 << s), s)
-        bw.flush()
-        buf += bw.out
-        return buf
+
+        def block(bw, ci, idx):
+            v = int(blocks_zz[ci][idx][0]) >> al  # T.81 DC point transform
+            _put_dc(bw, dc_codes[ci], v - pred[ci])
+            pred[ci] = v
+
+        def end(bw):
+            pred[:] = [0] * nc
+
+        return block, end
+
+    def dc_refine(al):
+        def block(bw, ci, idx):
+            bw.put((int(blocks_zz[ci][idx][0]) >> al) & 1, 1)
+
+        return block, lambda bw: None
 
     def _pt(v, al):  # AC point transform: truncate toward zero
         return v >> al if v >= 0 else -((-v) >> al)
 
-    def ac_first_scan(ci, ss, se, al):
-        buf = bytearray(sos_header([ci], ss, se, 0, al))
-        bw = _BitWriter()
-        ac = ac_codes[ci]
-        bpl = grids[ci][0]
-        bw_true, bh_true = _true_grid(ci)
+    def ac_first(ss, se, al):
         eobrun = 0
-        for m in range(bw_true * bh_true):
-            if restart_interval and m and m % restart_interval == 0:
-                eobrun = _flush_eobrun(bw, ac, eobrun, [])
-                bw = emit_rst(buf, bw)
-            blk = blocks_zz[ci][(m // bw_true) * bpl + m % bw_true]
-            vals = [_pt(int(blk[k]), al) for k in range(ss, se + 1)]
+
+        def block(bw, ci, idx):
+            nonlocal eobrun
+            vals = [_pt(v, al) for v in blocks_zz[ci][idx, ss : se + 1].tolist()]
             if not any(vals):
                 eobrun += 1
                 if eobrun == 0x7FFF:
                     eobrun = _flush_eobrun(bw, ac, eobrun, [])
-                continue
+                return
             eobrun = _flush_eobrun(bw, ac, eobrun, [])
-            r = 0
-            for v in vals:
-                if v == 0:
-                    r += 1
-                    continue
-                while r > 15:
-                    code, ln = ac[0xF0]
-                    bw.put(code, ln)
-                    r -= 16
-                s = _category(v)
-                code, ln = ac[(r << 4) | s]
-                bw.put(code, ln)
-                bw.put(v if v >= 0 else v - 1 + (1 << s), s)
-                r = 0
-            if r:
+            if _put_ac(bw, ac, vals):
                 eobrun = 1
-        _flush_eobrun(bw, ac, eobrun, [])
-        bw.flush()
-        buf += bw.out
-        return buf
 
-    def ac_refine_scan(ci, ss, se, al):
-        buf = bytearray(sos_header([ci], ss, se, al + 1, al))
-        bw = _BitWriter()
-        ac = ac_codes[ci]
-        bpl = grids[ci][0]
-        bw_true, bh_true = _true_grid(ci)
+        def end(bw):
+            nonlocal eobrun
+            eobrun = _flush_eobrun(bw, ac, eobrun, [])
+
+        return block, end
+
+    def ac_refine(ss, se, al):
         eobrun = 0
         run_bits: list[int] = []
-        for m in range(bw_true * bh_true):
-            if restart_interval and m and m % restart_interval == 0:
-                eobrun = _flush_eobrun(bw, ac, eobrun, run_bits)
-                bw = emit_rst(buf, bw)
-            blk = blocks_zz[ci][(m // bw_true) * bpl + m % bw_true]
-            band = [int(blk[k]) for k in range(ss, se + 1)]
+
+        def block(bw, ci, idx):
+            nonlocal eobrun, run_bits
+            band = blocks_zz[ci][idx, ss : se + 1].tolist()
             hist = [_pt(v, al + 1) for v in band]
             cur = [_pt(v, al) for v in band]
             newly = [h == 0 and c != 0 for h, c in zip(hist, cur)]
@@ -1498,7 +1445,7 @@ def encode_jpeg_progressive(
                 run_bits.extend((abs(v) >> al) & 1 for v, h in zip(band, hist) if h)
                 if eobrun == 0x7FFF:
                     eobrun = _flush_eobrun(bw, ac, eobrun, run_bits)
-                continue
+                return
             eobrun = _flush_eobrun(bw, ac, eobrun, run_bits)
             r = 0
             pending: list[int] = []
@@ -1526,31 +1473,33 @@ def encode_jpeg_progressive(
             if r or pending:
                 eobrun = 1
                 run_bits = pending
-        _flush_eobrun(bw, ac, eobrun, run_bits)
-        bw.flush()
-        buf += bw.out
-        return buf
 
-    def _true_grid(ci):
-        hi, vi = samp[ci]
-        hmax = max(s[0] for s in samp)
-        vmax = max(s[1] for s in samp)
-        cw = (width * hi + hmax - 1) // hmax
-        ch = (height * vi + vmax - 1) // vmax
-        return (cw + 7) // 8, (ch + 7) // 8
+        def end(bw):
+            nonlocal eobrun
+            eobrun = _flush_eobrun(bw, ac, eobrun, run_bits)
 
-    if spectral_only:
-        out += dc_scan(0, refine=False)
-        for ci in range(nc):
-            out += ac_first_scan(ci, 1, 63, 0)
-    else:
-        out += dc_scan(1, refine=False)
-        for ci in range(nc):
-            out += ac_first_scan(ci, 1, 5, 1)
-            out += ac_first_scan(ci, 6, 63, 1)
-        out += dc_scan(0, refine=True)
-        for ci in range(nc):
-            out += ac_refine_scan(ci, 1, 5, 0)
-            out += ac_refine_scan(ci, 6, 63, 0)
+        return block, end
+
+    comps = list(range(nc))
+    bands = ((1, 63),) if spectral_only else ((1, 5), (6, 63))
+    first_al = 0 if spectral_only else 1
+    # (components, Ss, Se, Ah, Al): DC first, AC first per component
+    # and band, then (successive approximation only) the refinements
+    script = [(comps, 0, 0, 0, first_al)]
+    script += [([ci], ss, se, 0, first_al) for ci in comps for ss, se in bands]
+    if not spectral_only:
+        script.append((comps, 0, 0, 1, 0))
+        script += [([ci], ss, se, 1, 0) for ci in comps for ss, se in bands]
+    for cis, ss, se, ah, al in script:
+        if ss == 0:
+            coder = dc_refine(al) if ah else dc_first(al)
+        else:
+            coder = ac_refine(ss, se, al) if ah else ac_first(ss, se, al)
+        # DC scans read Td (Annex K 0/1); AC scans read Ta = 2, the
+        # generic progressive table emitted above
+        out += _scan_header(cis, ss, se, ah, al, ac_table=2)
+        out += _entropy_scan(
+            _scan_layout(cis, samp, geom), restart_interval, *coder
+        )
     out += b"\xff\xd9"
     return bytes(out)

@@ -51,6 +51,7 @@ from .wav import (
     decode_wav,
     encode_wav,
     encode_wav_g711,
+    is_g711,
     is_wav,
 )
 from .png import (
@@ -475,9 +476,11 @@ def resample_audio(
     nearest-neighbor frame pick (the deterministic integer mapping
     ``src_frame = floor(j * n_in / n_out)``, same policy as
     ``resize_nearest``) → re-encode as WAV at the target rate with the
-    source bit depth and channel count. Other payloads fall back to a
-    deterministic stand-in (``mime='audio/raw-stub'``, empty payload)
-    so batch shapes and metadata handling stay exercised end-to-end."""
+    source bit depth and channel count (16-bit PCM for G.711, whose
+    8-bit codes decode to 16-bit linear samples). Other payloads fall
+    back to a deterministic stand-in (``mime='audio/raw-stub'``, empty
+    payload) so batch shapes and metadata handling stay exercised
+    end-to-end."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -498,6 +501,8 @@ def resample_audio(
                 rate0, ch, bits, samples = dec
                 if bits == 8 and is_aiff(bytes(p)):
                     samples = samples + 128  # AIFF 8-bit is signed, WAV's unsigned
+                elif bits == 8 and is_g711(p):
+                    bits = 16  # G.711 codes decode to 16-bit linear samples
                 n_in = samples.shape[0]
                 n_out = max(int(round(n_in * sample_rate / rate0)), 0)
                 idx = (np.arange(n_out) * n_in // max(n_out, 1)).astype(np.int64)

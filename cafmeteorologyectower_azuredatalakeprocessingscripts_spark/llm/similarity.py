@@ -508,6 +508,20 @@ def kmeans_centroids(
     return cents
 
 
+def _quantizer_assigner(assign: str, coarse_probe: int, dim: int | None):
+    """The quantizer-assignment function behind ``assign`` —
+    :func:`ivf_assign` (``'expr'``, engine-exact expressions) or
+    :func:`ivf_assign_arrow` (``'arrow'``, with ``coarse_probe``) —
+    after validating the pair."""
+    if assign not in ("expr", "arrow"):
+        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
+    if coarse_probe and assign != "arrow":
+        raise ValueError("coarse_probe requires assign='arrow'")
+    if assign == "arrow":
+        return partial(ivf_assign_arrow, coarse_probe=coarse_probe)
+    return partial(ivf_assign, dim=dim)
+
+
 def ivf_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -543,10 +557,7 @@ def ivf_ann_topk(
     k ∝ n scale path. Defaults keep the engine-exact expression form
     the oracle replays.
     """
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
-    if coarse_probe and assign != "arrow":
-        raise ValueError("coarse_probe requires assign='arrow'")
+    assign_to = _quantizer_assigner(assign, coarse_probe, dim)
     cents = kmeans_centroids(
         corpus,
         n_centroids=n_centroids,
@@ -559,9 +570,6 @@ def ivf_ann_topk(
     if assign == "arrow":
         # the arrow assigner reads doubles straight out of the batch
         vcol = _as_double_sql(vcol)
-        assign_to = partial(ivf_assign_arrow, coarse_probe=coarse_probe)
-    else:
-        assign_to = partial(ivf_assign, dim=dim)
     cells = assign_to(
         corpus.select(F.col(id_col), F.expr(f"{vcol} AS __cv")),
         cents,
@@ -974,10 +982,7 @@ def semdedup(
     a neighboring cluster), so keep/drop decisions can differ near
     cluster boundaries; the dedup *rule* stays deterministic.
     """
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
-    if coarse_probe and assign != "arrow":
-        raise ValueError("coarse_probe requires assign='arrow'")
+    assign_to = _quantizer_assigner(assign, coarse_probe, dim)
     if assign == "expr":
         _warn_if_expr_assign_quadratic(corpus, n_centroids)
     cents = kmeans_centroids(
@@ -991,19 +996,7 @@ def semdedup(
     cast_corpus = corpus.select(
         F.col(id_col), F.expr(_as_double_sql(quote_ident(vec_col))).alias("__cv")
     )
-    if assign == "arrow":
-        assigned = ivf_assign_arrow(
-            cast_corpus,
-            cents,
-            n_probe=1,
-            id_col=id_col,
-            vec_col="__cv",
-            coarse_probe=coarse_probe,
-        )
-    else:
-        assigned = ivf_assign(
-            cast_corpus, cents, n_probe=1, id_col=id_col, vec_col="__cv", dim=dim
-        )
+    assigned = assign_to(cast_corpus, cents, n_probe=1, id_col=id_col, vec_col="__cv")
     cells = assigned.withColumn("__n", F.expr(_norm_sql("__cv")))
     # norm computed BEFORE the persist so both pair sides read the
     # materialized value instead of re-deriving it per branch

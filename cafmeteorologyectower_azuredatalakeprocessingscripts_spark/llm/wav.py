@@ -71,6 +71,20 @@ def is_wav(payload: bytes) -> bool:
     )
 
 
+def is_g711(payload: bytes) -> bool:
+    """Whether a RIFF/WAVE payload holds G.711 codes (``fmt `` audio
+    format 6 or 7): 8 bits per sample on disk, which :func:`decode_wav`
+    expands to 16-bit linear samples."""
+    if not is_wav(payload):
+        return False
+    data = bytes(payload)
+    try:
+        off, size = walk_chunks(data, "<", (b"fmt ", b"data"), WavUnsupported)[b"fmt "]
+    except WavUnsupported:
+        return False
+    return size >= 2 and struct.unpack_from("<H", data, off)[0] in (6, 7)
+
+
 _FLOAT_DTYPES = {32: np.dtype("<f4"), 64: np.dtype("<f8")}
 _BITS_OK = (8, 16, 24, 32)
 _FLOAT_BITS_OK = (32, 64)
@@ -201,7 +215,9 @@ def encode_wav_g711(
         raise WavUnsupported("zero channels")
     if law not in ("alaw", "ulaw"):
         raise WavUnsupported(f"law {law!r} (alaw or ulaw)")
-    body = bytes(np.asarray(codes, dtype=np.uint8).reshape(-1).tobytes())
+    if isinstance(codes, (bytes, bytearray, memoryview)):
+        codes = np.frombuffer(codes, dtype=np.uint8)
+    body = np.asarray(codes, dtype=np.uint8).reshape(-1).tobytes()
     if len(body) % channels:
         raise WavUnsupported("codes not a whole number of frames")
     return _riff(6 if law == "alaw" else 7, channels, sample_rate, 8, body)

@@ -8,7 +8,8 @@
 - One output cap: every image decoder refuses a header whose decoded
   size exceeds ``_codec.MAX_OUTPUT_BYTES``, before allocating it.
 - One audio decode: AIFF payloads get the same band energies and
-  resampling as WAV payloads of the same samples.
+  resampling as WAV payloads of the same samples, and G.711 WAVs
+  resample to 16-bit PCM.
 
 Regenerate the golden (only when the captured files are meant to change)
 with ``PYTHONPATH=. python tests/test_codec.py`` from the repo root, on a
@@ -33,6 +34,7 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm import (
     jpeg,
     png,
     tiff,
+    wav,
 )
 
 GOLDEN = Path(__file__).parent / "golden" / "tiff_lzw.json"
@@ -174,6 +176,37 @@ def test_aiff_and_wav_payloads_share_band_energies_and_resampling(spark):
     assert res[3]["meta"]["mime"] == "audio/wav"
     assert bytes(res[3]["payload"]) == bytes(res[2]["payload"])
 
+
+
+def test_encode_wav_g711_accepts_bytes_codes():
+    codes = bytes(range(0, 256, 5))
+    want = wav.encode_wav_g711(8000, 1, "ulaw", np.frombuffer(codes, dtype=np.uint8))
+    assert wav.encode_wav_g711(8000, 1, "ulaw", codes) == want
+    assert wav.encode_wav_g711(8000, 1, "ulaw", bytearray(codes)) == want
+
+
+def test_resample_audio_reencodes_g711_as_16bit_pcm(spark):
+    """G.711 codes are 8 bits on disk but decode to 16-bit linear
+    samples, so the resampled WAV is 16-bit PCM of the picked frames."""
+    from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.multimodal import (
+        resample_audio,
+    )
+
+    codes = np.arange(0, 256, 3, dtype=np.uint8)
+    payloads = {
+        i: wav.encode_wav_g711(8000, 1, law, codes) for i, law in enumerate(("ulaw", "alaw"))
+    }
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in payloads.items()], "doc_id long, payload binary"
+    )
+    res = {r["doc_id"]: r for r in resample_audio(df, 4000).collect()}
+    for i, p in payloads.items():
+        assert res[i]["meta"]["mime"] == "audio/wav"
+        assert res[i]["meta"]["n_frames"] == len(codes) // 2
+        rate, ch, bits, got = wav.decode_wav(bytes(res[i]["payload"]))
+        assert (rate, ch, bits) == (4000, 1, 16)
+        linear = wav.decode_wav(p)[3]
+        assert got[:, 0].tolist() == linear[::2, 0].tolist()
 
 if __name__ == "__main__":
     import ctypes
